@@ -37,31 +37,41 @@ final case class RunRequest(day: String, newFiles: Seq[(Long, String)],
   *  - S2 candidate-day pruning: only today + the previous tick's day (a
   *    ~1-day allowed-lateness bound, sensors.py:40-42); `scanAllDays`
   *    covers backfill (listing.py:19-28)
-  *  - S3 new-file detection: `left_anti` join of the listed files against
-  *    the downstream listing table (sensors.py:53's set difference,
-  *    relationally)
+  *  - S3 new-file detection: the day's listed names are pushed into
+  *    the listing scan as a filter, so one job returns exactly the
+  *    listed names already seen (bounded by the listing itself) and the
+  *    set difference (sensors.py:53) runs on the driver
   *  - S4 cursor state: the listing table IS the cursor. The reference
   *    (and round-1's JSON seen-set) kept "seen" in a second store written
   *    before the listing append — a crash between the two dropped files
   *    forever (ADVICE r1 #1). Deriving seen-ness from the listing itself
   *    makes detect→append atomic by construction: a crash before the
-  *    append just re-detects the same files next tick. Only the tick
-  *    clock (for the S2 day window) persists separately, and losing it
-  *    merely widens the rescan window.
+  *    append just re-detects the same files next tick. New files number
+  *    from the listing's committed `watermark/<day>` meta, which every
+  *    listing writer commits atomically with its rows as max(seq)+1; a
+  *    listing without that meta falls back to a max(seq) aggregation.
+  *    Only the tick clock (for the S2 day window) persists separately,
+  *    and losing it merely widens the rescan window.
   *  - S5 run-request fan-out: one RunRequest per day with news
   *
   * Scale: the per-day `listStatus` is driver-side (bounded by one day's
   * arrivals — the same contract as a streaming file source's discovery),
-  * but the seen-diff is a distributed anti-join against the listing
-  * table, so no all-history file set ever lives in driver memory. The
-  * steady-state recommendation remains [[StreamIngest]], where discovery
-  * and dedup both live in the streaming checkpoint.
+  * and the seen-diff returns at most that listing to the driver, so no
+  * all-history file set ever lives in driver memory. A day above
+  * `maxDriverPaths` keeps the whole diff distributed (an anti-join).
+  * Per tick on the driver path that is one Spark job: the bounded
+  * seen-scan; the high-water is metadata. The steady-state
+  * recommendation remains [[StreamIngest]], where discovery and dedup
+  * both live in the streaming checkpoint.
   */
 final class FileSensor(
     spark: SparkSession,
     ingestRoot: String,
     stateDir: String,
     seenSource: String => DataFrame, // day -> DataFrame(seq: long, filename)
+    // day -> the listing's committed next seq (its `watermark/<day>`
+    // meta), None when the listing carries no such meta
+    highWater: String => Option[Long],
     name: String = "ingest",
     suffix: String = ".txt",
     // Above this many files in one day's scan, detection switches to the
@@ -102,10 +112,10 @@ final class FileSensor(
     else fs.listStatus(new Path(ingestRoot)).map(_.getPath.getName)
       .filter(_.startsWith("day=")).map(_.stripPrefix("day=")).sorted.toSeq
 
-  /** S1+S3 for one day: list the partition dir and anti-join against the
+  /** S1+S3 for one day: list the partition dir and diff it against the
     * listing table; genuinely-new names come back numbered from the
-    * prior max seq (arrival order made explicit). Shared by the tick
-    * path and the graph-driven L1 backfill (listing's Asset compute). */
+    * listing's high-water (arrival order made explicit). Shared by the
+    * tick path and the graph-driven L1 backfill (listing's Asset compute). */
   def detect(day: String): Option[RunRequest] = {
     import spark.implicits._
     val (listed, overflow) = listDayBounded(day, maxDriverPaths)
@@ -128,8 +138,7 @@ final class FileSensor(
         val probe = news.as[String].limit(maxDriverPaths + 1).collect()
         if (probe.isEmpty) None
         else {
-          val start = prior.agg(coalesce(max($"seq") + 1, lit(0L)))
-            .as[Long].head()
+          val start = nextSeq(day, prior)
           if (probe.length <= maxDriverPaths) {
             val numbered = probe.sorted.zipWithIndex
               .map { case (f, i) => (start + i, f) }
@@ -147,20 +156,28 @@ final class FileSensor(
           }
         }
       } else {
-        // S3 as a distributed anti-join; only genuinely-new names return
-        // to the driver (bounded by this tick's arrivals)
-        val news = listed.toDF("filename")
-          .join(prior.select($"filename"), Seq("filename"), "left_anti")
-          .as[String].collect().sorted
+        // S3 in one job: the listed names filter the listing scan, so
+        // only already-seen listed names return to the driver
+        val seen = prior.select($"filename").where($"filename".isin(listed: _*))
+          .as[String].collect().toSet
+        val news = listed.filterNot(seen).sorted
         if (news.isEmpty) None
         else {
-          val start = prior.agg(coalesce(max($"seq") + 1, lit(0L)))
-            .as[Long].head()
+          val start = nextSeq(day, prior)
           val numbered = news.zipWithIndex.map { case (f, i) => (start + i, f) }
           Some(RunRequest(day, numbered.toSeq))
         }
       }
     }
+  }
+
+  /** The next arrival seq for `day`: the listing's committed high-water
+    * (metadata, no job), or — for a listing written without watermark
+    * meta — a max(seq) aggregation over it. */
+  private def nextSeq(day: String, prior: DataFrame): Long = {
+    import spark.implicits._
+    highWater(day).getOrElse(
+      prior.agg(coalesce(max($"seq") + 1, lit(0L))).as[Long].head())
   }
 
   // tick time awaiting commitClock() — captured at scan START so files

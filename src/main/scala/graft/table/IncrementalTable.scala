@@ -5,7 +5,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{lit, when}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -1333,7 +1333,11 @@ final class IncrementalTable(spark: SparkSession, val root: String,
   /** The scan itself, under PHYSICAL column names when a `mapping` is
     * set (files always carry physical names; [[filesDf]]'s final
     * projection re-labels). The empty-set frame is physical-named too,
-    * so the relabel projection resolves uniformly. */
+    * so the relabel projection resolves uniformly. Every reader of
+    * committed data files (read, readAt, changes, readCommit, the graft
+    * source and the streaming source) plans through here, and the plan
+    * comes from the log alone ([[logScan]]): building a read never globs
+    * paths, lists directories or launches a listing job. */
   private def rawFilesDf(files: Seq[String], stored: Option[StructType],
       mapping: Map[String, String], keepRowId: Boolean = false): DataFrame = {
     // row tracking (X87): the physical `_graft_rid` column joins the
@@ -1351,60 +1355,32 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           .add("_graft_pos", org.apache.spark.sql.types.LongType))
     } else {
       // Shallow clones (X78) reference files under FOREIGN roots by
-      // absolute path; `basePath` must be an ancestor of every input
-      // file, so the scan groups files by their table root (the path
-      // minus trailing `k=v` dirs) and unions one reader per root —
-      // partition-dir values overlay correctly in each group. The
-      // common case (no clones) stays one reader under this root.
+      // absolute path, so the scan groups files by their table root
+      // (the path minus trailing `k=v` dirs) and unions one relation
+      // per root — each file's partition dirs parse below its own
+      // root. The common case (no clones) stays one relation under
+      // this root.
       phys.foreach(s => require(
         !s.fieldNames.contains("_graft_path") && !s.fieldNames.contains("_graft_pos"),
         "'_graft_path'/'_graft_pos' are reserved column names"))
       // Spec evolution (X81): files written under different partition
-      // layouts additionally group by their own dir-token SHAPE —
-      // Spark's partition discovery refuses mixed structures in one
-      // reader ("conflicting partition column names"), and per-shape
-      // readers overlay exactly the identity columns that file
+      // layouts additionally group by their own dir-token SHAPE — each
+      // group's relation carries exactly the identity columns that file
       // generation dir-encoded (its data files carry the rest). The
       // shape is the ORDERED key sequence, not the key set: a reorder
       // evolution ("hour=/day=" -> "day=/hour=") yields the same set
-      // but still conflicts inside one reader. One shape per table on
-      // the never-evolved path: same single group.
+      // but a different partition schema. One shape per table on the
+      // never-evolved path: same single group.
       val groups = files.groupBy { f =>
         val base = if (f.startsWith("/")) IncrementalTable.foreignBase(f) else root
-        val shape = f.split("/").iterator.flatMap { s =>
-          val i = s.indexOf('=')
-          if (i > 0) Some(s.substring(0, i)) else None
-        }.mkString("/")
-        (base, shape)
+        (base, dirTokens(base, f).map(_._1).mkString("/"))
       }.toSeq.sortBy(_._1)
-      def readGroup(base: String, fs: Seq[String]): DataFrame = {
-        // The committed schema makes partition-column type inference
-        // moot (string-typed partition values for reference layout
-        // parity, delta_io.py:108-110) — no session-wide conf mutation
-        // needed. The save/restore below guards the no-schema fallback
-        // (logs written before schemas were recorded) and multi-group
-        // reads (hidden-partition dir tokens must infer identically in
-        // every group for the union to align).
-        val reader = spark.read.option("basePath", base)
-        phys.foreach(reader.schema)
-        if (stored.nonEmpty && groups.size == 1)
-          reader.parquet(fs.map(f => new Path(rootPath, f).toString): _*)
-        else {
-          val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-          val old = spark.conf.get(key)
-          spark.conf.set(key, "false")
-          // schema resolves eagerly inside this call, restore is safe after
-          try reader.parquet(fs.map(f => new Path(rootPath, f).toString): _*)
-          finally spark.conf.set(key, old)
-        }
-      }
       // `_metadata` does not resolve above a Union, so the file path /
       // row index every DML and DV consumer needs are materialized as
       // regular columns PER GROUP (Catalyst prunes them out of the
       // scan whenever nothing upstream selects them)
       groups.map { case ((base, _), fs) =>
-        val g0 = readGroup(base, fs)
-        val g = g0.withColumn("_graft_path",
+        val g = logScan(base, fs, phys).withColumn("_graft_path",
             org.apache.spark.sql.functions.col("_metadata.file_path"))
           .withColumn("_graft_pos",
             org.apache.spark.sql.functions.col("_metadata.row_index"))
@@ -1418,6 +1394,83 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           .map(org.apache.spark.sql.functions.col): _*))
       }.reduce(_.unionByName(_))
     }
+  }
+
+  /** Hive `k=v` dir tokens of file `f` below its scan `base`, in path
+    * order — the partition directories a relation over `base` sees. */
+  private def dirTokens(base: String, f: String): Seq[(String, String)] = {
+    val rel = if (f.startsWith("/")) f.stripPrefix(base).stripPrefix("/") else f
+    rel.split("/").toSeq.dropRight(1).flatMap { s =>
+      val i = s.indexOf('=')
+      if (i > 0) Some(s.substring(0, i) -> s.substring(i + 1)) else None
+    }
+  }
+
+  // Committed data files are write-once (names are write-unique and
+  // never rewritten in place), so a FileStatus seen once stays valid
+  // for the handle's life. Filled from the staged-file walk when a
+  // write promotes; any other file (another handle's commit, a
+  // streaming executor's write, a clone's foreign file) is stat'ed the
+  // first time a read names it — a missing file fails that read loudly.
+  private val fileStatuses =
+    new java.util.concurrent.ConcurrentHashMap[String, FileStatus]()
+
+  private def statusOf(f: String): FileStatus = {
+    val hit = fileStatuses.get(f)
+    if (hit != null) hit
+    else {
+      val st = fs.getFileStatus(new Path(rootPath, f))
+      fileStatuses.put(f, st)
+      st
+    }
+  }
+
+  /** One scan group as a relation planned from the commit log: a
+    * [[LogFileIndex]] over the committed files (no glob, no listing,
+    * no partition discovery) under a parquet [[HadoopFsRelation]].
+    * Partition values are typed by the committed schema (`phys`); a dir
+    * token the schema does not name (a derived transform column, or any
+    * column of a log written before schemas were recorded) reads as a
+    * string, identically in every group, so shape-group unions align.
+    * Data and partition schemas split as `DataSource` splits a
+    * user-specified schema: a partition column that is also a data
+    * column (word_length) takes its value from the directory, and the
+    * data schema reads nullable. */
+  private def logScan(base: String, files: Seq[String],
+      phys: Option[StructType]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningUtils}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.graftshim.DmlShim
+    import org.apache.spark.sql.types.{StringType, StructField}
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+    def same(a: String, b: String) = if (caseSensitive) a == b else a.equalsIgnoreCase(b)
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    val partSchema = StructType(dirTokens(base, files.head).map { case (k, _) =>
+      phys.flatMap(_.fields.find(f => same(f.name, k)))
+        .getOrElse(StructField(k, StringType))
+    })
+    val statuses = files.map(statusOf)
+    val partitions = files.zip(statuses).groupBy { case (f, _) => parentDir(f) }
+      .toSeq.sortBy(_._1).map { case (_, members) =>
+        val values = dirTokens(base, members.head._1).zip(partSchema.fields).map {
+          case ((_, raw), field) =>
+            PartitioningUtils.castPartValueToDesiredType(field.dataType, raw, zone)
+        }
+        (org.apache.spark.sql.catalyst.InternalRow.fromSeq(values), members.map(_._2))
+      }
+    val format = new ParquetFileFormat
+    val dataSchema = DmlShim.asNullable(phys match {
+      case Some(s) =>
+        StructType(s.fields.filterNot(f => partSchema.fields.exists(p => same(p.name, f.name))))
+      case None => // a log written before schemas were recorded
+        format.inferSchema(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+          Map.empty, statuses).getOrElse(new StructType())
+    })
+    val basePath = fs.makeQualified(if (base == root) rootPath else new Path(base))
+    val relation = HadoopFsRelation(
+      new LogFileIndex(Seq(basePath), partSchema, partitions),
+      partSchema, dataSchema, None, format, Map.empty)(spark)
+    DmlShim.ofRows(spark, LogicalRelation(relation, isStreaming = false))
   }
 
   // ---------------------------------------------------------------- write
@@ -3947,19 +4000,10 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       .map(_.toDouble).getOrElse(0.03)
     import org.apache.spark.sql.functions.{col, explode, expr, lit, map => mapFn, regexp_replace, when}
     import org.apache.spark.sql.graftshim.DmlShim
-    val physOnly = org.apache.spark.sql.types.StructType(
-      physicalSchema(stored, mapping).fields
-        .filter(f => present.exists(_._2 == f.name)))
-    val groups = live.groupBy(f =>
-      if (f.startsWith("/")) IncrementalTable.foreignBase(f) else root)
     val rootDec = rootPath.toUri.getPath.stripSuffix("/") + "/"
-    val scans = groups.toSeq.sortBy(_._1).map { case (_, fs) =>
-      spark.read.schema(physOnly)
-        .parquet(fs.map(f => new Path(rootPath, f).toString): _*)
-        .select(col("_metadata.file_path").as("_graft_bp") +:
-          present.map { case (_, p) => col(p) }: _*)
-    }
-    val df0 = scans.reduce(_.unionByName(_))
+    val df0 = rawFilesDf(live, Some(stored), mapping)
+      .select(col("_graft_path").as("_graft_bp") +:
+        present.map { case (_, p) => col(p) }: _*)
     val dec = expr("url_decode(" +
       "regexp_replace(regexp_replace(_graft_bp, '^[a-zA-Z][a-zA-Z0-9+.-]*:/+', '/')" +
       ", '\\\\+', '%2B'))")
@@ -5088,7 +5132,10 @@ final class IncrementalTable(spark: SparkSession, val root: String,
        else writer).parquet(stage.toString)
     }
     val stageMs = (System.nanoTime() - tStage0) / 1000000
-    val staged = listParquet(fs, stage).map(p => relativize(stage, p))
+    val stagedFiles = listParquet(fs, stage).map { case (p, len, mtime) =>
+      (relativize(stage, p), len, mtime)
+    }
+    val staged = stagedFiles.map(_._1)
     // Writes never change the layout (X76): a data write whose layout
     // differs from the committed one would interleave two hive
     // directory shapes under one root WITHOUT the bookkeeping that
@@ -5389,12 +5436,16 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       //    A crash here leaves orphans that no commit references —
       //    invisible to readers, reclaimed by vacuum().
       val tPromote0 = System.nanoTime()
-      val added = staged.map { rel =>
+      val added = stagedFiles.map { case (rel, len, mtime) =>
         val from = new Path(stage, rel)
         val to = new Path(rootPath, rel)
         fs.mkdirs(to.getParent)
         if (!fs.rename(from, to))
           throw new java.io.IOException(s"rename failed: $from -> $to")
+        // the staged walk already knows the promoted file's status
+        // (rename keeps size and mtime): reads of it never stat it
+        fileStatuses.put(rel, new FileStatus(len, false, 1,
+          fs.getDefaultBlockSize(to), mtime, fs.makeQualified(to)))
         rel
       }
       IncrementalTable.gcStaging(fs, stage) // async: never read again
@@ -6543,7 +6594,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     val allDF: org.apache.spark.sql.DataFrame =
       if (topDirs.size <= listThreshold)
         listParquet(fs, rootPath)
-          .map(p => relativize(rootPath, p))
+          .map(f => relativize(rootPath, f._1))
           .filterNot(_.startsWith("_")).toDF("file")
       else {
         val sconf = new graft.parquet.RowParquet.SerializableConf(hadoopConf(spark))
@@ -7349,13 +7400,16 @@ object IncrementalTable {
       if (i > 0) Some(s.substring(0, i) -> s.substring(i + 1)) else None
     }.toMap
 
-  private def listParquet(fs: FileSystem, dir: Path): Seq[String] = {
+  /** Every `.parquet` file under `dir` as (path, length, modification
+    * time), sorted by path. */
+  private def listParquet(fs: FileSystem, dir: Path): Seq[(String, Long, Long)] = {
     // Local-fs fast path (round-14 profiling): Hadoop's recursive
     // listFiles materializes each entry's PERMISSIONS, and without
     // native libhadoop that is one forked `ls -ld` PER FILE
     // (DeprecatedRawLocalFileStatus.loadPermissionInfoByNonNativeIO) —
     // the per-commit staging list paid a process fork per staged file.
-    // A java.nio walk reads the same names with plain syscalls; sorted
+    // A java.nio walk reads the same entries with plain syscalls (one
+    // attribute read per entry gives the type, size and mtime); sorted
     // for a deterministic add order. Non-local stores keep the Hadoop
     // iterator (their FileStatus carries permissions inline).
     if ("file" == fs.getUri.getScheme) {
@@ -7364,26 +7418,30 @@ object IncrementalTable {
       val walk = java.nio.file.Files.walk(root)
       try {
         val it = walk.iterator()
-        val out = Seq.newBuilder[String]
+        val out = Seq.newBuilder[(String, Long, Long)]
         while (it.hasNext) {
           val p = it.next()
-          if (p.getFileName.toString.endsWith(".parquet") &&
-              java.nio.file.Files.isRegularFile(p))
-            out += p.toString
+          if (p.getFileName.toString.endsWith(".parquet")) {
+            val a = java.nio.file.Files.readAttributes(p,
+              classOf[java.nio.file.attribute.BasicFileAttributes])
+            if (a.isRegularFile)
+              out += ((p.toString, a.size, a.lastModifiedTime.toMillis))
+          }
         }
-        out.result().sorted
+        out.result().sortBy(_._1)
       } finally walk.close()
     } else {
       if (!fs.exists(dir)) return Seq.empty
-      val out = Seq.newBuilder[String]
+      val out = Seq.newBuilder[(String, Long, Long)]
       val it = fs.listFiles(dir, true)
       while (it.hasNext) {
         val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) out += f.getPath.toString
+        if (f.getPath.getName.endsWith(".parquet"))
+          out += ((f.getPath.toString, f.getLen, f.getModificationTime))
       }
       // sorted like the local-fs fast path above, so a commit's add
       // order is deterministic and store-independent (ADVICE r14)
-      out.result().sorted
+      out.result().sortBy(_._1)
     }
   }
 

@@ -7,7 +7,9 @@ import org.apache.spark.sql.classic
   * catalyst Expression as a public Column, and materialize a resolved
   * LogicalPlan as a DataFrame — the two conversions the SQL DML
   * commands need and Spark 4 keeps `private[sql]`
-  * (`classic.ExpressionUtils.column` / `classic.Dataset.ofRows`).
+  * (`classic.ExpressionUtils.column` / `classic.Dataset.ofRows`). The
+  * table read path uses `ofRows` too, for its log-backed scan relation,
+  * with `asNullable` (`private[spark]`) for that relation's data schema.
   *
   * Why this is acceptable internal surface (and the only one left —
   * the V1 streaming shim was deleted with the DSv2 migration):
@@ -29,4 +31,10 @@ object DmlShim {
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `schema` with every field, element and value nullable — what
+    * `DataSource` makes of a file source's data schema, so a file that
+    * holds nulls under a NOT NULL declaration still reads as nulls. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    schema.asNullable
 }

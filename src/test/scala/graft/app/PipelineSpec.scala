@@ -5,13 +5,13 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 
-/** End-to-end pipeline parity on a copy of the reference's fixture corpus
-  * (/root/reference/files_to_ingest/: 51 files day=2024-03-26, 2 files
+/** End-to-end pipeline parity on a copy of the vendored fixture corpus
+  * (test resource `files_to_ingest/`: 51 files day=2024-03-26, 2 files
   * day=2024-03-27, 4 seq-prefixed files day=2024-03-29; FIXTURES.md §A). */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private val fixtureSrc = Paths.get("/root/reference/files_to_ingest")
+  private val fixtureSrc = SparkSpec.ingestFixture
 
   private def copyFixture(dst: Path, days: Set[String] = Set.empty,
       limitPerDay: Int = Int.MaxValue): Unit = {

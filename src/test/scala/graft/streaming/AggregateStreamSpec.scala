@@ -198,7 +198,7 @@ class AggregateStreamSpec extends SparkSpec {
       aggs = Seq(IncAgg.countAll("n_words")),
       partitionBy = Seq("year", "month", "day"), name = "processed")
     def copyDay(day: String, limit: Int): Unit = {
-      val src = Paths.get("/root/reference/files_to_ingest").resolve(s"day=$day")
+      val src = graft.SparkSpec.ingestFixture.resolve(s"day=$day")
       val d = ingest.resolve(s"day=$day"); Files.createDirectories(d)
       Files.list(src).iterator().asScala.filter(_.toString.endsWith(".txt"))
         .toSeq.sortBy(_.toString).take(limit)

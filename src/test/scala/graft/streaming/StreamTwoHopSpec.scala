@@ -17,7 +17,7 @@ import graft.table.IncrementalTable
 class StreamTwoHopSpec extends SparkSpec {
   import spark.implicits._
 
-  private val fixtureSrc = Paths.get("/root/reference/files_to_ingest")
+  private val fixtureSrc = SparkSpec.ingestFixture
 
   private def copyDay(dst: Path, day: String, limit: Int): Int = {
     val srcDir = fixtureSrc.resolve(s"day=$day")

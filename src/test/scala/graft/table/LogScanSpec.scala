@@ -1,0 +1,51 @@
+package graft.table
+
+import graft.SparkSpec
+
+/** Reads plan from the commit log: building a read over many committed
+  * files starts no Spark job (no listing, no glob), returns the same
+  * rows, and a committed file that went missing still fails the read. */
+class LogScanSpec extends SparkSpec {
+  import spark.implicits._
+
+  // above Spark's 32-path threshold for a parallel listing job
+  private val nFiles = 40
+
+  /** A table whose one partition holds `nFiles` files; returns the
+    * writing handle (it knows every file's status), its root and rows. */
+  private def manyFileTable(name: String): (IncrementalTable, String, Set[(Long, String)]) = {
+    val root = tmpDir("logscan") + "/" + name
+    val rows = (0L until nFiles * 3L).map(i => (i, s"w$i"))
+    val t = IncrementalTable(spark, root)
+    t.append(rows.toDF("id", "word").repartition(nFiles), partitionBy = Seq("day"),
+      partitionValues = Map("day" -> "2024-03-26"))
+    (t, root, rows.toSet)
+  }
+
+  test("building a read over more than 32 live files starts no Spark job") {
+    val (_, root, rows) = manyFileTable("many")
+    val t = IncrementalTable(spark, root) // fresh handle: nothing cached
+    assert(t.liveFiles(Map("day" -> "2024-03-26")).size == nFiles)
+    val (df, jobs) = jobsDuring(t.read(Map("day" -> "2024-03-26")))
+    assert(jobs == 0, s"building the read ran $jobs Spark jobs")
+    assert(df.select($"id", $"word").as[(Long, String)].collect().toSet == rows)
+    assert(df.select($"day").distinct().as[String].collect().toSeq == Seq("2024-03-26"))
+    // a partition predicate prunes through the log-backed index
+    assert(t.read().where($"day" === "2024-03-27").count() == 0)
+    assert(t.read().where($"day" === "2024-03-26").count() == rows.size)
+  }
+
+  test("a read whose committed file was deleted fails loudly") {
+    val (writer, root, _) = manyFileTable("missing")
+    val victim = writer.liveFiles().head
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, victim))
+    // a fresh handle stats the file while planning
+    intercept[java.io.FileNotFoundException](IncrementalTable(spark, root).read().count())
+    // a handle that cached its status fails in the scan
+    val e = intercept[Exception](writer.read().count())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]) ||
+      e.getMessage.contains("FILE_NOT_EXIST") || e.getMessage.contains("does not exist"),
+      s"unexpected failure: $e")
+  }
+}

@@ -1,0 +1,173 @@
+#!/usr/bin/env python3
+"""Paired A/B of two revisions on one perfbench workload.
+
+    python3 tools/ab_pairs.py --base HEAD~1 --change HEAD --workload tick \\
+        --pairs 10 --first-seed 101 [--seconds 12] [--trace 0] [--dir DIR]
+
+Exports each revision into its own directory under DIR (`git archive`, so
+each side builds into its own `target/` and `.bench_build/`, the
+repository's working tree is left as it is and no worktree is registered
+in its `.git`), then runs
+`python3 perfbench/run.py` alternately in the two: pair i uses seed
+first-seed + i on both sides, and the side that runs first alternates from
+pair to pair (ABBA), so drift in the host's speed falls on both sides
+alike. `--change WORKTREE` benchmarks the current working tree: tracked
+files as they are on disk plus staged new files (`git stash create`).
+
+Before the pairs, each side runs once untimed (seed 0) so that the sbt build
+and a cold page cache land outside the measured runs (`--no-warmup` skips
+it).
+
+For every metric of the runs' last lines it prints each side's median and
+quartiles (statistics.quantiles, n=4), the change's win fraction over the
+pairs (the direction comes from BENCHMARK.json), the ratio of the medians
+with both bases, and whether the difference of the medians exceeds the
+base's interquartile range. All runs and the summary go to
+DIR/ab_pairs-<workload>.json. The benchmark itself (perfbench/) is only
+run, never edited.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import tempfile
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def git(*args, **kw):
+    return subprocess.run(["git", "-C", ROOT, *args], check=True,
+                          stdout=subprocess.PIPE, text=True, **kw).stdout.strip()
+
+
+def resolve(rev):
+    if rev == "WORKTREE":
+        # a commit object holding the index and the tracked working files;
+        # empty output means there is nothing uncommitted
+        return git("stash", "create") or git("rev-parse", "HEAD")
+    return git("rev-parse", "--verify", f"{rev}^{{commit}}")
+
+
+def export(commit, dest):
+    if os.path.exists(dest):
+        sys.exit(f"ab_pairs: {dest} exists; pass an empty --dir")
+    os.makedirs(dest)
+    archive = subprocess.Popen(["git", "-C", ROOT, "archive", commit],
+                               stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", dest], stdin=archive.stdout, check=True)
+    if archive.wait() != 0:
+        sys.exit(f"ab_pairs: git archive {commit} failed")
+
+
+def run(side, checkout, workload, seed, seconds, trace):
+    t0 = time.time()
+    proc = subprocess.run(
+        [sys.executable, os.path.join("perfbench", "run.py"), "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
+        cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+    lines = proc.stdout.strip().splitlines()
+    try:
+        res = json.loads(lines[-1]) if proc.returncode == 0 and lines else {}
+    except json.JSONDecodeError:
+        res = {}
+    return {"side": side, "seed": seed, "exit": proc.returncode,
+            "wall_s": round(time.time() - t0, 1), **res}
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    return tuple(statistics.quantiles(xs, n=4))
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--base", required=True, help="revision of the base side")
+    ap.add_argument("--change", required=True, help="revision of the change side, or WORKTREE")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--first-seed", type=int, required=True)
+    ap.add_argument("--seconds", type=float)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--dir", help="empty directory for the two checkouts (default: a temp dir)")
+    ap.add_argument("--no-warmup", action="store_true")
+    args = ap.parse_args()
+
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    seconds = args.seconds or spec["run_seconds"]
+    better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
+
+    work = args.dir or tempfile.mkdtemp(prefix="ab_pairs-")
+    os.makedirs(work, exist_ok=True)
+    revs = {"base": resolve(args.base), "change": resolve(args.change)}
+    dirs = {side: os.path.join(work, side) for side in revs}
+    for side, commit in revs.items():
+        export(commit, dirs[side])
+        print(f"{side}: {args.base if side == 'base' else args.change} = {commit} -> {dirs[side]}",
+              flush=True)
+
+    if not args.no_warmup:
+        for side in ("base", "change"):
+            r = run(side, dirs[side], args.workload, 0, seconds, args.trace)
+            print(f"warm-up {side}: exit {r['exit']} wall {r['wall_s']}s", flush=True)
+            if r["exit"] != 0:
+                sys.exit(f"ab_pairs: the {side} side does not run; see "
+                         f"python3 perfbench/run.py in {dirs[side]}")
+
+    runs = []
+    for i in range(args.pairs):
+        seed = args.first_seed + i
+        order = ("base", "change") if i % 2 == 0 else ("change", "base")
+        for side in order:
+            r = run(side, dirs[side], args.workload, seed, seconds, args.trace)
+            runs.append(r)
+            # traced runs carry ~45 metrics: those show in the summary only
+            shown = {k: round(v["value"], 4) for k, v in r.get("metrics", {}).items()
+                     } if args.trace == 0 else ""
+            print(f"pair {i + 1} seed {seed} {side:6s}: exit {r['exit']} wall {r['wall_s']}s "
+                  f"correct {r.get('correct')} failed {r.get('failed')} {shown}", flush=True)
+
+    def values(side, name):
+        return {r["seed"]: r["metrics"][name]["value"] for r in runs
+                if r["side"] == side and name in r.get("metrics", {})}
+
+    names = sorted({k for r in runs for k in r.get("metrics", {})})
+    summary = {}
+    print(f"\n{args.workload}: {args.pairs} pairs, seeds {args.first_seed}-"
+          f"{args.first_seed + args.pairs - 1}, {seconds:g} s runs, trace {args.trace}")
+    print(f"{'metric':32s} {'base median [q1, q3]':28s} {'change median [q1, q3]':28s} "
+          f"{'ratio':>7s} {'wins':>6s}  diff>IQR(base)")
+    for name in names:
+        b, c = values("base", name), values("change", name)
+        paired = [s for s in b if s in c]
+        if not paired:
+            continue
+        bq, cq = quartiles(sorted(b.values())), quartiles(sorted(c.values()))
+        lower = better.get(name, "lower") == "lower"
+        wins = sum(1 for s in paired if (c[s] < b[s] if lower else c[s] > b[s]))
+        ratio = cq[1] / bq[1] if bq[1] else float("nan")
+        resolved = abs(cq[1] - bq[1]) > (bq[2] - bq[0])
+        summary[name] = {"base": {"median": bq[1], "q1": bq[0], "q3": bq[2], "n": len(b)},
+                         "change": {"median": cq[1], "q1": cq[0], "q3": cq[2], "n": len(c)},
+                         "ratio": ratio, "wins": wins, "pairs": len(paired),
+                         "better": "lower" if lower else "higher",
+                         "diff_exceeds_base_iqr": resolved}
+        bs = f"{bq[1]:.4g} [{bq[0]:.4g}, {bq[2]:.4g}]"
+        cs = f"{cq[1]:.4g} [{cq[0]:.4g}, {cq[2]:.4g}]"
+        print(f"{name:32s} {bs:28s} {cs:28s} {ratio:7.3f} {wins:3d}/{len(paired):<2d}  "
+              f"{'yes' if resolved else 'no'}  ({cq[1]:.4g} / {bq[1]:.4g})")
+    failed = [r for r in runs if r["exit"] != 0 or not r.get("correct")]
+    print(f"runs not correct or failed: {len(failed)} of {len(runs)}")
+    out = os.path.join(work, f"ab_pairs-{args.workload}.json")
+    with open(out, "w") as f:
+        json.dump({"revisions": revs, "args": vars(args), "seconds": seconds,
+                   "runs": runs, "summary": summary}, f, indent=1)
+    print(f"wrote {out}")
+
+
+if __name__ == "__main__":
+    main()
