@@ -27,39 +27,25 @@ object Bench {
   /** The queries a run times, sorted. `SPARK_GRAFT_BENCH_ONLY=q27_x,q54_y`
     * (a profiling hook) restricts the run to exactly those names — a
     * prefix never widens the set (`q4` is not `q40`..`q49`), and a name
-    * that is no query fails the run instead of timing nothing. */
+    * that is no query fails the run instead of timing nothing. Verify,
+    * PlanDump and QueryProfile select their comma-separated name lists
+    * through this same rule. */
   def selectQueries(only: Option[String], all: Seq[String]): Seq[String] =
     only match {
       case Some(list) =>
         val want = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
         val unknown = want -- all
         require(unknown.isEmpty,
-          s"SPARK_GRAFT_BENCH_ONLY names no query: ${unknown.toSeq.sorted.mkString(", ")}")
+          s"no query named ${unknown.toSeq.sorted.mkString(", ")}")
         all.filter(want).sorted
       case None => all.sorted
     }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCores(4)
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fork-free chmod on the local fs (no native libhadoop in this
-      // environment, so stock Hadoop shells out per created dir/file) —
-      // see graft.fs.NioLocalFileSystem; clusters with libhadoop or
-      // non-local storage simply don't set this
-      .config("spark.hadoop.fs.file.impl", "graft.fs.NioLocalFileSystem")
-      // same fix for the FileContext API (streaming checkpoint logs and
-      // state stores resolve scheme file through AbstractFileSystem,
-      // which never consults fs.file.impl) - see graft.fs.NioLocalFs
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.fs.NioLocalFs")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
 
     // per-query shuffle-write bytes + peak task execution memory, for
     // the BASELINE.md living baseline (runs are sequential, so simple

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-dump main: write `.explain("formatted")` for each named query
@@ -19,18 +18,9 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("plans/r14")
     val suffix = args.lift(2).getOrElse("before")
-    val only = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = Bench.selectQueries(args.lift(3), SparkEntry.queries.keys.toSeq)
+    val spark = GraftSession(4, "ERROR")
     Files.createDirectories(Paths.get(outDir))
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
     names.foreach { n =>
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)

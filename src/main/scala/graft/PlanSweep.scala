@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: analyze every SparkEntry query's PHYSICAL plan at
   * the given SF dir and flag scale-suspicious shapes —
   *
@@ -21,14 +19,7 @@ import org.apache.spark.sql.SparkSession
 object PlanSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(4, "ERROR")
 
     var flagged = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB profile of one query (guide §1): multi-commit pipeline
   * queries spend their time across MANY Spark jobs (stage writes,
@@ -17,26 +16,12 @@ import org.apache.spark.sql.SparkSession
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
-    val qnames = args.headOption.getOrElse(
-      sys.error("usage: QueryProfile <q1,q2,...> [sfDir]"))
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val qnames = Bench.selectQueries(Some(args.headOption.getOrElse(
+      sys.error("usage: QueryProfile <q1,q2,...> [sfDir]"))),
+      SparkEntry.queries.keys.toSeq)
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fork-free local-fs chmod (see graft.fs.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.fs.NioLocalFileSystem")
-      // same fix for the FileContext API (streaming checkpoint logs and
-      // state stores resolve scheme file through AbstractFileSystem,
-      // which never consults fs.file.impl) - see graft.fs.NioLocalFs
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.fs.NioLocalFs")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.envCores(32), "ERROR")
 
     case class Job(id: Int, start: Long, var end: Long = 0L,
       var site: String = "", var tasks: Int = 0, var stages: Int = 0)

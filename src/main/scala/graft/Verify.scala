@@ -1,32 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg: comma-separated name filter for local iteration
-    val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fork-free local-fs chmod (see graft.fs.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.fs.NioLocalFileSystem")
-      // same fix for the FileContext API (streaming checkpoint logs and
-      // state stores resolve scheme file through AbstractFileSystem,
-      // which never consults fs.file.impl) - see graft.fs.NioLocalFs
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.fs.NioLocalFs")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional 3rd arg: comma-separated exact names for local iteration
+    val names = Bench.selectQueries(args.lift(2), SparkEntry.queries.keys.toSeq)
+    val spark = GraftSession(GraftSession.envCores(4))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -231,7 +231,7 @@ final class AggregateStream(
     * fail on a zero-column frame; the first data commit must seed it
     * like a brand-new table. */
   private def viewInitialized: Boolean =
-    down.exists && down.commits().exists(_.schemaJson.nonEmpty)
+    down.schemaAt().isDefined
 
   private def aggOf(raw: DataFrame): DataFrame =
     prepare(raw).groupBy(guardedKeys: _*)

@@ -182,7 +182,7 @@ final class JoinStream(
     // null-extension needs the OTHER side's schema — rows buffer
     // upstream until the tables whose schema is needed have COMMITTED
     // one (bare existence isn't enough: a meta-only log has none)
-    def schemaReady(t: IncrementalTable) = t.commits().exists(_.schemaJson.nonEmpty)
+    def schemaReady(t: IncrementalTable) = t.schemaAt().isDefined
     if (outer && !schemaReady(upRight)) return 0
     if (full && (!schemaReady(upLeft) || !schemaReady(upRight))) return 0
 

@@ -296,7 +296,7 @@ object MaterializedView {
     require(view.latestMeta(SourceKey).isEmpty &&
         view.latestMeta(LeftKey).isEmpty,
       s"${view.root} is already a materialized view — drop it first")
-    require(!view.exists || view.commits().forall(_.schemaJson.isEmpty),
+    require(view.schemaAt().isEmpty,
       s"${view.root} already holds data commits — a materialized view " +
         "target must be a new (or data-empty) table; refusing to " +
         "silently convert it")

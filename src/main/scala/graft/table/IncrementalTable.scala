@@ -296,39 +296,53 @@ final class IncrementalTable(spark: SparkSession, val root: String,
 
   // ------------------------------------------------------------------ log
 
-  // Replayed-snapshot cache: one append used to cost ~5 full log replays
+  // Head snapshot cache: one append used to cost ~5 full log replays
   // (latestVersion + hasBatch + liveFiles + write + checkpoint each
   // re-listed and re-parsed the log — hundreds of GETs per write on an
   // object store). Valid under the table's single-writer contract; an
   // external writer requires refresh().
-  @volatile private var commitCache: Seq[Commit] = null
+  @volatile private var head: Snapshot = null
+
+  // the last as-of snapshot folded for a time-travel read, with the
+  // head it was folded under (one as-of read asks several questions)
+  @volatile private var pastCache: (Snapshot, Snapshot) = (null, null)
 
   /** Drop the cached log snapshot (needed only if another process wrote
     * this table after we read it). */
-  def refresh(): Unit = commitCache = null
+  def refresh(): Unit = head = null
 
-  /** All commits in version order (from latest checkpoint forward). */
-  def commits(): Seq[Commit] = {
-    val cached = commitCache
+  /** The snapshot at the log head, replayed from the latest checkpoint
+    * on first use and extended in place by every publish. */
+  private[table] def snapshot: Snapshot = {
+    val cached = head
     if (cached != null) return cached
-    val replayed = replayLog()
-    commitCache = replayed
+    val replayed = Snapshot.fold(replayLog())
+    head = replayed
     replayed
   }
 
+  /** All commits in version order (from latest checkpoint forward). */
+  def commits(): Seq[Commit] = snapshot.log
+
   private def replayLog(): Seq[Commit] = {
-    if (!fs.exists(logPath)) return Seq.empty
-    val files = fs.listStatus(logPath).map(_.getPath.getName)
-      .filter(_.endsWith(".json")).sorted
-    val (ckpts, deltas) = files.partition(_.endsWith(".checkpoint.json"))
-    val fromVersion = ckpts.lastOption.map(_.takeWhile(_.isDigit).toLong).getOrElse(-1L)
-    val relevant = ckpts.lastOption.toSeq ++
-      deltas.filter(_.takeWhile(_.isDigit).toLong > fromVersion)
-    relevant.sorted.map { name =>
-      val in = fs.open(new Path(logPath, name))
-      try Serialization.read[Commit](new java.io.InputStreamReader(in, "UTF-8"))
-      finally in.close()
-    }.toSeq
+    val (ckpts, deltas) = logRecords().partition(_.endsWith(".checkpoint.json"))
+    val fromVersion = ckpts.lastOption.map(versionOf).getOrElse(-1L)
+    (ckpts.lastOption.toSeq ++ deltas.filter(versionOf(_) > fromVersion))
+      .sorted.map(readRecord)
+  }
+
+  /** Names of the log's JSON records (deltas and checkpoints), sorted. */
+  private def logRecords(): Seq[String] =
+    if (!fs.exists(logPath)) Seq.empty
+    else fs.listStatus(logPath).map(_.getPath.getName)
+      .filter(_.endsWith(".json")).sorted.toSeq
+
+  private def versionOf(name: String): Long = name.takeWhile(_.isDigit).toLong
+
+  private def readRecord(name: String): Commit = {
+    val in = fs.open(new Path(logPath, name))
+    try Serialization.read[Commit](new java.io.InputStreamReader(in, "UTF-8"))
+    finally in.close()
   }
 
   /** Commit version → action over `fromExclusive < v <= toVersion`,
@@ -385,42 +399,28 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     tableProperties.get(IncrementalTable.ExpiredBelowProp).map(_.toLong)
 
   private def checkpointRecordAt(v: Long): Option[Commit] = {
-    val p = new Path(logPath, f"$v%010d.checkpoint.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(Serialization.read[Commit](
-        new java.io.InputStreamReader(in, "UTF-8")))
-      finally in.close()
-    }
+    val name = f"$v%010d.checkpoint.json"
+    if (fs.exists(new Path(logPath, name))) Some(readRecord(name)) else None
   }
 
   /** Raw delta records with `fromExclusive < version <= toV`, read
     * straight off the log directory — sees history that checkpoint
     * replay truncates. O(window), not O(history): the listing is
     * name-filtered before any JSON is parsed. */
-  private def deltasBetween(fromExclusive: Long, toV: Long): Seq[Commit] = {
-    if (!fs.exists(logPath)) return Seq.empty
-    fs.listStatus(logPath).map(_.getPath.getName)
-      .filter(n => n.endsWith(".json") && !n.endsWith(".checkpoint.json"))
-      .filter { n =>
-        val v = n.takeWhile(_.isDigit).toLong
+  private def deltasBetween(fromExclusive: Long, toV: Long): Seq[Commit] =
+    logRecords().filter { n =>
+      !n.endsWith(".checkpoint.json") && {
+        val v = versionOf(n)
         v > fromExclusive && v <= toV
       }
-      .sorted.toSeq.map { name =>
-        val in = fs.open(new Path(logPath, name))
-        try Serialization.read[Commit](new java.io.InputStreamReader(in, "UTF-8"))
-        finally in.close()
-      }
-  }
+    }.map(readRecord)
 
   def exists: Boolean = commits().nonEmpty
 
-  def latestVersion: Long = commits().lastOption.map(_.version).getOrElse(-1L)
+  def latestVersion: Long = snapshot.version
 
   /** Latest committed value for a metadata key (watermarks, cursors). */
-  def latestMeta(key: String): Option[String] =
-    commits().reverse.iterator.flatMap(_.meta.get(key)).nextOption()
+  def latestMeta(key: String): Option[String] = snapshot.meta.get(key)
 
   /** Has a streaming micro-batch already been committed? (exactly-once
     * replay guard for foreachBatch sinks). Checkpoints fold the truncated
@@ -431,45 +431,33 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * "an equal-or-later batch of MINE committed" means seen, while a new
     * stream identity starting over at batch 0 is never suppressed by an
     * older stream's horizon (Delta txn/appId semantics, ADVICE r2 #2).
-    * Without an appId, the legacy table-global check applies. */
-  def hasBatch(batchId: Long, appId: Option[String] = None): Boolean = appId match {
-    case Some(id) =>
-      val cs = commits()
-      cs.exists(c =>
-        (c.appId.contains(id) && c.batchId.exists(_ >= batchId)) ||
-          c.appBatches.get(id).exists(_ >= batchId)) || {
-        // upgrade boundary: a commit written by pre-appId code carries
-        // the batchId with no writer identity. Narrowed to the actual
-        // replay window (ADVICE r3 #1 — the broad any-exact-match
-        // variant silently dropped the first N batches of a deliberate
-        // fresh-checkpoint rebuild over a legacy history): the engine
-        // only re-delivers the LAST unacknowledged batch, so only the
-        // legacy history's MAX batchId can be a genuine crash replay,
-        // and only as this writer's FIRST commit — once the writer has
-        // any identified commit of its own, reaching a legacy batchId
-        // again is a fresh stream legitimately counting up, not a
-        // replay. Never via the global maxBatchId horizon; compaction
-        // folds legacy ids away and ends the guard (documented horizon:
-        // replays arrive immediately at restart, long before
-        // checkpointInterval further commits).
-        val appHasHistory = cs.exists(c =>
-          c.appId.contains(id) || c.appBatches.contains(id))
-        val legacyMax = cs.filter(_.appId.isEmpty).flatMap(_.batchId).maxOption
-        val suppressed = !appHasHistory && legacyMax.contains(batchId)
-        if (suppressed) log.warn(
-          s"table $root: suppressing batch $batchId of writer $id as a " +
-            "legacy-history crash replay (pre-appId commit with the same " +
-            "batchId); if this is a deliberate reprocess, use a fresh " +
-            "table version")
-        suppressed
-      }
-    case None =>
-      // per-commit check scoped to appId-less commits, mirroring the
-      // checkpoint fold — an identified writer's batchIds must never
-      // suppress an anonymous writer, before OR after compaction
-      // (ADVICE r3 #2)
-      commits().exists(c => (c.appId.isEmpty && c.batchId.contains(batchId)) ||
-        c.maxBatchId.exists(_ >= batchId))
+    * Without an appId, the legacy table-global check applies, scoped
+    * to appId-less commits (an identified writer's batchIds must never
+    * suppress an anonymous writer, before OR after compaction — ADVICE
+    * r3 #2).
+    *
+    * Upgrade boundary: a commit written by pre-appId code carries the
+    * batchId with no writer identity. Narrowed to the actual replay
+    * window (ADVICE r3 #1 — the broad any-exact-match variant silently
+    * dropped the first N batches of a deliberate fresh-checkpoint
+    * rebuild over a legacy history): the engine only re-delivers the
+    * LAST unacknowledged batch, so only the legacy history's MAX batchId
+    * can be a genuine crash replay, and only as this writer's FIRST
+    * commit. Never via the global maxBatchId horizon; compaction folds
+    * legacy ids away and ends the guard (documented horizon: replays
+    * arrive immediately at restart, long before checkpointInterval
+    * further commits). */
+  def hasBatch(batchId: Long, appId: Option[String] = None): Boolean = {
+    val s = snapshot
+    s.hasBatch(batchId, appId) || appId.exists { id =>
+      val suppressed = s.legacyReplay(batchId, id)
+      if (suppressed) log.warn(
+        s"table $root: suppressing batch $batchId of writer $id as a " +
+          "legacy-history crash replay (pre-appId commit with the same " +
+          "batchId); if this is a deliberate reprocess, use a fresh " +
+          "table version")
+      suppressed
+    }
   }
 
   // ----------------------------------------------------------------- read
@@ -480,30 +468,23 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * back to the newest checkpoint (older history is compacted away). */
   def liveFiles(filters: Map[String, String] = Map.empty,
       asOf: Option[Long] = None): Seq[String] = {
-    val cs = commitsAsOf(asOf)
-    parquetCkpt(cs) match {
-      case Some(_) =>
-        // a full enumeration (scan, compact, manifest export) genuinely
-        // needs the list; metadata-only callers go through
-        // liveFilesWhere/detail/compactIfNeeded, which stay distributed
-        import spark.implicits._
-        liveRowsDF(filters, asOf).select("file").as[String].collect().toSeq
-      case None =>
-        val live = scala.collection.mutable.LinkedHashSet.empty[String]
-        cs.foreach { c => live --= c.remove; live ++= c.add }
-        live.toSeq.filter(f => matchesPartition(f, filters))
-    }
+    val s = snapshotAt(asOf)
+    if (s.base.isDefined) {
+      // a full enumeration (scan, compact, manifest export) genuinely
+      // needs the list; metadata-only callers go through
+      // liveFilesWhere/detail/compactIfNeeded, which stay distributed
+      import spark.implicits._
+      liveRowsDF(filters, asOf).select("file").as[String].collect().toSeq
+    } else s.files.keys.filter(f => matchesPartition(f, filters)).toSeq
   }
 
   // ---------------------------------------------- columnar snapshots
 
-  /** The head checkpoint when it is COLUMNAR (live rows in a parquet
-    * directory, not inline JSON) — the switch every metadata fold
-    * branches on. Inline stays the small-table fast path; above
-    * [[parquetThreshold]] live files, checkpoints flip to parquet and
-    * never flip back (Delta's parquet-checkpoint shape). */
-  private def parquetCkpt(cs: Seq[Commit]): Option[Commit] =
-    cs.headOption.filter(c => c.action == "checkpoint" && c.columnarCkpt)
+  // A snapshot's `base` is its COLUMNAR checkpoint (live rows in
+  // parquet, not inline JSON) — the switch every metadata read branches
+  // on. Inline stays the small-table fast path; above parquetThreshold
+  // live files, checkpoints flip to parquet and never flip back
+  // (Delta's parquet-checkpoint shape).
 
   /** The checkpoint's live rows — all manifests (or the legacy single
     * directory) as one multi-file parquet scan. */
@@ -594,8 +575,8 @@ final class IncrementalTable(spark: SparkSession, val root: String,
   }
 
   /** Live file paths of a columnar checkpoint, materialized on the
-    * driver — audit-path only (the expire_snapshots floor seed for
-    * vacuum's tag-protection walk); hot reads stay distributed. */
+    * driver — audit paths only (CDC emission, branch heads, vacuum's
+    * tag-protection walk); hot reads stay distributed. */
   private def ckptLiveFiles(c: Commit): Seq[String] = {
     import spark.implicits._
     ckptRowsDF(c).select("file").as[String].collect().toSeq
@@ -611,61 +592,60 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * reads skip the per-file RPCs and carry -1. */
   private def liveRowsDF(filters: Map[String, String], asOf: Option[Long],
       sizedAdds: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val cs = commitsAsOf(asOf)
-    val tf = new TailFold(cs.tail)
+    val s = snapshotAt(asOf)
+    val ck = s.base.get
     // manifest-tier reads prune whole manifest FILES by partition
     // prefix before any row is scanned (legacy single-dir checkpoints
     // read the one directory as before)
-    val base0 = cs.head.manifests match {
-      case Some(ms) =>
-        manifestRowsDF(manifestPrune(ms, filters, cs.head.partitionBy))
-      case None => ckptRowsDF(cs.head)
+    val base0 = ck.manifests match {
+      case Some(ms) => manifestRowsDF(manifestPrune(ms, filters, ck.partitionBy))
+      case None => ckptRowsDF(ck)
     }
-    val withAdds = foldTail(base0, tf, sizedAdds)
+    val withAdds = foldTail(base0, s, sizedAdds)
     IncrementalTable.partitionMatchExpr(filters).fold(withAdds)(withAdds.filter)
   }
 
-  /** Fold a tail window over checkpoint base rows: drop removed (and
-    * re-added) files, merge tail dv generations, union tail adds. The
-    * base never materializes on the driver; the tail is
+  /** Apply a snapshot's tail over its checkpoint base rows: drop
+    * removed (and re-added) files, patch dv generations, union the
+    * adds. The base never materializes on the driver; the tail is
     * O(checkpointInterval) driver state applied as broadcast joins. */
-  private def foldTail(base0: DataFrame, tf: TailFold,
+  private def foldTail(base0: DataFrame, s: Snapshot,
       sizedAdds: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{array_distinct, broadcast, coalesce, col, concat, typedLit}
     import spark.implicits._
-    val dead = (tf.removedFromBase ++ tf.adds.keys).toSeq
+    val dead = (s.removedFromBase ++ s.files.keys).toSeq
     val base1 =
       if (dead.isEmpty) base0
       else base0.join(broadcast(dead.toDF("file")), Seq("file"), "left_anti")
     val base2 =
-      if (tf.dvOnBase.isEmpty) base1
+      if (s.dvOnBase.isEmpty) base1
       else {
         import org.apache.spark.sql.functions.when
-        val dvDF = broadcast(tf.dvOnBase.toSeq
+        val dvDF = broadcast(s.dvOnBase.toSeq
           .map { case (f, (r, g)) => (f, r, g) }
           .toDF("file", "_tail_replace", "_tail_gens"))
         base1.join(dvDF, Seq("file"), "left")
           .withColumn("dvGens",
-            when(col("_tail_replace"), col("_tail_gens")) // dvmerge overwrite
+            when(col("_tail_replace"), col("_tail_gens"))
               .otherwise(array_distinct(concat(
                 coalesce(col("dvGens"), typedLit(Seq.empty[String])),
                 coalesce(col("_tail_gens"), typedLit(Seq.empty[String]))))))
           .drop("_tail_replace", "_tail_gens")
       }
     val withAdds =
-      if (tf.adds.isEmpty) base2
-      else {
-        val rows = tf.adds.toSeq.map { case (f, (stats, gens)) =>
-          CkptFileRow(f,
-            if (sizedAdds) fs.getFileStatus(new Path(rootPath, f)).getLen else -1L,
-            stats.view.mapValues(IncrementalTable.toCkptStat).toMap,
-            gens)
-        }
-        base2.unionByName(rows.toDS().toDF())
-      }
+      if (s.files.isEmpty) base2
+      else base2.unionByName(ckptRows(s, sizedAdds).toDS().toDF())
     withAdds
   }
+
+  /** Checkpoint rows of a snapshot's `files`, sized from the
+    * filesystem when `sized` (else -1, filled at the next checkpoint). */
+  private def ckptRows(s: Snapshot, sized: Boolean): Seq[CkptFileRow] =
+    s.files.toSeq.map { case (f, lf) =>
+      CkptFileRow(f,
+        if (sized) fs.getFileStatus(new Path(rootPath, f)).getLen else -1L,
+        lf.stats.view.mapValues(IncrementalTable.toCkptStat).toMap, lf.dvGens)
+    }
 
   /** Live files in the LOGICAL partitions of the given physical dirs —
     * the dynamic-replace removal set, pruned Spark-side on the columnar
@@ -684,75 +664,86 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       .select("file").as[String].collect().toSeq
   }
 
-  private def commitsAsOf(asOf: Option[Long]): Seq[Commit] = asOf match {
-    case None => commits()
+  /** The snapshot as of a version: the head, a fold of the replay
+    * window's prefix, or — past the horizon, for tagged versions — a
+    * fold of the archived records. */
+  private[table] def snapshotAt(asOf: Option[Long]): Snapshot = asOf match {
+    case None => snapshot
     case Some(v) =>
-      val cs = commits()
-      if (cs.headOption.exists(_.version > v)) {
-        // Aged-out history (VERDICT r11 #2): expire_snapshots deleted
-        // the records below its floor — name the retention explicitly,
-        // because "missing file" errors hide the operator dial
-        expiredBelow.filter(v < _).foreach { e =>
-          throw new IllegalArgumentException(
-            s"version $v predates the retention horizon: history below " +
-              s"version $e was expired by expire_snapshots(" +
-              "older_than_hours=" +
-              s"${tableProperties.getOrElse(IncrementalTable.ExpiredHoursProp, "?")})" +
-              " — aged-out snapshots are unreadable by design; pin a " +
-              "snapshot with setTag / CALL graft.system.tag BEFORE " +
-              "expiry to retain it")
+      val h = snapshot
+      val cs = h.log
+      if (v == h.version) h
+      else {
+        val (cachedHead, past) = pastCache
+        if ((cachedHead eq h) && past.version == v) past
+        else {
+          val s = Snapshot.fold(commitsUpTo(cs, v))
+          pastCache = (h, s)
+          s
         }
-        // Beyond the replay horizon, TAGGED versions stay readable
-        // (X101, the Iceberg expire-snapshots-honors-refs semantic):
-        // vacuum provably retains a tagged snapshot's files and DV
-        // generations, and raw delta records survive until
-        // expire_snapshots ages them out, so the replay runs straight
-        // off the archived log (seeded at the retention floor) — an
-        // O(v) driver JSON parse, the same audit-path cost as the
-        // CDC-retention walk. Untagged versions keep failing loudly:
-        // their files may be vacuumed and a silent partial read would
-        // be worse.
-        require(tags.values.exists(_ == v) ||
-            branches.values.exists(_.base == v),
-          s"version $v predates the replay horizon (history before " +
-            s"checkpoint ${cs.headOption.map(_.version).getOrElse(-1L)} " +
-            "is compacted; only TAGGED versions — and live branches' " +
-            "base snapshots — stay readable past it; setTag / CALL " +
-            "graft.system.tag pins one)")
-        val raw = archivedDeltas(v)
-        require(raw.lastOption.exists(_.version == v),
-          s"no archived commit at version $v of $root")
-        raw
-      } else {
-        require(v <= cs.lastOption.map(_.version).getOrElse(-1L),
-          s"version $v does not exist yet (latest: $latestVersion)")
-        cs.filter(_.version <= v)
       }
   }
+
+  private def commitsUpTo(cs: Seq[Commit], v: Long): Seq[Commit] =
+    if (cs.headOption.exists(_.version > v)) {
+      // Aged-out history (VERDICT r11 #2): expire_snapshots deleted
+      // the records below its floor — name the retention explicitly,
+      // because "missing file" errors hide the operator dial
+      expiredBelow.filter(v < _).foreach { e =>
+        throw new IllegalArgumentException(
+          s"version $v predates the retention horizon: history below " +
+            s"version $e was expired by expire_snapshots(" +
+            "older_than_hours=" +
+            s"${tableProperties.getOrElse(IncrementalTable.ExpiredHoursProp, "?")})" +
+            " — aged-out snapshots are unreadable by design; pin a " +
+            "snapshot with setTag / CALL graft.system.tag BEFORE " +
+            "expiry to retain it")
+      }
+      // Beyond the replay horizon, TAGGED versions stay readable
+      // (X101, the Iceberg expire-snapshots-honors-refs semantic):
+      // vacuum provably retains a tagged snapshot's files and DV
+      // generations, and raw delta records survive until
+      // expire_snapshots ages them out, so the replay runs straight
+      // off the archived log (seeded at the retention floor) — an
+      // O(v) driver JSON parse, the same audit-path cost as the
+      // CDC-retention walk. Untagged versions keep failing loudly:
+      // their files may be vacuumed and a silent partial read would
+      // be worse.
+      require(tags.values.exists(_ == v) ||
+          branches.values.exists(_.base == v),
+        s"version $v predates the replay horizon (history before " +
+          s"checkpoint ${cs.headOption.map(_.version).getOrElse(-1L)} " +
+          "is compacted; only TAGGED versions — and live branches' " +
+          "base snapshots — stay readable past it; setTag / CALL " +
+          "graft.system.tag pins one)")
+      val raw = archivedDeltas(v)
+      require(raw.lastOption.exists(_.version == v),
+        s"no archived commit at version $v of $root")
+      raw
+    } else {
+      require(v <= cs.lastOption.map(_.version).getOrElse(-1L),
+        s"version $v does not exist yet (latest: $latestVersion)")
+      cs.takeWhile(_.version <= v)
+    }
 
   /** Committed data-skipping index of the live set: rel path → column →
     * [min,max], folded over the log like [[liveFiles]] (checkpoints
     * carry it forward). Files written without `statsColumns` are absent. */
   def liveFileStats(asOf: Option[Long] = None): Map[String, Map[String, ColStat]] = {
-    val cs = commitsAsOf(asOf)
-    parquetCkpt(cs) match {
-      case Some(_) =>
-        // full-stats materialization is an administrative need
-        // (restore); query-time pruning never calls this on the
-        // columnar path — liveFilesWhere pushes the bounds into the job
-        import org.apache.spark.sql.functions.{col, map_keys, size}
-        import spark.implicits._
-        liveRowsDF(Map.empty, asOf)
-          .filter(size(map_keys(col("stats"))) > 0)
-          .select("file", "stats").as[(String, Map[String, CkptStatRow])]
-          .collect().map { case (f, m) =>
-            f -> m.view.mapValues(IncrementalTable.fromCkptStat).toMap
-          }.toMap
-      case None =>
-        val m = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, ColStat]]
-        cs.foreach { c => c.remove.foreach(m.remove); m ++= c.fileStats }
-        m.toMap
-    }
+    val s = snapshotAt(asOf)
+    if (s.base.isDefined) {
+      // full-stats materialization is an administrative need
+      // (restore); query-time pruning never calls this on the
+      // columnar path — liveFilesWhere pushes the bounds into the job
+      import org.apache.spark.sql.functions.{col, map_keys, size}
+      import spark.implicits._
+      liveRowsDF(Map.empty, asOf)
+        .filter(size(map_keys(col("stats"))) > 0)
+        .select("file", "stats").as[(String, Map[String, CkptStatRow])]
+        .collect().map { case (f, m) =>
+          f -> m.view.mapValues(IncrementalTable.fromCkptStat).toMap
+        }.toMap
+    } else s.fileStats
   }
 
   /** Committed deletion-vector state of the live set: data rel path →
@@ -761,28 +752,15 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * commits accumulate generations per file, removing a file drops
     * its entry, checkpoints carry the live map forward. */
   def liveDv(asOf: Option[Long] = None): Map[String, Seq[String]] = {
-    val cs = commitsAsOf(asOf)
-    parquetCkpt(cs) match {
-      case Some(_) =>
-        // only the dv-bearing subset returns (bounded by standing
-        // delete volume, never by file count)
-        import org.apache.spark.sql.functions.{col, size}
-        import spark.implicits._
-        liveRowsDF(Map.empty, asOf).filter(size(col("dvGens")) > 0)
-          .select("file", "dvGens").as[(String, Seq[String])].collect().toMap
-      case None =>
-        val m = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-        cs.foreach { c =>
-          c.remove.foreach(m.remove)
-          c.dv.foreach { case (f, gens) =>
-            // a dvmerge REPLACES the file's generations with the merged
-            // one; every other dv-bearing action accumulates
-            m(f) = if (c.action == "dvmerge") gens
-              else (m.getOrElse(f, Nil) ++ gens).distinct
-          }
-        }
-        m.toMap
-    }
+    val s = snapshotAt(asOf)
+    if (s.base.isDefined) {
+      // only the dv-bearing subset returns (bounded by standing
+      // delete volume, never by file count)
+      import org.apache.spark.sql.functions.{col, size}
+      import spark.implicits._
+      liveRowsDF(Map.empty, asOf).filter(size(col("dvGens")) > 0)
+        .select("file", "dvGens").as[(String, Seq[String])].collect().toMap
+    } else s.dvMap(Map.empty)
   }
 
   /** [[liveFiles]] additionally pruned by the data-skipping index: a
@@ -814,7 +792,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         b0.get(t.base).flatMap(t.infer).map(pcol -> _)
       }
     }
-    parquetCkpt(commitsAsOf(asOf)) match {
+    snapshotAt(asOf).base match {
       case Some(_) =>
         // THE 100× path: the prune runs as a Spark job over the
         // checkpoint rows — only survivors' names reach the driver, so
@@ -915,8 +893,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * micro-batch without rescanning the table. Bounded by the replay
     * horizon like [[readAt]]. */
   def readCommit(version: Long): DataFrame = {
-    val cs = commitsAsOf(Some(version))
-    val c = cs.last
+    val c = snapshotAt(Some(version)).log.last
     require(c.version == version, s"no commit at version $version (nearest: ${c.version})")
     // raw change set: DVs attach at LATER versions and are separate
     // logical changes, so the batch reads as committed (dv = empty)
@@ -963,8 +940,8 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       s"includeRowId needs graft.rowTracking=true on $root")
     val crossesHorizon = commits().headOption
       .exists(h => h.action == "checkpoint" && fromVersion <= h.version)
-    val cs =
-      if (!crossesHorizon) commitsAsOf(Some(toVersion))
+    val atTo =
+      if (!crossesHorizon) snapshotAt(Some(toVersion))
       else {
         // A window crossing the replay horizon is PARTIAL from the
         // replayed log alone — the checkpoint is a snapshot, not a
@@ -981,61 +958,35 @@ final class IncrementalTable(spark: SparkSession, val root: String,
             "audits before compaction")
         require(toVersion <= latestVersion,
           s"version $toVersion does not exist yet (latest: $latestVersion)")
-        archivedDeltas(toVersion)
+        Snapshot.fold(archivedDeltas(toVersion))
       }
+    val cs = atTo.log
     // the schema as of toVersion: from the replayed window, or from the
     // archived walk when the window predates the horizon; the column
-    // mapping folds over the SAME walk so renamed columns read their
+    // mapping comes from the SAME walk so renamed columns read their
     // physical bytes under the toVersion logical names
-    val stored = cs.reverse.iterator.map(_.schemaJson).find(_.nonEmpty)
-      .map(StructType.fromDDL)
-    val mapping = colMapOf(cs)
-    // dv state folds over the WHOLE walk; each window commit reads
-    // under the state as of just before / just at itself. A columnar
-    // head checkpoint carries its dv map in the parquet rows, not
-    // inline — seed from there or pre-window deletes would re-surface
-    // as spurious CDC inserts. (The archived walk starts at version 0:
-    // empty seed is exact.)
-    var dvState = parquetCkpt(cs).map(ckptDvMap).getOrElse(Map.empty[String, Seq[String]])
-    // equality-delete channel state (X104) folds over the same walk —
-    // a checkpoint head seeds it through its folded meta (it is cs
-    // .head, whose meta the fold below consumes first); each window
-    // commit reads under the state as of just before itself, and an
-    // `eqdelete` commit emits its own delete rows. Emission needs the
-    // then-live file set, so the walk additionally folds live files —
-    // only when the window actually contains an eqdelete commit.
-    var eqState = Seq.empty[(String, EqDelPayload)]
-    def foldEq(c: Commit): Unit = {
-      val upd = c.meta.filter(_._1.startsWith(IncrementalTable.EqDelPrefix))
-      if (upd.nonEmpty) {
-        val m = eqState.toMap ++ upd.collect {
-          case (k, v) if v.nonEmpty =>
-            k.stripPrefix(IncrementalTable.EqDelPrefix) ->
-              Serialization.read[EqDelPayload](v)
-        }
-        val dropped = upd.collect { case (k, v) if v.isEmpty =>
-          k.stripPrefix(IncrementalTable.EqDelPrefix) }.toSet
-        eqState = (m -- dropped).toSeq.sortBy(p => (p._2.baseVersion, p._1))
-      }
-    }
+    val stored = Some(atTo.schemaDdl).filter(_.nonEmpty).map(StructType.fromDDL)
+    val mapping = atTo.channel("colmap/")
+    // each window commit reads under the snapshot just before itself:
+    // its dv state, the equality deletes (X104) in force, and — only
+    // when the window contains an eqdelete, whose emission needs them —
+    // its live files. A columnar head checkpoint's rows are read once
+    // for the whole walk, or pre-window deletes would re-surface as
+    // spurious CDC inserts.
+    lazy val baseDv = atTo.base.map(ckptDvMap).getOrElse(Map.empty[String, Seq[String]])
+    lazy val baseLive = atTo.base.map(ckptLiveFiles).getOrElse(Nil)
     val needLive = cs.exists(_.meta.exists { case (k, v) =>
       k.startsWith(IncrementalTable.EqDelPrefix) && v.nonEmpty })
-    val liveState = scala.collection.mutable.LinkedHashSet.empty[String]
-    if (needLive) parquetCkpt(cs).foreach { ck =>
-      import spark.implicits._
-      liveState ++= ckptRowsDF(ck).select("file").as[String].collect()
-    }
+    var state = Snapshot.empty
     val cdc = cs.flatMap { c =>
-      val dvBefore = dvState
-      val eqBefore = eqState
-      val liveBefore = if (needLive) liveState.toList else Nil
-      c.remove.foreach(f => dvState -= f)
-      c.dv.foreach { case (f, gens) =>
-        dvState += f -> (if (c.action == "dvmerge") gens
-          else (dvState.getOrElse(f, Nil) ++ gens).distinct)
-      }
-      foldEq(c)
-      if (needLive) { c.remove.foreach(liveState -= _); liveState ++= c.add }
+      val before = state
+      val after = state.step(c)
+      state = after
+      // lazy: only window commits read the states around them
+      lazy val dvBefore = before.dvMap(baseDv)
+      lazy val dvAfter = after.dvMap(baseDv)
+      lazy val eqBefore = before.eqDeletes
+      lazy val liveBefore = if (needLive) before.liveFiles(baseLive).toList else Nil
       // dvmerge rewrites sidecar METADATA only — the logical table is
       // unchanged, so it contributes no CDC rows (like a checkpoint)
       val inWindow = c.version >= fromVersion &&
@@ -1128,7 +1079,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
             .withColumn("_change_type", lit("delete"))
             .withColumn("_commit_version", lit(c.version)))
         else {
-          val adds = filesDf(c.add, stored, dvState, mapping,
+          val adds = filesDf(c.add, stored, dvAfter, mapping,
             keepRowId = tracked)
           Some(
             if (tracked) pairOnRowId(adds, rows, c.version, includeRowId)
@@ -1154,8 +1105,8 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         // restore() that re-adds files together with re-issued
         // deletes (the own-commit rule in eqDelGroups)
         val a = withEqDel(c.add, None,
-          Some((eqState, c.version)), Some(mapping))(fs =>
-          filesDf(fs, stored, dvState, mapping, keepRowId = tracked))
+          Some((after.eqDeletes, c.version)), Some(mapping))(fs =>
+          filesDf(fs, stored, dvAfter, mapping, keepRowId = tracked))
         val r = withEqDel(c.remove, None,
           Some((eqBefore, c.version - 1)), Some(mapping))(fs =>
           filesDf(fs, stored, dvBefore, mapping, keepRowId = tracked))
@@ -1615,26 +1566,13 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     val p = pendingWap(id).getOrElse(
       throw new IllegalArgumentException(s"no pending wap '$id' on $root"))
     // spec evolution since stage invalidates the staged files' routing
-    // (X81's evolve-conflicts-with-everything rule, deferred): locate
-    // the EARLIEST staging commit of this id (stacked stagings — every
-    // batch's routing must be current) and scan the window for an
-    // evolve. Raw archived records — never deleted, so the anchor is
-    // exact even past checkpoint folding; O(history) driver JSON parse,
-    // the established audit-path cost.
+    // (X81's evolve-conflicts-with-everything rule, deferred): scan the
+    // window from the earliest staging commit (stacked stagings — every
+    // batch's routing must be current) for an evolve
     val key = IncrementalTable.WapPrefix + id
-    var anchor: Option[Long] = None
-    archivedDeltas(latestVersion).foreach { c =>
-      c.meta.get(key) match {
-        // a tombstone (publish/abort) closes the previous cycle: a
-        // REUSED id anchors at its newest cycle's first staging
-        case Some(v) if v.isEmpty => anchor = None
-        case Some(_) if c.action == "staged" && anchor.isEmpty =>
-          anchor = Some(c.version)
-        case _ => ()
-      }
-    }
-    val stagedVersion = anchor.getOrElse(throw new IllegalStateException(
-      s"pending wap '$id' has no staging record on $root"))
+    val stagedVersion = wapAnchors(Set(id)).getOrElse(id,
+      throw new IllegalStateException(
+        s"pending wap '$id' has no staging record on $root"))
     if (deltasBetween(stagedVersion, latestVersion).exists(_.action == "evolve"))
       throw new ConcurrentWriteException(
         s"table $root: the partition spec evolved after wap '$id' was " +
@@ -1655,24 +1593,33 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // latest-value-wins — re-union against the current channel (the
     // commit() retry path re-unions again on a publish race, which is
     // idempotent for HLL)
-    val ndvChan = metaChannel("ndv/")
-    val metaOut = p.meta.map {
-      case (k, v) if k.startsWith("ndv/") && v.nonEmpty =>
-        k -> ndvChan.get(k.stripPrefix("ndv/")).filter(_.nonEmpty)
-          .fold(v) { w =>
-            java.util.Base64.getEncoder.encodeToString(
-              IncrementalTable.unionHll(
-                Some(java.util.Base64.getDecoder.decode(w)),
-                java.util.Base64.getDecoder.decode(v)))
-          }
-      case kv => kv
-    } + (key -> "")
+    val metaOut = unionNdv(p.meta, latestMeta) + (key -> "")
     val schemaDdl =
       IncrementalTable.ddlOf(mergedSchema(StructType.fromDDL(p.schemaDdl)))
     if (p.add.isEmpty && removed.isEmpty) commitMeta(metaOut)
     else commit(Commit(0, p.action, p.add, removed, p.partitionFilter,
       p.partitionBy, schemaDdl, metaOut, None, now(),
       fileStats = p.fileStats))
+  }
+
+  /** Version of the EARLIEST staging commit of each given WAP id's open
+    * cycle — a tombstone (publish/abort) closes a cycle, so a REUSED id
+    * anchors at its newest cycle's first staging. Raw archived records,
+    * never deleted, so the anchor is exact even past checkpoint folding;
+    * O(history) driver JSON parse, the established audit-path cost. */
+  private def wapAnchors(ids: Set[String]): Map[String, Long] = {
+    val anchors = scala.collection.mutable.Map.empty[String, Long]
+    archivedDeltas(latestVersion).foreach { c =>
+      ids.foreach { id =>
+        c.meta.get(IncrementalTable.WapPrefix + id) match {
+          case Some(v) if v.isEmpty => anchors.remove(id)
+          case Some(_) if c.action == "staged" && !anchors.contains(id) =>
+            anchors(id) = c.version
+          case _ => ()
+        }
+      }
+    }
+    anchors.toMap
   }
 
   /** Abort a staged write: tombstone the pending entry (one meta
@@ -1714,26 +1661,29 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       s"branch '$name' forks version $version outside [0, $latestVersion]")
     require(!branches.contains(name),
       s"branch '$name' already exists on $root — drop it first")
-    val partsAt = commitsAsOf(Some(version)).reverseIterator
-      .map(_.partitionBy).find(_.nonEmpty).getOrElse(Seq.empty)
+    val partsAt = snapshotAt(Some(version)).partitionBy
     commitMeta(Map(IncrementalTable.BranchPrefix + name ->
       Serialization.write(BranchPayload(version, partsAt, Nil))))
   }
 
-  /** The branch's live file set: base snapshot files folded through the
-    * chain. Order-preserving, so replay is deterministic. */
+  /** The branch head: the base snapshot stepped through the chain. */
+  private def branchSnapshot(p: BranchPayload): Snapshot =
+    p.commits.foldLeft(snapshotAt(Some(p.base))) { (s, c) =>
+      s.step(Commit(p.base, c.action, c.add, c.remove, c.partitionFilter,
+        p.partitionBy, c.schemaDdl, c.meta, None, 0L, fileStats = c.fileStats))
+    }
+
+  /** The branch's live file set, order-preserving, so replay is
+    * deterministic. */
   private def branchLive(p: BranchPayload): Seq[String] = {
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    live ++= liveFiles(asOf = Some(p.base))
-    p.commits.foreach { c => live --= c.remove; live ++= c.add }
-    live.toSeq
+    val s = branchSnapshot(p)
+    s.liveFiles(s.base.map(ckptLiveFiles).getOrElse(Nil))
   }
 
   /** The branch head's schema: the last chain commit's (stage-time
     * merged) schema, or the base snapshot's when the chain is empty. */
   private def branchSchema(p: BranchPayload): Option[StructType] =
-    p.commits.lastOption.map(c => StructType.fromDDL(c.schemaDdl))
-      .orElse(schemaDdlAt(Some(p.base)).map(StructType.fromDDL))
+    Some(branchSnapshot(p).schemaDdl).filter(_.nonEmpty).map(StructType.fromDDL)
 
   /** Read the branch head — base snapshot plus the branch's own writes,
     * blind to anything main committed after the fork. Deletion vectors
@@ -1787,20 +1737,8 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // unpublished rows) and were unioned against fork-time channels —
     // re-union against the CURRENT channel at publish (same rule as
     // publishWap; HLL unions commute, the retry path re-unions again)
-    val ndvChan = metaChannel("ndv/")
     val foldedMeta = p.commits.foldLeft(Map.empty[String, String]) {
-      (acc, c) =>
-        acc ++ c.meta.map {
-          case (k, v) if k.startsWith("ndv/") && v.nonEmpty =>
-            k -> acc.get(k).orElse(ndvChan.get(k.stripPrefix("ndv/")))
-              .filter(_.nonEmpty).fold(v) { w =>
-                java.util.Base64.getEncoder.encodeToString(
-                  IncrementalTable.unionHll(
-                    Some(java.util.Base64.getDecoder.decode(w)),
-                    java.util.Base64.getDecoder.decode(v)))
-              }
-          case kv => kv
-        }
+      (acc, c) => acc ++ unionNdv(c.meta, k => acc.get(k).orElse(latestMeta(k)))
     }
     val tombstone = IncrementalTable.BranchPrefix + name -> ""
     if (adds.isEmpty && removes.isEmpty)
@@ -1858,9 +1796,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * — the read path's application order. Each entry: gen →
     * (baseVersion, PHYSICAL key columns). */
   def eqDeletes(asOf: Option[Long] = None): Seq[(String, EqDelPayload)] =
-    metaChannelOf(commitsAsOf(asOf), IncrementalTable.EqDelPrefix).toSeq
-      .map { case (g, v) => g -> Serialization.read[EqDelPayload](v) }
-      .sortBy(p => (p._2.baseVersion, p._1))
+    snapshotAt(asOf).eqDeletes
 
   /** MERGE-ON-READ delete by KEY (X104, the Iceberg v2 equality-delete
     * analog — the missing piece between copy-on-write [[deleteInsert]]
@@ -1903,7 +1839,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     val gen = UUID.randomUUID().toString
     writeEqDelSidecar(dk, gen)
     val base = latestVersion
-    val prevSchema = commits().lastOption.map(_.schemaJson).getOrElse("")
+    val prevSchema = snapshot.schemaDdl
     // a lost OCC race throws to the caller (the base version must be
     // re-read); the written sidecar is then an unreferenced dir that
     // vacuum() reclaims
@@ -2795,9 +2731,9 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * The union of every in-force generation's (file, pos) rows is
     * deduped and written as a fresh generation; an action="dvmerge"
     * commit then REPLACES each live file's generation list with the
-    * merged one (all other dv folds accumulate — replay, TailFold,
-    * and changes() special-case the action). Rows naming since-removed
-    * data files are carried along harmlessly: file names are
+    * merged one (every other dv-bearing commit accumulates —
+    * [[Snapshot.mergeGens]]; changes() skips the action). Rows naming
+    * since-removed data files are carried along harmlessly: file names are
     * write-unique, so they can never match a live row.
     *
     * The logical table is unchanged — no CDC delta, stream consumers
@@ -2840,7 +2776,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * a replace commit and rebuild — correct, since history changed out
     * from under them. Returns None when already at that state. */
   def restore(version: Long): Option[Commit] = {
-    val cs = commitsAsOf(Some(version)) // validates the horizon
+    val at = snapshotAt(Some(version)) // validates the horizon
     val target = liveFiles(asOf = Some(version))
     val cur = liveFiles()
     val targetDv = liveDv(Some(version))
@@ -2867,12 +2803,9 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       eqAt.map { case (g, p) =>
         IncrementalTable.EqDelPrefix + g ->
           Serialization.write(p.copy(coverOwnCommit = true)) }
-    val schemaAt = schemaDdlAt(Some(version)).getOrElse("")
-    val partsAt = commitsAsOf(Some(version)).reverse.iterator
-      .map(_.partitionBy).find(_.nonEmpty).getOrElse(Seq.empty)
     val statsAt = liveFileStats(Some(version)).view.filterKeys(target.toSet).toMap
-    Some(commit(Commit(0, "replace", target, cur, Map.empty, partsAt,
-      schemaAt, Map("restored_from" -> version.toString) ++ eqMeta, None,
+    Some(commit(Commit(0, "replace", target, cur, Map.empty, at.partitionBy,
+      at.schemaDdl, Map("restored_from" -> version.toString) ++ eqMeta, None,
       now(), fileStats = statsAt, dv = targetDv)))
   }
 
@@ -2890,7 +2823,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         "filter(slice(split(file, '/'), 1, greatest(size(split(file, '/')) - 1, 0))," +
         " s -> instr(s, '=') > 0)," +
         " s -> struct(split_part(s, '=', 1) AS key, split_part(s, '=', 2) AS value)))")
-    val base = parquetCkpt(commits()) match {
+    val base = snapshot.base match {
       case Some(_) =>
         liveRowsDF(Map.empty, None, sizedAdds = true)
           .select(col("file"), col("size").as("size_bytes"),
@@ -2949,7 +2882,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
   def cloneTo(destRoot: String, version: Option[Long] = None): Commit = {
     require(exists, s"clone source $root does not exist")
     val v = version.getOrElse(latestVersion)
-    val cs = commitsAsOf(Some(v)) // validates the replay horizon
+    val at = snapshotAt(Some(v)) // validates the replay horizon
     require(liveDv(Some(v)).isEmpty,
       s"clone source $root has deletion vectors in force at v$v — " +
         "compact() to materialize them first")
@@ -2965,42 +2898,34 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     def abs(f: String) = if (f.startsWith("/")) f else s"$srcBase/$f"
     val files = liveFiles(asOf = Some(v)).map(abs)
     val stats = liveFileStats(Some(v)).map { case (f, m) => abs(f) -> m }
-    val schemaDdl = schemaDdlAt(Some(v)).getOrElse("")
-    val partsAt = cs.reverse.iterator
-      .map(_.partitionBy).find(_.nonEmpty).getOrElse(Seq.empty)
     val channels = Seq("prop/", "constraint/", "colmap/", "ptransform/",
       "dropped/", "default/", "identity/", "idhw/", "genexpr/",
       "rowhw/", "ndv/").flatMap { p =>
-      metaChannelOf(cs, p).map { case (k, value) => s"$p$k" -> value }
+      at.channel(p).map { case (k, value) => s"$p$k" -> value }
     }.toMap
     val meta = channels ++ Map(
       "clonedFrom" -> srcBase, "clonedVersion" -> v.toString)
     // action "append": replay folds, CDC (every row an insert), and
     // OCC conflict checks all treat the clone like a bulk add
-    dest.commit(Commit(0, "append", files, Nil, Map.empty, partsAt,
-      schemaDdl, meta, None, now(), fileStats = stats))
+    dest.commit(Commit(0, "append", files, Nil, Map.empty, at.partitionBy,
+      at.schemaDdl, meta, None, now(), fileStats = stats))
   }
 
-  /** One-row table summary (Delta DESCRIBE DETAIL analog): current
-    * version, live file count and bytes (a driver-side metadata pass
-    * over the committed list — no Spark job), partition columns,
-    * schema DDL, active constraint and deletion-vector counts. */
   /** (live file count, total bytes, dv-bearing file count) of the
-    * snapshot as of `asOf` — THE single copy of the summary fold
-    * [[detail]] and [[liveBytes]] share. Checkpointed tables answer
+    * snapshot as of `asOf`, shared by [[detail]] and [[liveBytes]].
+    * Checkpointed tables answer
     * with one bounded aggregation job over the checkpoint rows
     * (+ O(tail) driver statuses for tail-added files); small tables
     * pay O(live files) statuses. */
   private def liveSummary(asOf: Option[Long]): (Long, Long, Long) = {
-    val cs = commitsAsOf(asOf)
-    parquetCkpt(cs) match {
+    val s = snapshotAt(asOf)
+    s.base match {
       case Some(_) =>
         import org.apache.spark.sql.functions.{col, count, lit, size, sum, when}
-        val tf = new TailFold(cs.tail)
         val agg = liveRowsDF(Map.empty, asOf).agg(
           count(lit(1)), sum(when(col("size") >= 0, col("size"))),
           count(when(size(col("dvGens")) > 0, lit(1)))).head
-        val tailBytes = tf.adds.keys
+        val tailBytes = s.files.keys
           .map(f => fs.getFileStatus(new Path(rootPath, f)).getLen).sum
         (agg.getLong(0),
           (if (agg.isNullAt(1)) 0L else agg.getLong(1)) + tailBytes,
@@ -3040,8 +2965,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // standing equality deletes (X104) hide an unknown number of rows
     // — the metadata answer would overcount; decline to a real scan
     if (eqDeletes(asOf).nonEmpty) return None
-    val cs = commitsAsOf(asOf)
-    val fileRows: Option[Long] = parquetCkpt(cs) match {
+    val fileRows: Option[Long] = snapshotAt(asOf).base match {
       case Some(_) =>
         import org.apache.spark.sql.functions.{col, count, lit, map_values, sum, try_element_at}
         // try_element_at: a live file written WITHOUT statsColumns has an
@@ -3209,8 +3133,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // an equality delete may have removed exactly the extreme row
     if (eqDeletes(asOf).nonEmpty) return None
     val column = physPath(column0, columnMapping(asOf)) // index keys are physical
-    val cs = commitsAsOf(asOf)
-    parquetCkpt(cs) match {
+    snapshotAt(asOf).base match {
       case Some(_) =>
         import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
         val e = col("stats").getItem(column)
@@ -3252,21 +3175,16 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     }
   }
 
+  /** One-row table summary (Delta DESCRIBE DETAIL analog): current
+    * version, live file count and bytes (a driver-side metadata pass
+    * over the committed list — no Spark job), partition columns,
+    * schema DDL, active constraint and deletion-vector counts. */
   def detail(): DataFrame = {
     import spark.implicits._
-    val cs = commits()
+    val s = snapshot
     val (nFiles, bytes, nDv) = liveSummary(None)
-    val schemaDdl = schemaDdlAt().getOrElse("")
-    // partitioning of the CURRENT layout: the most recent data commit's
-    // partitionBy, including a legitimately-empty one (a table fully
-    // rewritten unpartitioned must not report its old columns);
-    // checkpoints fold this same rule forward
-    val parts = cs.reverse.iterator
-      .filter(c => c.add.nonEmpty || c.action == "replace" ||
-        c.action == "evolve" || c.columnarCkpt)
-      .map(_.partitionBy).nextOption().getOrElse(Seq.empty)
-    Seq((root, latestVersion, nFiles, bytes,
-      parts.mkString(","), schemaDdl, constraints.size.toLong, nDv))
+    Seq((root, s.version, nFiles, bytes,
+      s.layout.mkString(","), s.schemaDdl, constraints.size.toLong, nDv))
       .toDF("location", "version", "num_files", "size_bytes",
         "partition_by", "schema_ddl", "num_constraints", "num_dv_files")
   }
@@ -3281,14 +3199,13 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         "partition_by", "batch_id", "app_id", "meta")
   }
 
-  /** Latest committed schema DDL as of a version (None before any
-    * data commit) — THE single copy of the schema-resolution rule. */
-  private def schemaDdlAt(asOf: Option[Long] = None): Option[String] =
-    commitsAsOf(asOf).reverse.iterator.map(_.schemaJson).find(_.nonEmpty)
-
-  private def committedSchemaAt(asOf: Option[Long] = None): Option[StructType] =
-    schemaDdlAt(asOf).map(ddl =>
-      decorateDefaults(StructType.fromDDL(ddl), columnDefaults(asOf)))
+  /** Latest committed schema as of a version (None before any data
+    * commit), decorated with the committed column defaults. */
+  private def committedSchemaAt(asOf: Option[Long] = None): Option[StructType] = {
+    val s = snapshotAt(asOf)
+    Some(s.schemaDdl).filter(_.nonEmpty).map(ddl =>
+      decorateDefaults(StructType.fromDDL(ddl), s.channel("default/")))
+  }
 
   /** Column DEFAULTs (X79, the Iceberg-v3 initial-default analog):
     * logical column → SQL literal text, committed in the `default/`
@@ -3299,7 +3216,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * omitting the column get it); the two never diverge because SET/
     * DROP DEFAULT are refused — one literal, one meaning, forever. */
   def columnDefaults(asOf: Option[Long] = None): Map[String, String] =
-    metaChannelOf(commitsAsOf(asOf), "default/")
+    snapshotAt(asOf).channel("default/")
 
   /** IDENTITY columns (X83, the Delta/SQL-standard identity analog):
     * logical column → (start, step, allowExplicitInsert), committed in
@@ -3309,7 +3226,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * OCC-conflicts concurrent minters), gaps allowed on explicit
     * inserts and aborted batches, per the identity contract. */
   def identityColumns(asOf: Option[Long] = None): Map[String, IdentitySpec] =
-    metaChannelOf(commitsAsOf(asOf), "identity/").view.mapValues { v =>
+    snapshotAt(asOf).channel("identity/").view.mapValues { v =>
       val parts = v.split(",")
       IdentitySpec(parts(0).toLong, parts(1).toLong, parts(2).toBoolean)
     }.toMap
@@ -3329,7 +3246,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * contract), and any OTHER path that would write a diverged value
     * fails instead of silently de-synchronizing. */
   def generatedColumns(asOf: Option[Long] = None): Map[String, String] =
-    metaChannelOf(commitsAsOf(asOf), "genexpr/")
+    snapshotAt(asOf).channel("genexpr/")
 
   /** Attach Spark's default-value metadata keys to defaulted fields:
     * the read path fills EXISTS_DEFAULT for files physically missing
@@ -3358,7 +3275,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * a plain size below it. For sizing decisions like "is this rewrite
     * most of the table". */
   def liveFileCount(asOf: Option[Long] = None): Long =
-    parquetCkpt(commitsAsOf(asOf)) match {
+    snapshotAt(asOf).base match {
       case Some(_) => liveRowsDF(Map.empty, asOf).count()
       case None => liveFiles(Map.empty, asOf).size.toLong
     }
@@ -3385,7 +3302,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // with different semantics (old dirs still carry its tokens). A
     // time-travel fold at a pre-evolution version sees the original
     // spec, so reads and DESCRIBE at that version use the then-layout.
-    val specs = metaChannelOf(commitsAsOf(asOf), "ptransform/")
+    val specs = snapshotAt(asOf).channel("ptransform/")
       .filterNot(_._2.startsWith(IncrementalTable.RetiredSpec))
     if (specs.isEmpty) Map.empty
     else {
@@ -3430,35 +3347,17 @@ final class IncrementalTable(spark: SparkSession, val root: String,
 
   /** Latest non-empty partitionBy (the write-path default: rewrites of
     * a partitioned table keep its layout unless told otherwise). */
-  private def committedPartitionBy: Seq[String] =
-    commits().reverse.iterator
-      .map(_.partitionBy).find(_.nonEmpty).getOrElse(Seq.empty)
+  private def committedPartitionBy: Seq[String] = snapshot.partitionBy
+
+  /** One `<prefix><name> → value` metadata channel at the head
+    * ([[Snapshot.channel]]). */
+  private def metaChannel(prefix: String): Map[String, String] =
+    snapshot.channel(prefix)
 
   /** Active CHECK constraints: name → boolean SQL expression. Stored
     * as `constraint/<name>` metadata (an empty value marks a drop), so
     * they ride the same atomic commits as everything else and survive
     * checkpoint folding. */
-  /** Fold one `<prefix><name> → value` metadata channel over the log:
-    * latest value wins, empty value is a tombstone — THE single copy
-    * of the channel semantics [[constraints]]/[[tableProperties]]/
-    * [[tags]] share. */
-  private def metaChannel(prefix: String): Map[String, String] =
-    metaChannelOf(commits(), prefix)
-
-  /** [[metaChannel]] over an explicit commit walk — time-travel reads
-    * need channel state AS OF a version ([[columnMapping]]), and the
-    * CDC walk needs it over the archived records. */
-  private def metaChannelOf(cs: Seq[Commit], prefix: String): Map[String, String] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    cs.foreach(_.meta.foreach { case (k, v) =>
-      if (k.startsWith(prefix)) {
-        val n = k.stripPrefix(prefix)
-        if (v.isEmpty) m.remove(n) else m(n) = v
-      }
-    })
-    m.toMap
-  }
-
   def constraints: Map[String, String] = metaChannel("constraint/")
 
   /** Column mapping (Delta column-mapping analog, X72): logical column
@@ -3472,10 +3371,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * mapping that was committed at that version, so rename CHAINS
     * replay exactly. */
   def columnMapping(asOf: Option[Long] = None): Map[String, String] =
-    metaChannelOf(commitsAsOf(asOf), "colmap/")
-
-  private def colMapOf(cs: Seq[Commit]): Map[String, String] =
-    metaChannelOf(cs, "colmap/")
+    snapshotAt(asOf).channel("colmap/")
 
   /** The physical rendering of a (possibly dot-pathed) logical column.
     * Mapping keys are LOGICAL dot-paths (top-level: the bare name;
@@ -3835,6 +3731,20 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     }.toMap
   }
 
+  /** `meta` with each non-empty `ndv/` sketch unioned into the value
+    * `current` holds for its key (HLL unions commute, so a re-union
+    * never conflicts and repeating it is idempotent). */
+  private def unionNdv(meta: Map[String, String],
+      current: String => Option[String]): Map[String, String] = meta.map {
+    case (k, v) if k.startsWith("ndv/") && v.nonEmpty =>
+      k -> current(k).filter(_.nonEmpty).fold(v) { w =>
+        val b64 = java.util.Base64.getDecoder
+        java.util.Base64.getEncoder.encodeToString(
+          IncrementalTable.unionHll(Some(b64.decode(w)), b64.decode(v)))
+      }
+    case kv => kv
+  }
+
   // ---- X100: log-level bloom-filter file index ----------------------
 
   private def bloomIdxPath = new Path(logPath, "bloomidx")
@@ -4153,7 +4063,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * column → (bin height, bins as (lo, hi, ndv)). */
   def columnHistograms(asOf: Option[Long] = None)
       : Map[String, (Double, Seq[(Double, Double, Long)])] =
-    metaChannelOf(commitsAsOf(asOf), "hist/").view.mapValues { v =>
+    snapshotAt(asOf).channel("hist/").view.mapValues { v =>
       val Array(h, binsStr) = v.split("\\|", 2)
       val bins = binsStr.split(";").toIndexedSeq.map { b =>
         val Array(lo, hi, n) = b.split(",", 3)
@@ -4167,7 +4077,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * OVERESTIMATE after deletes (unions never shrink) — the safe
     * direction for CBO join planning. */
   def columnNdv(asOf: Option[Long] = None): Map[String, Long] =
-    metaChannelOf(commitsAsOf(asOf), "ndv/").view.mapValues { b64 =>
+    snapshotAt(asOf).channel("ndv/").view.mapValues { b64 =>
       Math.round(org.apache.datasketches.hll.HllSketch
         .heapify(java.util.Base64.getDecoder.decode(b64)).getEstimate)
     }.toMap
@@ -4183,7 +4093,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     *
     * Tags are DURABLE reproducibility pins (X101, the Iceberg
     * expire-snapshots-honors-refs semantic): a tagged version stays
-    * readable past the checkpoint replay horizon (commitsAsOf replays
+    * readable past the checkpoint replay horizon (snapshotAt folds
     * the never-deleted raw delta records — O(v) driver JSON parse, an
     * audit-path cost), and [[vacuum]] keeps every tagged snapshot's
     * files and in-force DV generations referenced until the tag is
@@ -4324,7 +4234,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
   /** Metadata-only commit (cursor/watermark advance with no data). */
   def commitMeta(meta: Map[String, String], batchId: Option[Long] = None,
       appId: Option[String] = None): Commit = {
-    val schema = commits().lastOption.map(_.schemaJson).getOrElse("")
+    val schema = snapshot.schemaDdl
     commit(Commit(0, "meta", Nil, Nil, Map.empty, Nil, schema, meta, batchId, now(),
       appId = appId))
   }
@@ -4526,7 +4436,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       case (name, spec) if curTs.get(name).map(_.spec) != Some(spec) =>
         s"ptransform/$name" -> spec
     }
-    val schemaDdl = commits().lastOption.map(_.schemaJson).getOrElse("")
+    val schemaDdl = snapshot.schemaDdl
     commit(Commit(0, "evolve", Nil, Nil, Map.empty, partitionBy, schemaDdl,
       retirals ++ activations +
         ("prop/" + IncrementalTable.SpecEvolvedProp -> "1"),
@@ -4551,7 +4461,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       asOf: Option[Long] = None): Unit = {
     val ks = keys.toSeq.distinct
     if (ks.isEmpty || !specEvolved) return
-    val offender: Option[String] = parquetCkpt(commitsAsOf(asOf)) match {
+    val offender: Option[String] = snapshotAt(asOf).base match {
       case Some(_) =>
         import spark.implicits._
         val missing = ks.map(k => !IncrementalTable.hasSegExpr(k))
@@ -4821,7 +4731,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           // same empty-epoch semantics as the fast path below
           val removed = if (replace) liveFiles() else Seq.empty
           if (removed.nonEmpty) {
-            val schema = commits().lastOption.map(_.schemaJson).getOrElse("")
+            val schema = snapshot.schemaDdl
             Some(commit(Commit(0, "replace", Nil, removed, Map.empty,
               partitionBy, schema, Map.empty, Some(batchId), now(),
               appId = Some(appId))))
@@ -4906,7 +4816,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         // empty result still truncates: an empty aggregate IS a result.
         val removed = if (replace) liveFiles() else Seq.empty
         if (removed.nonEmpty) {
-          val schema = commits().lastOption.map(_.schemaJson).getOrElse("")
+          val schema = snapshot.schemaDdl
           Some(commit(Commit(0, "replace", Nil, removed, Map.empty,
             partitionBy, schema, Map.empty, Some(batchId), now(),
             appId = Some(appId))))
@@ -5272,6 +5182,13 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       if (statsIdx.isEmpty) Map.empty[String, Map[String, ColStat]]
       else perFile.view.mapValues(_.view.filterKeys(statsIdx).toMap)
         .filter(_._2.nonEmpty).toMap
+    // derived (transform) partition columns are routing-only: they
+    // must never enter the committed schema
+    // ...and so is the row-tracking id column (X87): physical-only
+    lazy val stagedSchemaDdl = IncrementalTable.ddlOf(
+      mergedSchema(StructType(withParts.schema.fields
+        .filterNot(f => ptransforms.contains(f.name) ||
+          f.name == IncrementalTable.RowIdCol))))
     // Write-audit-publish staging (X98): promote the files NOW (same
     // crash story as a normal write — until a commit references them
     // they are invisible orphans), but the commit that lands is an
@@ -5319,16 +5236,12 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       IncrementalTable.gcStaging(fs, stage) // async: never read again
       // W6 elision on the branch: an empty append extends nothing
       if (added.isEmpty && removed.isEmpty) return None
-      val stagedSchemaDdl = IncrementalTable.ddlOf(
-        mergedSchema(StructType(withParts.schema.fields
-          .filterNot(f => ptransforms.contains(f.name) ||
-            f.name == IncrementalTable.RowIdCol))))
       val chainMeta = allMeta.view.filterKeys(k =>
         !k.startsWith("idhw/") && !k.startsWith("rowhw/")).toMap
       val bc = BranchCommit(action, added, removed, partitionFilter,
         stagedSchemaDdl, chainMeta,
         fileStats.view.filterKeys(added.toSet).toMap)
-      val prevSchema = commits().lastOption.map(_.schemaJson).getOrElse("")
+      val prevSchema = snapshot.schemaDdl
       return Some(commit(Commit(0, "staged", Nil, Nil, Map.empty,
         committedPartitionBy, prevSchema,
         (idhwMeta ++ rowHwMeta).toMap +
@@ -5357,10 +5270,6 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           rel
         }
       IncrementalTable.gcStaging(fs, stage) // async: never read again
-      val stagedSchemaDdl = IncrementalTable.ddlOf(
-        mergedSchema(StructType(withParts.schema.fields
-          .filterNot(f => ptransforms.contains(f.name) ||
-            f.name == IncrementalTable.RowIdCol))))
       val fresh = WapPayload(action, added, partitionFilter, partitionBy,
         stagedSchemaDdl, allMeta,
         fileStats.view.filterKeys(added.toSet).toMap)
@@ -5384,21 +5293,12 @@ final class IncrementalTable(spark: SparkSession, val root: String,
               .filterNot(f => a.fieldNames.contains(f.name))
             IncrementalTable.ddlOf(StructType(a.fields ++ extra))
           }
-          val mergedMeta = prev.meta ++ allMeta.map {
-            case (k, v) if k.startsWith("ndv/") && v.nonEmpty =>
-              k -> prev.meta.get(k).filter(_.nonEmpty).fold(v) { w =>
-                java.util.Base64.getEncoder.encodeToString(
-                  IncrementalTable.unionHll(
-                    Some(java.util.Base64.getDecoder.decode(w)),
-                    java.util.Base64.getDecoder.decode(v)))
-              }
-            case kv => kv
-          }
+          val mergedMeta = prev.meta ++ unionNdv(allMeta, prev.meta.get)
           WapPayload(action, prev.add ++ added, partitionFilter,
             partitionBy, mergedDdl, mergedMeta,
             prev.fileStats ++ fresh.fileStats)
       }
-      val prevSchema = commits().lastOption.map(_.schemaJson).getOrElse("")
+      val prevSchema = snapshot.schemaDdl
       // the staging commit carries its identity/row-id high-water
       // advances DIRECTLY (a reservation): every later mint reads the
       // channel and lands above the staged files' baked values, so
@@ -5423,11 +5323,18 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       val removed = if (action == "replace" && !dynamic)
         removeExact.getOrElse(liveFiles(partitionFilter))
       else Seq.empty
-      if (removed.nonEmpty) {
-        val schema = commits().lastOption.map(_.schemaJson).getOrElse("")
+      // an empty append that brings NEW columns into an existing table
+      // still evolves its schema: that commits schema-only, as Delta
+      // commits the new metadata of an empty mergeSchema append
+      val widens = committedSchemaAt().exists(prev =>
+        withParts.schema.fieldNames.exists(n => !prev.fieldNames.contains(n) &&
+          !ptransforms.contains(n) && n != IncrementalTable.RowIdCol))
+      if (removed.nonEmpty)
         Some(commit(Commit(0, "replace", Nil, removed, partitionFilter,
-          partitionBy, schema, allMeta, batchId, now(), appId = appId)))
-      }
+          partitionBy, snapshot.schemaDdl, allMeta, batchId, now(), appId = appId)))
+      else if (widens)
+        Some(commit(Commit(0, "append", Nil, Nil, Map.empty,
+          partitionBy, stagedSchemaDdl, allMeta, batchId, now(), appId = appId)))
       // W6 empty-write elision: no data files enter the log, no empty
       // partition dirs appear; metadata still commits if present
       else if (allMeta.nonEmpty) Some(commitMeta(allMeta, batchId, appId)) else None
@@ -5457,7 +5364,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         else removeExact.getOrElse(
           if (dynamic) {
             val touched = added.map(parentDir).toSet
-            if (parquetCkpt(commits()).isDefined) liveFilesInDirs(touched)
+            if (snapshot.base.isDefined) liveFilesInDirs(touched)
             else {
               // segment-normalized (not string-equal): cloned files live
               // under a foreign root but belong to the same LOGICAL
@@ -5467,13 +5374,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
                 segs.exists(s => matchesPartition(f, s)))
             }
           } else liveFiles(partitionFilter))
-      // derived (transform) partition columns are routing-only: they
-      // must never enter the committed schema
-      // ...and so is the row-tracking id column (X87): physical-only
-      val schemaDdl = IncrementalTable.ddlOf(
-        mergedSchema(StructType(withParts.schema.fields
-          .filterNot(f => ptransforms.contains(f.name) ||
-            f.name == IncrementalTable.RowIdCol))))
+      val schemaDdl = stagedSchemaDdl // merged before the publish clock
       val tPublish0 = System.nanoTime()
       val c = commit(Commit(0, action, added, removed, partitionFilter,
         partitionBy, schemaDdl, allMeta, batchId, now(), appId = appId,
@@ -5735,27 +5636,13 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         // the post-refresh channel. (An analyzeNdv reset that loses a
         // race re-unions too — overestimate-safe; re-run quiescently
         // for an exact reset.)
-        if (cur.meta.keysIterator.exists(k =>
-            k.startsWith("ndv/") && cur.meta(k).nonEmpty)) {
-          val chan = metaChannel("ndv/")
-          cur = cur.copy(meta = cur.meta.map {
-            case (k, v) if k.startsWith("ndv/") && v.nonEmpty =>
-              k -> chan.get(k.stripPrefix("ndv/")).filter(_.nonEmpty)
-                .fold(v) { w =>
-                  java.util.Base64.getEncoder.encodeToString(
-                    IncrementalTable.unionHll(
-                      Some(java.util.Base64.getDecoder.decode(w)),
-                      java.util.Base64.getDecoder.decode(v)))
-                }
-            case kv => kv
-          })
-        }
+        cur = cur.copy(meta = unionNdv(cur.meta, latestMeta))
         base = latestVersion
       }
     }
     // extend the cached snapshot in place instead of re-replaying the log
-    val cached = commitCache
-    commitCache = if (cached != null) cached :+ res else null
+    val cached = head
+    head = if (cached != null) cached.step(res) else null
     maybeCheckpoint(res.version)
     res
   }
@@ -5909,7 +5796,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * checks for checkpoint health: fragmentation, range spans, row
     * balance across manifests. */
   def manifestList(): Seq[ManifestRef] =
-    parquetCkpt(commits()).flatMap(_.manifests).getOrElse(Nil)
+    snapshot.base.flatMap(_.manifests).getOrElse(Nil)
 
   /** REWRITE_MANIFESTS maintenance (the Iceberg rewrite-manifests
     * procedure analog): fold the whole live set into fresh, compact,
@@ -5929,7 +5816,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
 
   def rewriteManifests(): Seq[ManifestRef] = {
     require(exists, s"rewrite_manifests target $root does not exist")
-    if (parquetCkpt(commits()).isEmpty) return Nil
+    if (snapshot.base.isEmpty) return Nil
     fullRewriteNext = true
     try {
       commitMeta(Map("maintenance/manifest_rewrite" -> now().toString))
@@ -5947,45 +5834,17 @@ final class IncrementalTable(spark: SparkSession, val root: String,
   private def maybeCheckpoint(version: Long, force: Boolean = false,
       fullRewrite: Boolean = false): Unit =
     if (force || (version > 0 && version % checkpointEvery == 0)) {
-      val cs = commits()
-      val last = cs.last
-      // fold the replay horizon's batchIds into the checkpoint so the
-      // exactly-once guard (hasBatch) survives compaction: table-global
-      // max for appId-less commits, per-appId max for identified writers
-      // (a new writer identity must never be suppressed by another's
-      // horizon)
-      val maxBatch = (cs.filter(_.appId.isEmpty).flatMap(_.batchId) ++
-        cs.flatMap(_.maxBatchId)).maxOption
-      val perApp = cs.flatMap(c =>
-          c.appId.flatMap(id => c.batchId.map(id -> _)).toSeq ++ c.appBatches.toSeq)
-        .groupMapReduce(_._1)(_._2)(math.max)
-      // record the CURRENT LAYOUT's partitionBy (latest data commit's,
-      // incl. a legitimately-empty one), not whatever the interval's
-      // last commit happened to carry — a meta/dv tail commit has
-      // empty partitionBy and would make detail() report a partitioned
-      // table as unpartitioned right after compaction (ADVICE r4 #2).
-      // A prior checkpoint counts as a data commit (it folded this
-      // same rule), so the value survives repeated compactions.
-      val layoutParts = cs.reverse.iterator
-        .filter(c => c.add.nonEmpty || c.action == "replace" ||
-          c.action == "evolve" || c.columnarCkpt)
-        .map(_.partitionBy).nextOption().getOrElse(last.partitionBy)
-      val foldedMeta = cs.foldLeft(Map.empty[String, String])(_ ++ _.meta)
-
-      val prevParquet = parquetCkpt(cs)
-      // exact live count with NO base fold: previous count minus base
-      // removes plus tail adds (removes always name then-live files, so
-      // the arithmetic is exact by induction); the inline path counts
-      // its driver fold directly
-      val tfOpt = prevParquet.map(_ => new TailFold(cs.tail))
-      val inlineLive = if (prevParquet.isEmpty) liveFiles() else Nil
-      val liveCount = (prevParquet, tfOpt) match {
-        case (Some(ck), Some(tf)) =>
-          ck.numFiles.getOrElse(sys.error(
-            s"columnar checkpoint ${ck.version} lacks numFiles")) -
-            tf.removedFromBase.size + tf.adds.size
-        case _ => inlineLive.size.toLong
-      }
+      // the snapshot carries everything the record needs: live set,
+      // folded meta, schema, the CURRENT layout (latest data commit's
+      // partitionBy — a meta/dv tail commit's empty one would make
+      // detail() report a partitioned table as unpartitioned right after
+      // compaction, ADVICE r4 #2) and the batch horizons the
+      // exactly-once guard needs past compaction
+      val snap = snapshot
+      val record = snap.checkpoint(now())
+      val prevParquet = snap.base
+      // exact live count with NO base fold ([[Snapshot.numFiles]])
+      val liveCount = snap.numFiles
 
       if (prevParquet.isDefined || liveCount > parquetThreshold) {
         // ---- columnar checkpoint, MANIFEST tier (VERDICT r10 #4):
@@ -5998,8 +5857,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         import spark.implicits._
         val (reused, freshRows): (Seq[ManifestRef], DataFrame) =
           prevParquet match {
-            case Some(ck) if ck.manifests.isDefined && tfOpt.isDefined =>
-              val tf = tfOpt.get
+            case Some(ck) if ck.manifests.isDefined =>
               // a manifest is dirty iff its path range can hold a
               // tail-removed or dv-touched file — a pure metadata
               // decision, no manifest opened to decide. Tail ADDS never
@@ -6010,30 +5868,22 @@ final class IncrementalTable(spark: SparkSession, val root: String,
               // tail manifest. fullRewrite (rewriteManifests
               // maintenance) treats the whole list as dirty:
               // everything re-folds compactly.
-              val dirty: Set[String] = (tf.removedFromBase ++
-                tf.dvOnBase.keySet).toSet
+              val dirty: Set[String] = snap.removedFromBase ++ snap.dvOnBase.keySet
               val (dirtyRefs, clean) =
                 if (fullRewrite || fullRewriteNext) (ck.manifests.get, Nil)
                 else ck.manifests.get.partition(m =>
                   dirty.exists(f => DataSkipping.cpCompare(m.lo, f) <= 0 &&
                     DataSkipping.cpCompare(f, m.hi) <= 0))
-              (clean, foldTail(manifestRowsDF(dirtyRefs), tf,
+              (clean, foldTail(manifestRowsDF(dirtyRefs), snap,
                 sizedAdds = true))
             case Some(_) =>
               // legacy single-directory checkpoint: one full migration
               // rewrite into the pool
               (Nil, liveRowsDF(Map.empty, None, sizedAdds = true))
             case None =>
-              // first crossing of the threshold: the inline fold (just
-              // computed, bounded by the crossing size) becomes the rows
-              val stats = liveFileStats()
-              val dvm = liveDv()
-              (Nil, inlineLive.map { f =>
-                CkptFileRow(f, fs.getFileStatus(new Path(rootPath, f)).getLen,
-                  stats.getOrElse(f, Map.empty).view
-                    .mapValues(IncrementalTable.toCkptStat).toMap,
-                  dvm.getOrElse(f, Nil))
-              }.toDS().toDF())
+              // first crossing of the threshold: the inline live set
+              // (bounded by the crossing size) becomes the rows
+              (Nil, ckptRows(snap, sized = true).toDS().toDF())
           }
         // reused manifests hold only live rows (else they'd be dirty),
         // so the fresh row count is exact arithmetic — no count job
@@ -6063,13 +5913,11 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         }
         val staged = stageManifests(rows, freshCount)
         val ms = (reusedMs ++ staged.refs).sortBy(_.lo)
-        val snap = Commit(version, "checkpoint", Nil, Nil, Map.empty,
-          layoutParts, last.schemaJson, foldedMeta, None, now(),
-          maxBatchId = maxBatch, appBatches = perApp,
+        val rec = record.copy(add = Nil, fileStats = Map.empty, dv = Map.empty,
           numFiles = Some(liveCount), manifests = Some(ms))
         val tmp = new Path(logPath, s".${UUID.randomUUID()}.tmp")
         val out = fs.create(tmp, false)
-        try out.write(Serialization.write(snap).getBytes("UTF-8")) finally out.close()
+        try out.write(Serialization.write(rec).getBytes("UTF-8")) finally out.close()
         // fresh manifests enter the pool only NOW, adjacent to the
         // record publish — a concurrent vacuum (which re-reads the log
         // right before pool reclaim) cannot observe them unreferenced
@@ -6079,32 +5927,25 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         // snapshot — losing either race is harmless; the loser's fresh
         // manifests are its own never-referenced uuids, reclaimed
         // eagerly here (vacuum also sweeps crash strays)
-        if (!publish(tmp, new Path(logPath, f"$version%010d.checkpoint.json"))) {
+        if (!publish(tmp, new Path(logPath, f"${rec.version}%010d.checkpoint.json"))) {
           fs.delete(tmp, false)
           staged.refs.foreach(m =>
             fs.delete(new Path(manifestsPath, m.name), false))
         }
       } else {
-        val live = inlineLive
-        // fold the live files' data-skipping stats into the checkpoint
-        // so pruning survives compaction of the commits that recorded
-        // them; same for the deletion-vector map, which also keeps the
-        // referenced sidecar generations vacuum-protected
-        val liveStats = liveFileStats().view.filterKeys(live.toSet).toMap
-        val liveDvMap = liveDv().view.filterKeys(live.toSet).toMap
-        val snap = Commit(version, "checkpoint", live, Nil, Map.empty,
-          layoutParts, last.schemaJson, foldedMeta, None, now(),
-          maxBatchId = maxBatch, appBatches = perApp, fileStats = liveStats,
-          dv = liveDvMap)
+        // the inline record carries the live files' data-skipping stats
+        // (pruning survives compaction of the commits that recorded
+        // them) and the deletion-vector map (which also keeps the
+        // referenced sidecar generations vacuum-protected)
         val tmp = new Path(logPath, s".${UUID.randomUUID()}.tmp")
         val out = fs.create(tmp, false)
-        try out.write(Serialization.write(snap).getBytes("UTF-8")) finally out.close()
+        try out.write(Serialization.write(record).getBytes("UTF-8")) finally out.close()
         // two writers checkpointing the same version computed the same
         // live set — losing this race is harmless, keep the winner's
-        if (!publish(tmp, new Path(logPath, f"$version%010d.checkpoint.json")))
+        if (!publish(tmp, new Path(logPath, f"${record.version}%010d.checkpoint.json")))
           fs.delete(tmp, false)
       }
-      commitCache = null // next read replays from the new checkpoint
+      refresh() // next read replays from the new checkpoint
     }
 
   /** Compact a partition's small files into `targetFiles` per physical
@@ -6246,7 +6087,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       filters: Map[String, String] = Map.empty,
       statsColumns: Seq[String] = Nil): Seq[Map[String, String]] = {
     require(maxFiles >= targetFiles && maxFiles > 0)
-    val oversized = parquetCkpt(commits()) match {
+    val oversized = snapshot.base match {
       case Some(_) =>
         // the per-partition census is a groupBy over the checkpoint
         // rows; only oversized dirs (the partitions to compact) return
@@ -6270,7 +6111,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       // via removeExact) and let the write choke point route the rows
       // under the CURRENT layout. Old-spec dirs migrate to the new
       // spec as maintenance touches them.
-      val inDir = parquetCkpt(commits()) match {
+      val inDir = snapshot.base match {
         case Some(_) =>
           import org.apache.spark.sql.functions.col
           import spark.implicits._
@@ -6386,34 +6227,18 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       else Long.MaxValue
     val replayFloor = cs.head.version
     // pending WAPs pin their raw `staged` records (ADVICE r12 medium):
-    // publishWap's evolve-conflict anchor scan locates the EARLIEST
-    // open-cycle staging commit in archivedDeltas, and the checkpoint
-    // fold preserves only the channel VALUE (the pending payload), not
-    // the staged record itself — expiring past it would make the
-    // staging permanently unpublishable. Floor strictly below the
-    // oldest pending staging (same anchor walk publishWap does).
+    // publishWap's evolve-conflict scan starts at the open cycle's
+    // earliest staging commit, and the checkpoint fold preserves only
+    // the channel VALUE (the pending payload), not the staged record
+    // itself — expiring past it would make the staging permanently
+    // unpublishable. Floor strictly below the oldest pending staging.
     val wapFloor = {
       val pending = pendingWaps.keySet
       if (pending.isEmpty) Long.MaxValue
-      else {
-        val anchors = scala.collection.mutable.Map.empty[String, Long]
-        archivedDeltas(latestVersion).foreach { c =>
-          pending.foreach { id =>
-            c.meta.get(IncrementalTable.WapPrefix + id) match {
-              case Some(v) if v.isEmpty => anchors.remove(id) // cycle closed
-              case Some(_) if c.action == "staged" && !anchors.contains(id) =>
-                anchors(id) = c.version
-              case _ => ()
-            }
-          }
-        }
-        anchors.values.minOption.map(_ - 1).getOrElse(Long.MaxValue)
-      }
+      else wapAnchors(pending.toSet).values.minOption.map(_ - 1).getOrElse(Long.MaxValue)
     }
-    val ckptVs = fs.listStatus(logPath).map(_.getPath.getName)
-      .filter(_.endsWith(".checkpoint.json"))
-      .map(_.takeWhile(_.isDigit).toLong).sorted
-    val floor = ckptVs
+    val records = logRecords()
+    val floor = records.filter(_.endsWith(".checkpoint.json")).map(versionOf)
       .filter(v => v <= pinFloor && v <= cdcFloor && v <= replayFloor &&
         v <= wapFloor)
       .filter(v => checkpointRecordAt(v).exists(_.ts < cutoffTs))
@@ -6427,13 +6252,11 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           "prop/" + IncrementalTable.ExpiredHoursProp -> olderThanHours.toString))
         // delta records <= E fold into E's kept checkpoint; older
         // checkpoint records are superseded by it
-        val doomed = fs.listStatus(logPath).map(_.getPath.getName)
-          .filter(_.endsWith(".json")).filter { n =>
-            val v = n.takeWhile(_.isDigit).toLong
-            if (n.endsWith(".checkpoint.json")) v < e else v <= e
-          }
+        val doomed = records.filter { n =>
+          if (n.endsWith(".checkpoint.json")) versionOf(n) < e else versionOf(n) <= e
+        }
         doomed.foreach(n => fs.delete(new Path(logPath, n), false))
-        commitCache = null
+        refresh()
         (e, doomed.length.toLong)
     }
   }
@@ -6468,12 +6291,19 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // replayable window, the CDC retention walk, and every tagged /
     // branch-base snapshot (until then, as-of reads still consult it).
     if (!dryRun) retireInertEqDeletes()
-    val cs = commits()
+    val snap = snapshot
+    val cs = snap.log
+    // Both protection walks below step the archived records — seeded at
+    // the retention floor's checkpoint once expire_snapshots has run, a
+    // STATE snapshot whose columnar rows are read at most once per walk.
+    def seedRows(walk: Seq[Commit]) = walk.headOption
+      .filter(c => c.action == "checkpoint" && c.columnarCkpt)
     // CDC retention: a changes() window inside the last `cdcRetention`
     // commits may replay ARCHIVED deltas — keep every data file its
     // emission reads (adds, removes, dv-touched) and every sidecar
-    // generation in force at or through the window (dvBefore state
-    // included, so pre-window deletes still apply during emission)
+    // generation and equality delete (X104) in force at or through the
+    // window (the state just before a commit included, so pre-window
+    // deletes still apply during emission)
     val (cdcFiles, cdcGens, cdcEqGens) =
       if (cdcRetention <= 0)
         (Set.empty[String], Set.empty[String], Set.empty[String])
@@ -6482,45 +6312,29 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         val files = Set.newBuilder[String]
         val gens = Set.newBuilder[String]
         val eqGens = Set.newBuilder[String]
-        var dvState = Map.empty[String, Seq[String]]
-        var eqInForce = Set.empty[String]
-        archivedDeltas(latestVersion).foreach { c =>
-          // retention-floor seed (expire_snapshots): a columnar
-          // checkpoint head is a STATE SNAPSHOT — its dv map lives in
-          // parquet rows, not inline; eqdel state folds naturally from
-          // its foldedMeta below
-          if (c.action == "checkpoint" && c.columnarCkpt)
-            dvState = ckptDvMap(c)
+        val walk = archivedDeltas(latestVersion)
+        lazy val baseDv = seedRows(walk).map(ckptDvMap).getOrElse(Map.empty[String, Seq[String]])
+        walk.foldLeft(Snapshot.empty) { (before, c) =>
+          val after = before.step(c)
           if (c.version >= cutoff) {
             files ++= c.add; files ++= c.remove; files ++= c.dv.keys
             gens ++= c.dv.values.flatten
-            gens ++= dvState.values.flatten
-            // equality deletes (X104): a window replay reads every
-            // sidecar in force at or through the window
-            eqGens ++= eqInForce
-          }
-          c.remove.foreach(f => dvState -= f)
-          c.dv.foreach { case (f, g) =>
-            dvState += f -> (if (c.action == "dvmerge") g
-              else (dvState.getOrElse(f, Nil) ++ g).distinct)
-          }
-          c.meta.foreach { case (k, v) =>
-            if (k.startsWith(IncrementalTable.EqDelPrefix)) {
-              val g = k.stripPrefix(IncrementalTable.EqDelPrefix)
-              eqInForce = if (v.isEmpty) eqInForce - g else eqInForce + g
-              if (v.nonEmpty && c.version >= cutoff) eqGens += g
+            Seq(before, after).foreach { st =>
+              gens ++= st.dvMap(baseDv).values.flatten
+              eqGens ++= st.eqDeletes.map(_._1)
             }
           }
+          after
         }
         (files.result(), gens.result(), eqGens.result())
       }
     // Tagged-snapshot retention (X101): every tagged version's live set
-    // — and the DV generations in force at it — stays referenced, so a
-    // tag is a durable reproducibility pin (the training-run contract:
-    // the exact corpus snapshot a run trained on survives arbitrary
-    // rewrites until the tag is dropped). One O(history) archived-log
-    // walk shared by all tags, the same audit-path cost as the CDC
-    // retention walk above.
+    // — and the DV generations and equality deletes in force at it —
+    // stays referenced, so a tag is a durable reproducibility pin (the
+    // training-run contract: the exact corpus snapshot a run trained on
+    // survives arbitrary rewrites until the tag is dropped). One
+    // O(history) archived-log walk shared by all tags, the same
+    // audit-path cost as the CDC retention walk above.
     val (tagFiles, tagGens, tagEqGens) = {
       // live branches (X102) pin their BASE snapshot exactly like a
       // tag: the fork must stay readable (and fast-forwardable) no
@@ -6532,38 +6346,17 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         val files = Set.newBuilder[String]
         val gens = Set.newBuilder[String]
         val eqGens = Set.newBuilder[String]
-        val live = scala.collection.mutable.LinkedHashSet.empty[String]
-        var dvState = Map.empty[String, Seq[String]]
-        var eqInForce = Set.empty[String]
-        archivedDeltas(tagVersions.max).foreach { c =>
-          // retention-floor seed (expire_snapshots): fold the pinned
-          // snapshots from the floor checkpoint's live rows + dv map
-          // instead of version 0 (an inline checkpoint seeds naturally
-          // — its add IS the live set and its dv map is inline)
-          if (c.action == "checkpoint" && c.columnarCkpt) {
-            live.clear()
-            live ++= ckptLiveFiles(c)
-            dvState = ckptDvMap(c)
-          }
-          c.remove.foreach { f => live -= f; dvState -= f }
-          live ++= c.add
-          c.dv.foreach { case (f, g) =>
-            dvState += f -> (if (c.action == "dvmerge") g
-              else (dvState.getOrElse(f, Nil) ++ g).distinct)
-          }
-          c.meta.foreach { case (k, v) =>
-            if (k.startsWith(IncrementalTable.EqDelPrefix)) {
-              val g = k.stripPrefix(IncrementalTable.EqDelPrefix)
-              eqInForce = if (v.isEmpty) eqInForce - g else eqInForce + g
-            }
-          }
+        val walk = archivedDeltas(tagVersions.max)
+        lazy val baseLive = seedRows(walk).map(ckptLiveFiles).getOrElse(Nil)
+        lazy val baseDv = seedRows(walk).map(ckptDvMap).getOrElse(Map.empty[String, Seq[String]])
+        walk.foldLeft(Snapshot.empty) { (before, c) =>
+          val st = before.step(c)
           if (tagVersions.contains(c.version)) {
-            files ++= live
-            gens ++= dvState.values.flatten
-            // a pinned snapshot's read applies its in-force equality
-            // deletes (X104) — keep their sidecars
-            eqGens ++= eqInForce
+            files ++= st.liveFiles(baseLive)
+            gens ++= st.dvMap(baseDv).values.flatten
+            eqGens ++= st.eqDeletes.map(_._1)
           }
+          st
         }
         (files.result(), gens.result(), eqGens.result())
       }
@@ -6624,7 +6417,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       // published commit until fastForward adopts them — protected
       // while the ref lives (dropBranch tombstones + eager-deletes)
       branches.values.flatMap(_.commits).flatMap(_.add)
-    val orphans = parquetCkpt(cs) match {
+    val orphans = snap.base match {
       case Some(ck) =>
         // orphan detection as a distributed anti-join: the referenced
         // set (checkpoint rows ∪ tail adds) never folds on the driver;
@@ -6648,7 +6441,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // checkpoint — the checkpoint re-references live files' gens, so
     // in-force DVs always survive)
     val refGens = cs.flatMap(_.dv.values.flatten).toSet ++
-      parquetCkpt(cs).map(ckptDvMap(_).values.flatten.toSet).getOrElse(Set.empty) ++
+      snap.base.map(ckptDvMap(_).values.flatten.toSet).getOrElse(Set.empty) ++
       cdcGens ++ tagGens
     val dvRoot = new Path(rootPath, dvPrefix)
     val staleGens =
@@ -6689,7 +6482,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       if (!fs.exists(manifestsPath)) Seq.empty
       else fs.listStatus(manifestsPath).toSeq
     val refMs: Set[String] = {
-      commitCache = null
+      refresh()
       (cs ++ commits()).flatMap(_.manifests).flatten.map(_.name).toSet ++
         seedCkpt.flatMap(_.manifests).toSeq.flatten.map(_.name)
     }
@@ -6723,7 +6516,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         if (dirs.isEmpty) Seq.empty
         else {
           import org.apache.spark.sql.functions.{col, element_at, input_file_name, lit, max => maxFn, split}
-          val refDF = parquetCkpt(cs) match {
+          val refDF = snap.base match {
             case Some(ck) => ckptRowsDF(ck).select("file")
               .unionByName((cs.flatMap(_.add) ++ cdcFiles ++ wapFiles ++ tagFiles).toDF("file"))
             case None =>
@@ -7007,44 +6800,6 @@ object IncrementalTable {
 
   private[table] lazy val ckptRowSchema: StructType =
     org.apache.spark.sql.Encoders.product[CkptFileRow].schema
-
-  /** Driver-side fold of the commits AFTER a columnar checkpoint:
-    * O(tail), never O(live files). Mirrors the inline fold exactly —
-    * per commit: removes first (dropping any tail add or base dv
-    * patch), then adds (with their commit's stats), then dv
-    * accumulation (merged into a tail add when the file was added in
-    * this tail, else recorded as a patch against the base). Every
-    * remove names a then-live file, so `removedFromBase` is exactly
-    * the base rows to drop and `adds` exactly the rows to union. */
-  private[table] final class TailFold(tail: Seq[Commit]) {
-    val removedFromBase = scala.collection.mutable.LinkedHashSet.empty[String]
-    val adds = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Map[String, ColStat], Seq[String])]
-    // base-file dv patches: replace=true means the base row's dvGens is
-    // OVERWRITTEN (a dvmerge landed in the tail), replace=false means
-    // the gens union into it (plain dv accumulation)
-    val dvOnBase = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Boolean, Seq[String])]
-    tail.foreach { c =>
-      c.remove.foreach { f =>
-        if (adds.remove(f).isEmpty) removedFromBase += f
-        dvOnBase.remove(f)
-      }
-      c.add.foreach { f => adds(f) = (c.fileStats.getOrElse(f, Map.empty), Nil) }
-      c.dv.foreach { case (f, gens) =>
-        val merge = c.action == "dvmerge"
-        adds.get(f) match {
-          case Some((st, g)) =>
-            adds(f) = (st, if (merge) gens else (g ++ gens).distinct)
-          case None => dvOnBase(f) = dvOnBase.get(f) match {
-            case _ if merge => (true, gens) // replacement wins outright
-            case Some((r, g)) => (r, (g ++ gens).distinct)
-            case None => (false, gens)
-          }
-        }
-      }
-    }
-  }
 
   /** Hive partition-filter match as a Column over a checkpoint row's
     * `file` path — the distributed twin of [[matchesPartition]]:

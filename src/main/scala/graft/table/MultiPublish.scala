@@ -2,7 +2,7 @@ package graft.table
 
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -60,6 +60,8 @@ final class MultiPublish(spark: SparkSession, val coordRoot: String) {
   // (ADVICE r11), not against a default Configuration()
   private val fs: FileSystem =
     rootPath.getFileSystem(IncrementalTable.hadoopConf(spark))
+  private lazy val fc: FileContext =
+    FileContext.getFileContext(fs.getUri, IncrementalTable.hadoopConf(spark))
 
   private def intentPath(id: String) = new Path(rootPath, s"$id.intent")
 
@@ -115,14 +117,22 @@ final class MultiPublish(spark: SparkSession, val coordRoot: String) {
     results.flatMap(_._2)
   }
 
-  /** Step 2 — the decision record. Atomic create (tmp + rename). */
+  /** Step 2 — the decision record. Atomic create: tmp + a rename that
+    * REFUSES an existing destination. `FileSystem.rename` gives no such
+    * guarantee — Hadoop's local filesystems (the fork-free one this
+    * project ships among them) silently replace the destination, which
+    * would let a second decision overwrite the first — so the rename
+    * goes through FileContext with `Rename.NONE`. */
   private[table] def writeIntent(intent: PublishIntent): Unit = {
     fs.mkdirs(rootPath)
     val tmp = new Path(rootPath, s".${UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, false)
     try out.write(Serialization.write(intent).getBytes("UTF-8"))
     finally out.close()
-    if (!fs.rename(tmp, intentPath(intent.id))) {
+    val won =
+      try { fc.rename(tmp, intentPath(intent.id), Options.Rename.NONE); true }
+      catch { case _: FileAlreadyExistsException => false }
+    if (!won) {
       fs.delete(tmp, false)
       throw new ConcurrentWriteException(
         s"publish intent '${intent.id}' already exists under $coordRoot")

@@ -3,16 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM-wide session). */
+/** Shared local SparkSession for all suites (one JVM-wide session), on
+  * the recipe the mains ship — fork-free local filesystem included
+  * ([[GraftSession]]; `NioLocalFileSystemSpec` pins its equivalence
+  * with stock LocalFs). */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).appName("graft-test").getOrCreate()
 
   /** The vendored ingest corpus (FIXTURES.md §A): `day=<d>/` dirs of
     * one-word `.txt` files, 51 + 2 + 4. Tests copy it, never write it. */

@@ -904,6 +904,21 @@ class IncrementalTableSpec extends SparkSpec {
     }
   }
 
+  test("schema evolution: an EMPTY append that widens the schema still commits it") {
+    val t = IncrementalTable(spark, tmpDir("itab") + "/t19e")
+    t.append(Seq((1L, "a")).toDF("k", "name"), Nil)
+    val v0 = t.latestVersion
+    t.append(Seq((2L, "b", "s")).toDF("k", "name", "seg").filter($"k" > 5L), Nil)
+    assert(t.latestVersion == v0 + 1, "the widened schema commits schema-only")
+    assert(t.liveFiles().size == 1)
+    assert(t.schemaAt().get.fieldNames.toSeq == Seq("k", "name", "seg"))
+    val back = t.read().collect()
+    assert(back.length == 1 && back.head.isNullAt(back.head.fieldIndex("seg")))
+    // an empty append with no new column stays fully elided (W6)
+    t.append(Seq((3L, "c")).toDF("k", "name").filter($"k" > 5L), Nil)
+    assert(t.latestVersion == v0 + 1)
+  }
+
   test("legacy batch guard is narrowed to the replay window (ADVICE r3 #1)") {
     val t = IncrementalTable(spark, tmpDir("itab") + "/t20")
     val df = Seq(("a", 1L)).toDF("k", "n")
