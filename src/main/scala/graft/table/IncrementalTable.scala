@@ -908,13 +908,16 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * commit rewrites whole files (copy-on-write), so rows present in
     * both its removed and added files are unchanged and cancel via
     * multiset difference — what remains is exactly the commit's logical
-    * delta. Per-commit cost is one anti-aggregation over THAT commit's
-    * files (never the table), so tailing the feed is O(change volume)
-    * at any table size. Checkpoint commits are compaction artifacts,
-    * not changes, and are skipped; the window is bounded by the replay
-    * horizon like [[readAt]], and vacuum retains every file the window
-    * references. All files read under the `toVersion` schema (older
-    * files null-fill evolved columns, same as any read).
+    * delta. Append-only and delete-only commits are narrow scans of
+    * THAT commit's files, tagged in one projection; only a commit with
+    * both adds and removes pays the `exceptAll` (an aggregation and a
+    * shuffle over its own files, never the table), so tailing the feed
+    * is O(change volume) at any table size. Checkpoint commits are
+    * compaction artifacts, not changes, and are skipped; the window is
+    * bounded by the replay horizon like [[readAt]], and vacuum retains
+    * every file the window references. All files read under the
+    * `toVersion` schema (older files null-fill evolved columns, same as
+    * any read).
     *
     * Deletion vectors compose exactly: an action="dv" commit surfaces
     * its NEWLY deleted positions as delete rows (its sidecars hold
@@ -987,6 +990,16 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       lazy val dvAfter = after.dvMap(baseDv)
       lazy val eqBefore = before.eqDeletes
       lazy val liveBefore = if (needLive) before.liveFiles(baseLive).toList else Nil
+      // one projection tags a change set with its type and version;
+      // `idFirst` leads with the exposed `_row_id`, the column order
+      // pairOnRowId's using-joins give
+      def tag(df: DataFrame, ct: String, idFirst: Boolean = false): DataFrame = {
+        val marks = Seq(lit(ct).as("_change_type"), lit(c.version).as("_commit_version"))
+        val rc = IncrementalTable.RowIdCol
+        if (idFirst && includeRowId && df.columns.contains(rc))
+          df.select(col(rc).as("_row_id") +: col("*") +: marks: _*).drop(rc)
+        else exposeRowId(df, tracked, includeRowId).select(col("*") +: marks: _*)
+      }
       // dvmerge rewrites sidecar METADATA only — the logical table is
       // unchanged, so it contributes no CDC rows (like a checkpoint)
       val inWindow = c.version >= fromVersion &&
@@ -1027,9 +1040,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           val keys = eqDelKeysGoverned(Seq(gen), p.cols, mapping)
           base.join(keys, keys.columns.toIndexedSeq, "left_semi")
         }
-        exposeRowId(frames.reduce(_.unionByName(_)), tracked, includeRowId)
-          .withColumn("_change_type", lit("delete"))
-          .withColumn("_commit_version", lit(c.version))
+        tag(frames.reduce(_.unionByName(_)), "delete")
       }
       def freshDels: Seq[(String, EqDelPayload)] = c.meta.collect {
         case (k, v) if k.startsWith(IncrementalTable.EqDelPrefix) &&
@@ -1074,20 +1085,13 @@ final class IncrementalTable(spark: SparkSession, val root: String,
                 df.join(keys, keys.columns.toIndexedSeq, "left_anti")
               }
           }.reduce(_.unionByName(_))
-        if (c.add.isEmpty)
-          Some(exposeRowId(rows, tracked, includeRowId)
-            .withColumn("_change_type", lit("delete"))
-            .withColumn("_commit_version", lit(c.version)))
+        if (c.add.isEmpty) Some(tag(rows, "delete"))
         else {
           val adds = filesDf(c.add, stored, dvAfter, mapping,
             keepRowId = tracked)
           Some(
             if (tracked) pairOnRowId(adds, rows, c.version, includeRowId)
-            else rows.withColumn("_change_type", lit("delete"))
-              .withColumn("_commit_version", lit(c.version))
-              .unionByName(adds
-                .withColumn("_change_type", lit("insert"))
-                .withColumn("_commit_version", lit(c.version))))
+            else tag(rows, "delete").unionByName(tag(adds, "insert")))
         }
       } else {
         // added files read under the POST-commit dv state: usually a
@@ -1104,19 +1108,25 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         // (new files escape by version ordering) but exact for a
         // restore() that re-adds files together with re-issued
         // deletes (the own-commit rule in eqDelGroups)
-        val a = withEqDel(c.add, None,
+        lazy val a = withEqDel(c.add, None,
           Some((after.eqDeletes, c.version)), Some(mapping))(fs =>
           filesDf(fs, stored, dvAfter, mapping, keepRowId = tracked))
-        val r = withEqDel(c.remove, None,
+        lazy val r = withEqDel(c.remove, None,
           Some((eqBefore, c.version - 1)), Some(mapping))(fs =>
           filesDf(fs, stored, dvBefore, mapping, keepRowId = tracked))
-        val ins = a.exceptAll(r)
-        val del = r.exceptAll(a)
+        // exceptAll against an empty side is the multiset identity, so
+        // an append-only (or delete-only) commit is its own delta — a
+        // narrow scan, no shuffle — and with nothing to pair a
+        // row-tracked side passes through too
         val base =
-          if (tracked) pairOnRowId(ins, del, c.version, includeRowId)
-          else ins.withColumn("_change_type", lit("insert"))
-            .unionByName(del.withColumn("_change_type", lit("delete")))
-            .withColumn("_commit_version", lit(c.version))
+          if (c.remove.isEmpty) tag(a, "insert", idFirst = true)
+          else if (c.add.isEmpty) tag(r, "delete", idFirst = true)
+          else {
+            val ins = a.exceptAll(r)
+            val del = r.exceptAll(a)
+            if (tracked) pairOnRowId(ins, del, c.version, includeRowId)
+            else tag(ins, "insert").unionByName(tag(del, "delete"))
+          }
         // X105 atomic upsert: the append ALSO put fresh equality
         // deletes in force — emit the rows they remove alongside the
         // commit's inserts (its own adds escape and are not re-listed)
@@ -2925,15 +2935,16 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         val agg = liveRowsDF(Map.empty, asOf).agg(
           count(lit(1)), sum(when(col("size") >= 0, col("size"))),
           count(when(size(col("dvGens")) > 0, lit(1)))).head
-        val tailBytes = s.files.keys
-          .map(f => fs.getFileStatus(new Path(rootPath, f)).getLen).sum
+        // an iterator, not `keys.map`: a key SET would collapse
+        // equal-sized tail files into one length
+        val tailBytes = s.files.keysIterator.map(statusOf(_).getLen).sum
         (agg.getLong(0),
           (if (agg.isNullAt(1)) 0L else agg.getLong(1)) + tailBytes,
           agg.getLong(2))
       case None =>
         val live = liveFiles(Map.empty, asOf)
         (live.size.toLong,
-          live.map(f => fs.getFileStatus(new Path(rootPath, f)).getLen).sum,
+          live.map(statusOf(_).getLen).sum,
           liveDv(asOf).size.toLong)
     }
   }
@@ -2949,7 +2960,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * the post-pushdown cost estimate. O(files) driver statuses; callers
     * hand in survivor lists the skipping index already bounded. */
   def liveFilesSize(files: Seq[String]): Long =
-    files.map(f => fs.getFileStatus(new Path(rootPath, f)).getLen).sum
+    files.map(statusOf(_).getLen).sum
 
   /** EXACT live logical row count from metadata alone — no data scan:
     * `Some(n)` when every live file carries a row tally in its stats
@@ -6580,14 +6591,36 @@ object IncrementalTable {
     * streaming stage dirs stay synchronous — a replayed epoch
     * re-attempts into the SAME deterministic path. One daemon thread:
     * deletes stay ordered and bounded; a JVM exit may leak the last
-    * in-flight dir, exactly like dying just before a sync delete. */
+    * in-flight dir, exactly like dying just before a sync delete. A
+    * failed delete leaves its dir for vacuum's staging sweep and is
+    * counted in [[stagingGcStats]], never rethrown to the writer. */
   private val stagingGc = java.util.concurrent.Executors.newSingleThreadExecutor(
     (r: Runnable) => {
       val t = new Thread(r, "graft-staging-gc"); t.setDaemon(true); t
     })
+  private val gcQueued = new java.util.concurrent.atomic.AtomicLong
+  private val gcDone = new java.util.concurrent.atomic.AtomicLong
+  private val gcFailed = new java.util.concurrent.atomic.AtomicLong
+  @volatile private var gcLastFailure: Option[String] = None
+
+  /** The staging GC's deletes since JVM start: `queued` counts every
+    * hand-off, so `queued - done - failed` is the backlog still in
+    * flight; `lastFailure` names the last path that failed and why. */
+  final case class GcStats(queued: Long, done: Long, failed: Long,
+      lastFailure: Option[String])
+
+  def stagingGcStats: GcStats =
+    GcStats(gcQueued.get, gcDone.get, gcFailed.get, gcLastFailure)
+
   private[table] def gcStaging(fs: FileSystem, p: Path): Unit = {
+    gcQueued.incrementAndGet()
     stagingGc.submit(new Runnable {
-      def run(): Unit = try { fs.delete(p, true); () } catch { case _: Throwable => () }
+      def run(): Unit =
+        try { fs.delete(p, true); gcDone.incrementAndGet(); () }
+        catch { case e: Throwable =>
+          gcLastFailure = Some(s"$p: $e")
+          gcFailed.incrementAndGet(); ()
+        }
     })
     ()
   }

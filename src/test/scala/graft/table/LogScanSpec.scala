@@ -48,4 +48,41 @@ class LogScanSpec extends SparkSpec {
       e.getMessage.contains("FILE_NOT_EXIST") || e.getMessage.contains("does not exist"),
       s"unexpected failure: $e")
   }
+
+  test("liveBytes and liveFilesSize size files from the handle's statuses") {
+    val (writer, root, _) = manyFileTable("sized")
+    def onDisk(fs: Seq[String]) =
+      fs.map(f => java.nio.file.Files.size(java.nio.file.Paths.get(root, f))).sum
+    val live = writer.liveFiles()
+    val (total, firstFive) = (onDisk(live), onDisk(live.take(5)))
+    assert(writer.liveBytes() == total)
+    assert(writer.liveFilesSize(live.take(5)) == firstFive)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, live.head))
+    // the writing handle stats nothing: its statuses were cached at promote
+    assert(writer.liveBytes() == total)
+    assert(writer.liveFilesSize(live.take(5)) == firstFive)
+    // a fresh handle stats the missing file and fails loudly
+    intercept[java.io.FileNotFoundException](IncrementalTable(spark, root).liveBytes())
+    intercept[java.io.FileNotFoundException](IncrementalTable(spark, root).liveFilesSize(live))
+  }
+
+  test("liveBytes counts every tail file of a columnar checkpoint, equal sizes included") {
+    val root = tmpDir("logscan") + "/tail"
+    val t = new IncrementalTable(spark, root, checkpointEvery = 3, parquetThreshold = 0)
+    var i = 0L
+    while (!t.commits().headOption.exists(_.columnarCkpt) && i < 6) {
+      t.append(Seq(i).toDF("id"), Nil)
+      i += 1
+    }
+    assert(t.commits().head.columnarCkpt)
+    // two tail files with identical contents, so identical sizes
+    val tail = (0 until 2).map(_ => t.append(Seq(7L).toDF("id").repartition(1), Nil).get.add)
+    assert(t.commits().head.columnarCkpt && tail.forall(_.size == 1))
+    def size(f: String) = java.nio.file.Files.size(java.nio.file.Paths.get(root, f))
+    assert(size(tail(0).head) == size(tail(1).head))
+    val fresh = IncrementalTable(spark, root)
+    val live = fresh.liveFiles()
+    assert(live.size == i + 2)
+    assert(fresh.liveBytes() == live.map(size).sum)
+  }
 }

@@ -8,6 +8,12 @@ import org.scalacheck.Prop.forAll
 
 import graft.SparkSpec
 
+/** A row of [[PartitionEvolutionProps]]' model. Package level and public:
+  * Spark's generated code cannot construct a private nested case class
+  * (Janino rejects the call), and every Dataset of it would then run
+  * interpreted. */
+case class PartitionEvolutionRow(k: Long, seg: String, region: String, n: Long)
+
 /** Model-based property for partition spec evolution (X81): a random
   * interleaving of appends (under whatever layout is current), evolve
   * commits, predicate deletes, and compactions must always read back
@@ -25,23 +31,21 @@ object PartitionEvolutionProps extends Properties("partitionevolution") {
 
   private lazy val spark = SparkSpec.spark
 
-  private case class R(k: Long, seg: String, region: String, n: Long)
-
   private sealed trait Op
-  private case class Append(rows: Seq[R]) extends Op
+  private case class Append(rows: Seq[PartitionEvolutionRow]) extends Op
   private case class Evolve(layout: Seq[String]) extends Op
   private case class Delete(mod: Long) extends Op // delete where n % mod == 0
   private case object Compact extends Op
 
   private val layouts = Vector(Seq("seg"), Seq("region"), Seq("seg", "region"))
 
-  private val genRows: Gen[Seq[R]] = for {
+  private val genRows: Gen[Seq[PartitionEvolutionRow]] = for {
     m <- Gen.choose(1, 5)
     segs <- Gen.listOfN(m, Gen.oneOf("A", "B", "C"))
     regs <- Gen.listOfN(m, Gen.oneOf("e", "w"))
     ns <- Gen.listOfN(m, Gen.choose(0L, 30L))
   } yield segs.lazyZip(regs).lazyZip(ns).toSeq.map { case (s, r, n) =>
-    R(0L, s, r, n) // k assigned sequentially by the runner
+    PartitionEvolutionRow(0L, s, r, n) // k assigned sequentially by the runner
   }
 
   private val genOp: Gen[Op] = Gen.frequency(
@@ -58,10 +62,10 @@ object PartitionEvolutionProps extends Properties("partitionevolution") {
       import spark.implicits._
       val dir = Files.createTempDirectory("peprops").toString
       val t = IncrementalTable(spark, s"$dir/t", checkpointEvery = 4)
-      var model = Vector.empty[R]
+      var model = Vector.empty[PartitionEvolutionRow]
       var layout = layouts.head
       var nextK = 0L
-      t.create(Seq.empty[R].toDF().schema, layout)
+      t.create(Seq.empty[PartitionEvolutionRow].toDF().schema, layout)
       ops.foreach {
         case Append(rows) =>
           val withK = rows.map(r => r.copy(k = { nextK += 1; nextK }))
@@ -79,14 +83,14 @@ object PartitionEvolutionProps extends Properties("partitionevolution") {
           t.compact(targetFiles = 2)
       }
       // 1. full read == model
-      val full = t.read().as[R].collect().toVector.sortBy(_.k)
+      val full = t.read().as[PartitionEvolutionRow].collect().toVector.sortBy(_.k)
       val ok1 = full == model.sortBy(_.k)
       // 2. predicate reads never refuse and match the model
-      val bySeg = t.readWhere(col("seg") === "B").as[R].collect()
+      val bySeg = t.readWhere(col("seg") === "B").as[PartitionEvolutionRow].collect()
         .toVector.sortBy(_.k)
       val ok2 = bySeg == model.filter(_.seg == "B").sortBy(_.k)
       val byReg = t.readWhere(col("region") === "e" && col("n") >= 10)
-        .as[R].collect().toVector.sortBy(_.k)
+        .as[PartitionEvolutionRow].collect().toVector.sortBy(_.k)
       val ok3 = byReg == model.filter(r => r.region == "e" && r.n >= 10)
         .sortBy(_.k)
       // 3. exact partition-filter read: refuse-or-exact, never silent loss
@@ -95,7 +99,7 @@ object PartitionEvolutionProps extends Properties("partitionevolution") {
         val want = model.filter(r =>
           (if (c == "seg") r.seg else r.region) == target).sortBy(_.k)
         try {
-          t.read(Map(c -> target)).as[R].collect().toVector.sortBy(_.k) == want
+          t.read(Map(c -> target)).as[PartitionEvolutionRow].collect().toVector.sortBy(_.k) == want
         } catch {
           case e: IllegalStateException => e.getMessage.contains("compact()")
         }
