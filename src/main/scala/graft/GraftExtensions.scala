@@ -30,6 +30,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // reorder batch; the injected strategy plans the stats leaf away
     ext.injectPreCBORule(spark => graft.plans.GraftCboStatsRule(spark))
     ext.injectPlannerStrategy(_ => new graft.plans.GraftStatsStrategy)
+    // metadata-only aggregate answers collect without a Spark job
+    ext.injectPlannerStrategy(_ => new graft.plans.LocalScanFold)
     // CDC as a table-valued function: SELECT * FROM
     // graft_changes('/path/to/table', fromVersion [, toVersion]) —
     // every logical change in the window as rows with

@@ -842,12 +842,13 @@ object QueriesPipeline {
     // slice, UPDATE another), but the READ goes purely through the Spark
     // front door: a named `USING graft` view + plain SQL with a pushed
     // range-and-inequality predicate — no library read call anywhere in
-    // the result path. The relation (sources/GraftSource.scala) routes
-    // the pushed filters into liveFilesWhere's skipping index before any
-    // file is enumerated; GraftSourceSpec pins the prune counts and the
+    // the result path. The view plans through the catalog's batch scan
+    // (sources/GraftBatchScan.scala), which routes the pushed filters
+    // into liveFilesWhere's skipping index before any file is
+    // enumerated; GraftSourceSpec pins the prune counts and the
     // PushedFilters plan shape, this pins end-to-end exactness: a filter
     // dropped in translation, a DV leak through readFiles, or a
-    // partition column mis-cast by the relation breaks the hash.
+    // partition column mis-cast by the scan breaks the hash.
     "q111_datasource_read" -> ((s, dir) => {
       import s.implicits._
       val tmp = graft.QueryTmp.dir("graft_q111_")

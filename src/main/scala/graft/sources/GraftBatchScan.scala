@@ -13,36 +13,36 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
 
 import graft.table.IncrementalTable
 
-/** The DSv2 BATCH scan for catalog-addressed graft tables — the front
-  * door that unlocks RUNTIME FILTERING (VERDICT r9 #4).
+/** The one batch scan of graft tables, behind both front doors:
+  * `format("graft")` / `USING graft` views ([[GraftPathTable]]) and
+  * `SELECT … FROM graft.ns.t` ([[GraftTable]]), built by
+  * [[GraftScanBuilder]].
   *
-  * Why it exists: the V1 bridge ([[GraftV1Scan]]) plans through
-  * Spark's `V1ScanWrapper`, which forwards neither
-  * `SupportsRuntimeFiltering` nor `SupportsReportStatistics` — so a
-  * star-join's selective dim filter could never prune graft fact
-  * FILES at runtime (the skipping index only ever saw static
-  * predicates), the first join-perf wall at 100×. Planning as a true
-  * `Batch` puts the scan inside `BatchScanExec`, where Spark's
-  * dynamic partition pruning hands the dim side's materialized join
-  * keys to [[filter]] as an `In` filter; the re-planned partitions
-  * then flow through the SAME skipping-index prune + row-level filter
-  * as any static predicate. At 100 TB: the dim subquery is tiny, the
-  * In-list broadcast is tiny, and whole fact files drop before a
-  * byte is read.
+  * Planning as a true DSv2 `Batch` puts the scan inside
+  * `BatchScanExec`, where Spark's dynamic partition pruning hands the
+  * dim side's materialized join keys to [[filter]] as an `In` filter
+  * (VERDICT r9 #4); the re-planned partitions then flow through the
+  * SAME skipping-index prune + row-level filter as any static
+  * predicate. At 100 TB: the dim subquery is tiny, the In-list
+  * broadcast is tiny, and whole fact files drop before a byte is read.
+  * The static planner reads [[estimateStatistics]] directly, so a small
+  * graft table broadcasts without hints.
   *
-  * How it executes, without a second read path: `planInputPartitions`
-  * builds the exact same pruned Catalyst plan as the V1 bridge
-  * ([[GraftRelation.scanDf]] — survivor files, DV anti-join, column
-  * mapping, row-level predicate, pruned projection) and exposes the
-  * plan's own `InternalRow` RDD partition-by-partition. The plan is
-  * narrow by construction (parquet scan + broadcast DV anti-join —
+  * How it executes: `planInputPartitions` builds the pruned Catalyst
+  * plan of [[GraftRelation.scanDf]] (survivor files, DV anti-join,
+  * column mapping, row-level predicate, pruned projection) and exposes
+  * the plan's own `InternalRow` RDD partition-by-partition. The plan
+  * is narrow by construction (parquet scan + broadcast DV anti-join —
   * no shuffle), so each partition computes independently inside the
-  * reader's task; this also drops the V1 path's double
-  * InternalRow→Row→InternalRow bridge. Statistics and the streaming
-  * twin delegate to the V1 scan — one implementation of each.
+  * reader's task, with no `Row` round trip.
   *
-  * Escape hatch: `spark.graft.catalog.v1scan=true` restores the V1
-  * bridge. */
+  * The file prune runs once per filter set: the cost estimate, the
+  * partition plan and the SPJ grouping all read one memoised survivor
+  * list (on a columnar-checkpointed table the prune is a Spark job).
+  *
+  * The streaming twin ([[toMicroBatchStream]]) is one rule for both
+  * doors; a change feed needs the scan's schema to carry the CDC
+  * columns, which only the path door's `readChangeFeed` read does. */
 private[graft] final class GraftBatchScan(spark: SparkSession,
     table: IncrementalTable, asOf: Option[Long],
     required: StructType, pushed: Array[Filter],
@@ -58,17 +58,34 @@ private[graft] final class GraftBatchScan(spark: SparkSession,
     with SupportsReportPartitioning
     with SupportsReportStatistics {
 
-  // stats + streaming: the V1 scan is the single home of both
-  private val v1 = new GraftV1Scan(spark, table, asOf, required, pushed,
-    readOptions)
-
   /** Runtime filters arrive between planning and execution
     * (BatchScanExec calls [[filter]] then re-plans partitions);
     * volatile because AQE may touch the scan from its own threads. */
   @volatile private var runtime: Array[Filter] = Array.empty
 
+  private def key(fs: Array[Filter]): String =
+    fs.map(_.toString).sorted.mkString("&")
+
+  // one skipping-index prune per distinct filter set, shared by the
+  // cost estimate, the partition plan and the SPJ grouping
+  @transient private lazy val pruneMemo = new java.util.concurrent
+    .ConcurrentHashMap[String, (Option[org.apache.spark.sql.Column], Seq[String])]()
+
+  private def pruned(fs: Array[Filter]): (Option[org.apache.spark.sql.Column], Seq[String]) =
+    pruneMemo.computeIfAbsent(key(fs),
+      _ => GraftRelation.pruneFiles(table, asOf, fs.toIndexedSeq))
+
   override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+
+  /** A batch read of the change feed has its own spellings; the
+    * `readChangeFeed` option is the streaming one. */
+  override def toBatch: Batch = {
+    require(!GraftSource.cdcMode(readOptions),
+      s"readChangeFeed is a streaming read option (${table.root}); read a " +
+        "batch change feed with graft_changes(path, fromVersion[, toVersion]) " +
+        "in SQL, IncrementalTable.changes, or a catalog table's `<table>.changes`")
+    this
+  }
 
   // ---- storage-partitioned joins (X96) --------------------------------
   // When the user opts into Spark's v2 bucketing
@@ -133,8 +150,7 @@ private[graft] final class GraftBatchScan(spark: SparkSession,
         if (specs.exists(_.isEmpty)) None
         else {
           val parsers = specs.map(_.get._2)
-          val (pred, files) = GraftRelation.pruneFiles(table, asOf,
-            pushed.toIndexedSeq)
+          val (pred, files) = pruned(pushed)
           val maxGroups = spark.conf
             .getOption("spark.graft.spjMaxPartitions")
             .map(_.toInt).getOrElse(1024)
@@ -182,16 +198,15 @@ private[graft] final class GraftBatchScan(spark: SparkSession,
   override def filter(filters: Array[Filter]): Unit =
     runtime = filters.filter(f => GraftRelation.translate(f).isDefined)
 
-  // one prune + plan per distinct filter set: BatchScanExec may ask for
+  // one plan per distinct filter set: BatchScanExec may ask for
   // partitions both before and after runtime filters arrive (and AQE
-  // may re-ask) — the skipping-index prune is a metadata job on
-  // checkpointed tables and must not re-run per ask
+  // may re-ask)
   @transient private lazy val planMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Array[InputPartition]]()
 
   override def planInputPartitions(): Array[InputPartition] = {
     val all = pushed ++ runtime
-    planMemo.computeIfAbsent(all.map(_.toString).sorted.mkString("&"),
+    planMemo.computeIfAbsent(key(all),
       _ => spjPlan match {
         case Some(p) => planKeyed(p)
         case None => planPartitions(all)
@@ -205,17 +220,28 @@ private[graft] final class GraftBatchScan(spark: SparkSession,
   private def planKeyed(p: SpjPlan): Array[InputPartition] = {
     val cols = required.fieldNames.toIndexedSeq
     p.groups.flatMap { case (key, files) =>
-      val df = GraftRelation.scanDf(table, asOf, cols,
-        pushed.toIndexedSeq, Some((p.pred, files)))
-      val rdd = df.queryExecution.toRdd
-      forceDeps(rdd)
+      val rdd = rddOf(GraftRelation.scanDf(table, asOf, cols,
+        pushed.toIndexedSeq, (p.pred, files)))
       rdd.partitions.map(sp => GraftKeyedRddPartition(rdd, sp, key))
     }.toArray
   }
 
-  private def forceDeps(r: RDD[_]): Unit = {
-    r.partitions
-    r.dependencies.foreach(d => forceDeps(d.rdd))
+  /** The plan's own InternalRow RDD with every node's dependency chain
+    * populated on the DRIVER — the walk the DAGScheduler does for its
+    * own stages. UnionRDD.compute (an evolved-spec table reads old+new
+    * layout file sets as a union) resolves parents through
+    * `dependencies`, whose lazy init needs child `.partitions` —
+    * driver-only state (FileScanRDD's filePartitions is transient).
+    * With deps cached before serialization, executors never recompute
+    * them. */
+  private def rddOf(df: org.apache.spark.sql.DataFrame): RDD[InternalRow] = {
+    def forceDeps(r: RDD[_]): Unit = {
+      r.partitions
+      r.dependencies.foreach(d => forceDeps(d.rdd))
+    }
+    val rdd = df.queryExecution.toRdd
+    forceDeps(rdd)
+    rdd
   }
 
   private def planPartitions(all: Array[Filter]): Array[InputPartition] = {
@@ -226,40 +252,89 @@ private[graft] final class GraftBatchScan(spark: SparkSession,
     val reduced: Option[Seq[String]] =
       if (all.nonEmpty || (limitN.isEmpty && topN.isEmpty)) None
       else {
-        val (_, files) = GraftRelation.pruneFiles(table, asOf, Nil)
+        val (_, files) = pruned(all)
         topN match {
           case Some((c, desc, nf, k)) =>
             table.topNFiles(files, c, k.toLong, desc, nf, asOf)
           case None => Some(table.limitFiles(files, limitN.get.toLong, asOf))
         }
       }
+    val cols = required.fieldNames.toIndexedSeq
     val df = reduced match {
-      case Some(files) => GraftRelation.scanDf(table, asOf,
-        required.fieldNames.toIndexedSeq, Nil, Some((None, files)))
-      case None => GraftRelation.scanDf(table, asOf,
-        required.fieldNames.toIndexedSeq, all.toIndexedSeq)
+      case Some(files) =>
+        GraftRelation.scanDf(table, asOf, cols, Nil, (None, files))
+      case None =>
+        GraftRelation.scanDf(table, asOf, cols, all.toIndexedSeq, pruned(all))
     }
-    val rdd = df.queryExecution.toRdd
-    // Populate every node's dependency chain on the DRIVER — the walk
-    // the DAGScheduler does for its own stages. UnionRDD.compute (an
-    // evolved-spec table reads old+new layout file sets as a union)
-    // resolves parents through `dependencies`, whose lazy init needs
-    // child `.partitions` — driver-only state (FileScanRDD's
-    // filePartitions is transient). With deps cached before
-    // serialization, executors never recompute them.
-    forceDeps(rdd)
+    val rdd = rddOf(df)
     rdd.partitions.map(p => GraftRddPartition(rdd, p))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     GraftRddReaderFactory
 
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    v1.estimateStatistics()
+  /** Post-pushdown cost estimate from the commit log: with pushed
+    * filters, the sizes of exactly the files the skipping index keeps
+    * (the memoised prune the partition plan reads too); without, one
+    * log-level total plus the exact metadata row count (the COUNT(*)
+    * fold incl. its dv correction — None for stats-less files, never a
+    * wrong number) and the column NDV estimates (X88), which reach
+    * CostBasedJoinReorder through `DataSourceV2Relation.computeStats`. */
+  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
+    val bytes =
+      if (pushed.isEmpty) table.liveBytes(asOf)
+      else table.liveFilesSize(pruned(pushed)._2)
+    val rows = if (pushed.isEmpty) table.liveRowCount(asOf) else None
+    val ndv: Map[String, Long] =
+      if (pushed.isEmpty) table.columnNdv(asOf) else Map.empty
+    new org.apache.spark.sql.connector.read.Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(bytes)
+      override def numRows(): java.util.OptionalLong =
+        rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
+      override def columnStats(): java.util.Map[NamedReference,
+          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
+        val m = new java.util.HashMap[NamedReference,
+          org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
+        ndv.foreach { case (c, est) =>
+          if (required.fieldNames.contains(c))
+            m.put(Expressions.column(c),
+              new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
+                override def distinctCount(): java.util.OptionalLong =
+                  java.util.OptionalLong.of(est)
+              })
+        }
+        m
+      }
+    }
+  }
 
+  /** `readStream.format("graft")` and `readStream.table("graft.ns.t")`
+    * land here (the engine asks the scan for its streaming twin), with
+    * one option set — `readChangeFeed`, `startingVersion`/
+    * `startingTimestamp`, `maxCommitsPerTrigger`, `skipChangeCommits`,
+    * `cdcRetention` — passed as reader options. Filters/pruning do not
+    * apply to the stream (the micro-batch source emits commit deltas,
+    * not snapshot scans). */
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    v1.toMicroBatchStream(checkpointLocation)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    require(asOf.isEmpty,
+      s"cannot stream from time-travel snapshot ${table.root}@v${asOf.get}")
+    // the stream's rows must match the relation's schema, which was
+    // pinned at analysis: the CDC columns ride the path door's
+    // `readChangeFeed` schema, never a catalog table's — there the
+    // `.changes` metadata table IS the spelling of the feed
+    require(!GraftSource.cdcMode(readOptions) ||
+        required.fieldNames.contains("_change_type"),
+      "readChangeFeed is not an option on a catalog-addressed stream " +
+        "(the relation's schema is fixed by the table) — stream from the " +
+        "`<table>.changes` metadata table instead")
+    val t =
+      if (readOptions.contains("cdcRetention"))
+        GraftSource.tableFromOptions(spark, readOptions + ("path" -> table.root))
+      else table
+    GraftSource.microBatchStream(spark, t, readOptions, checkpointLocation)
+  }
 
   override def description(): String =
     s"GraftBatchScan ${table.root}${asOf.fold("")(v => s"@v$v")} " +

@@ -37,8 +37,8 @@ import graft.table.IncrementalTable
   *   - `DELETE FROM graft.ns.t WHERE …` — translated predicates route
   *     into [[IncrementalTable.delete]]'s skipping-pruned copy-on-write
   *   - `SELECT … FROM graft.ns.t [VERSION AS OF v | TIMESTAMP AS OF ts]`
-  *     — reads bridge through [[V1Scan]] into the SAME pruned scan as
-  *     `format("graft")` ([[GraftRelation.scanDf]]): pushed filters hit
+  *     — reads plan through the SAME DSv2 scan as `format("graft")`
+  *     ([[GraftScanBuilder]] → [[GraftBatchScan]]): pushed filters hit
   *     the log-level stats index before any file enumeration, partition
   *     equality prunes directories, DVs apply in-scan, column pruning
   *     reaches the parquet ReadSchema
@@ -51,11 +51,9 @@ import graft.table.IncrementalTable
   * (reference analog: the IO manager resolves assets by path,
   * delta_io.py:118-129, here lifted to names).
   *
-  * The read/write bridges are the stable V1 fallback interfaces
-  * ([[V1Scan]]/[[V1Write]] — the same contract Spark's own JDBC
-  * connector ships on), so the scan/commit machinery is shared verbatim
-  * with the path-based front door rather than re-implemented against
-  * `InputPartition`.
+  * Writes bridge through the stable [[V1Write]] interface (the same
+  * contract Spark's own JDBC connector ships on) into the table's OCC
+  * commit path, shared verbatim with the path-based front door.
   */
 final class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with FunctionCatalog {
@@ -132,7 +130,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     * (commit log), `.detail` (live-snapshot summary), `.properties` —
     * resolved when the identifier's LAST namespace element is a graft
     * table and the name is a known view. Read-only, tiny, driver-built
-    * frames bridged through the same V1 scan machinery. */
+    * frames ([[GraftFrameScanBuilder]]). */
   private def metaTableOf(ident: Identifier): Option[Table] = {
     if (ident.namespace.isEmpty ||
         !GraftMetaTable.views.contains(ident.name)) return None
@@ -527,10 +525,10 @@ object GraftCatalog {
       .equalsIgnoreCase("true"))
 }
 
-/** One named graft table in the catalog. Reads bridge through
-  * [[V1Scan]] to [[GraftRelation.scanDf]] (shared with the path-based
-  * front door), writes through [[V1Write]] to the table's OCC commit
-  * path, `DELETE FROM` through [[SupportsDelete]] to the
+/** One named graft table in the catalog. Reads plan through
+  * [[GraftScanBuilder]] → [[GraftBatchScan]] (shared with the
+  * path-based front door), writes through [[V1Write]] to the table's
+  * OCC commit path, `DELETE FROM` through [[SupportsDelete]] to the
   * skipping-pruned copy-on-write delete. `asOf` pins a time-travel
   * snapshot (read-only). */
 private[graft] final class GraftTable(spark: SparkSession,
@@ -626,11 +624,13 @@ private[graft] final class GraftTable(spark: SparkSession,
   }
 }
 
-/** Standard DSv2 pushdown surface; everything pushed lands in
-  * [[GraftRelation.scanDf]] exactly as the V1 relation's
-  * `PrunedFilteredScan` contract does. Translated filters are applied
-  * in FULL inside the scan (file pruning and row filtering), so they
-  * are accepted; untranslatable ones stay residual for Spark. */
+/** The DSv2 pushdown surface of both front doors (catalog tables and
+  * `format("graft")`); everything pushed lands in
+  * [[GraftRelation.scanDf]]. Translated filters are applied in FULL
+  * inside the scan (file pruning and row filtering), so they are
+  * accepted; untranslatable ones stay residual for Spark. A
+  * `readChangeFeed` read pushes no aggregate: its rows are changes, not
+  * the snapshot the log's tallies describe. */
 private[sources] final class GraftScanBuilder(spark: SparkSession,
     table: IncrementalTable, asOf: Option[Long], fullSchema: StructType,
     readOptions: Map[String, String] = Map.empty)
@@ -640,6 +640,7 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
 
+  private val cdc = GraftSource.cdcMode(readOptions)
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = fullSchema
   private var limitN: Option[Int] = None
@@ -776,7 +777,7 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
   private def analyzed(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[Seq[AggField]] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty ||
+    if (cdc || pushed.nonEmpty || agg.groupByExpressions.nonEmpty ||
         agg.aggregateExpressions.isEmpty) return None
     val outs: Seq[Option[AggField]] = agg.aggregateExpressions.toIndexedSeq.map {
       case _: CountStar => metadataRowCount.map(n =>
@@ -806,7 +807,7 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val gb = agg.groupByExpressions
-    if (pushed.nonEmpty || gb.isEmpty || agg.aggregateExpressions.isEmpty)
+    if (cdc || pushed.nonEmpty || gb.isEmpty || agg.aggregateExpressions.isEmpty)
       return None
     val transforms = table.partitionTransforms(asOf)
     val pcols = table.partitionColumns
@@ -972,51 +973,37 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
   }
 
   override def build(): Scan = pushedAgg match {
-    case Some(fields) => new GraftAggScan(spark, table, fields)
+    case Some(fields) => new GraftAggScan(table, fields)
     case None if pushedGroupAgg.isDefined =>
       val (schema, rows) = pushedGroupAgg.get
       new GraftGroupAggScan(table, schema, rows)
-    // default: the DSv2 Batch scan — same pruned plan, planned inside
-    // BatchScanExec where runtime filtering (DPP) reaches the skipping
-    // index (VERDICT r9 #4); `spark.graft.catalog.v1scan=true` restores
-    // the V1 bridge
-    case None if spark.conf.getOption("spark.graft.catalog.v1scan")
-        .exists(_.toBoolean) =>
-      new GraftV1Scan(spark, table, asOf, required, pushed, readOptions)
     case None => new GraftBatchScan(spark, table, asOf, required, pushed,
       readOptions, limitN, topN)
   }
 }
 
 /** The pushed-aggregate scan: ONE row, straight from the log —
-  * `COUNT(*)` / integral `MIN`/`MAX` answers in declaration order. */
-private[sources] final class GraftAggScan(spark: SparkSession,
-    table: IncrementalTable,
+  * `COUNT(*)` / integral `MIN`/`MAX` answers in declaration order.
+  * Executes as a LocalScan (LocalTableScanExec): zero data files, zero
+  * tasks. */
+private[sources] final class GraftAggScan(table: IncrementalTable,
     fields: Seq[(String, Any, org.apache.spark.sql.types.DataType)])
-    extends V1Scan {
-  private val outSchema = StructType(fields.map { case (n, _, dt) =>
+    extends org.apache.spark.sql.connector.read.LocalScan {
+  // filesLive = -1: the metadata-only path must not itself run the
+  // liveFileCount job (a Spark job on checkpointed tables) just for
+  // accounting — the sentinel says "not computed", filesScanned = 0
+  // is the assertion that matters
+  GraftRelation.record(table.root,
+    GraftScanInfo(-1L, 0,
+      Seq(s"${fields.map(_._1).mkString(",")} [metadata-only]")))
+  override def readSchema(): StructType = StructType(fields.map { case (n, _, dt) =>
     org.apache.spark.sql.types.StructField(n, dt, nullable = true)
   })
-  override def readSchema(): StructType = outSchema
+  override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
+    Array(org.apache.spark.sql.catalyst.InternalRow.fromSeq(fields.map(f =>
+      org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(f._2))))
   override def description(): String =
     s"GraftAggScan ${table.root} ${fields.map(_._1).mkString(",")} (metadata-only)"
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    // filesLive = -1: the metadata-only path must not itself run the
-    // liveFileCount job (a Spark job on checkpointed tables) just for
-    // accounting — the sentinel says "not computed", filesScanned = 0
-    // is the assertion that matters
-    GraftRelation.record(table.root,
-      GraftScanInfo(-1L, 0,
-        Seq(s"${fields.map(_._1).mkString(",")} [metadata-only]")))
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = spark.sqlContext
-      override def schema: StructType = outSchema
-      override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-        spark.sparkContext.parallelize(
-          Seq(org.apache.spark.sql.Row.fromSeq(fields.map(_._2))), 1)
-    }.asInstanceOf[T]
-  }
 }
 
 /** The pushed GROUP-BY-partition aggregate scan (X106): one row per
@@ -1037,131 +1024,6 @@ private[sources] final class GraftGroupAggScan(table: IncrementalTable,
   override def description(): String =
     s"GraftGroupAggScan ${table.root} ${outSchema.fieldNames.mkString(",")} " +
       "(metadata-only)"
-}
-
-/** The stable V1 fallback bridge: Spark plans this scan as a
-  * `RowDataSourceScanExec` over the relation below — the same execution
-  * shape as the `format("graft")` path, so one scan implementation
-  * serves both front doors. */
-private[graft] final class GraftV1Scan(spark: SparkSession,
-    table: IncrementalTable, asOf: Option[Long],
-    required: StructType, pushed: Array[Filter],
-    readOptions: Map[String, String] = Map.empty)
-    extends V1Scan
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-
-  /** `spark.readStream.table("graft.ns.t")` lands here (the engine
-    * asks the batch-planned scan for its streaming twin): same option
-    * set as the path front door — `readChangeFeed`, `startingVersion`/
-    * `startingTimestamp`, `maxCommitsPerTrigger`, `skipChangeCommits`,
-    * `cdcRetention` — passed as reader options. Filters/pruning do not
-    * apply to the stream (the micro-batch source emits commit deltas,
-    * not snapshot scans). */
-  override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require(asOf.isEmpty,
-      s"cannot stream from time-travel snapshot ${table.root}@v${asOf.get}")
-    // a catalog relation's schema is pinned at analysis from the TABLE,
-    // so the CDC columns cannot appear through an option here — the
-    // `.changes` metadata table IS the catalog spelling of the feed
-    require(!GraftSource.cdcMode(readOptions),
-      "readChangeFeed is not an option on a catalog-addressed stream " +
-        "(the relation's schema is fixed by the table) — stream from the " +
-        "`<table>.changes` metadata table instead")
-    val t = GraftSource.parseOpt(readOptions, "cdcRetention",
-        "a non-negative integer")(_.toInt) match {
-      case Some(r) => new IncrementalTable(spark, table.root, cdcRetention = r)
-      case None => table
-    }
-    GraftSource.microBatchStream(spark, t, readOptions, checkpointLocation)
-  }
-
-  // the prune runs ONCE per scan instance — the cost estimate at
-  // planning and the row bridge at execution share the survivor list
-  // (which also pins the scan to one snapshot's file set)
-  private lazy val prunedOnce: (Option[org.apache.spark.sql.Column], Seq[String]) =
-    GraftRelation.pruneFiles(table, asOf, pushed.toIndexedSeq)
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftV1TableScan(spark, table, asOf, required, pushed, prunedOnce)
-      .asInstanceOf[T]
-
-  /** Post-pushdown cost estimate from the commit log: with pushed
-    * filters, the sizes of exactly the files the skipping index keeps
-    * (O(survivors) driver statuses — pruning already bounded them);
-    * without, one log-level total plus the exact metadata row count
-    * (the COUNT(*) fold incl. its dv correction).
-    *
-    * HONESTY NOTE (probed in-round): Spark's V2ScanRelationPushDown
-    * wraps every V1Scan in `V1ScanWrapper`, which does NOT forward
-    * SupportsReportStatistics — so the STATIC planner never consults
-    * this on the catalog path today; AQE's runtime sizes drive the
-    * broadcast/re-plan decisions there. The path-based front door's
-    * `BaseRelation.sizeInBytes` (GraftRelation) is what static join
-    * planning actually reads. This surface stays implemented (and
-    * spec-pinned) for the day the wrapper forwards it — the numbers
-    * are exact either way. */
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val bytes =
-      if (pushed.isEmpty) table.liveBytes(asOf)
-      else table.liveFilesSize(prunedOnce._2)
-    // exact row count from the log's per-file tallies when the scan is
-    // unfiltered (same metadata fold the COUNT(*) pushdown rides, incl.
-    // its dv correction) — CBO then plans joins against a REAL
-    // cardinality, not a bytes/row guess; None (stats-less files,
-    // pushed filters) leaves the estimate to Spark, never a wrong
-    // number
-    val rows =
-      if (pushed.isEmpty) table.liveRowCount(asOf) else None
-    // Column NDV (X88): the running HLL estimates reach the LOGICAL
-    // optimizer through DataSourceV2RelationBase.computeStats (probed:
-    // the relation builds a fresh unfiltered scan and reads
-    // SupportsReportStatistics directly — the V1ScanWrapper gap only
-    // affects the PHYSICAL planner), so CostBasedJoinReorder sees real
-    // per-key cardinalities on graft tables.
-    val ndv: Map[String, Long] =
-      if (pushed.isEmpty) table.columnNdv(asOf) else Map.empty
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
-      override def columnStats(): java.util.Map[
-          org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
-        val m = new java.util.HashMap[
-          org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-        ndv.foreach { case (c, est) =>
-          if (required.fieldNames.contains(c))
-            m.put(org.apache.spark.sql.connector.expressions.Expressions.column(c),
-              new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-                override def distinctCount(): java.util.OptionalLong =
-                  java.util.OptionalLong.of(est)
-              })
-        }
-        m
-      }
-    }
-  }
-
-  override def description(): String =
-    s"GraftScan ${table.root}${asOf.fold("")(v => s"@v$v")} " +
-      s"pushed=[${pushed.mkString(", ")}]"
-}
-
-private[sources] final class GraftV1TableScan(spark: SparkSession,
-    table: IncrementalTable, asOf: Option[Long],
-    required: StructType, pushed: Array[Filter],
-    pruned: (Option[org.apache.spark.sql.Column], Seq[String]))
-    extends BaseRelation with TableScan {
-  override def sqlContext: SQLContext = spark.sqlContext
-  override def schema: StructType = required
-  override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-    GraftRelation.scanDf(table, asOf, required.fieldNames.toIndexedSeq,
-      pushed.toIndexedSeq, Some(pruned)).rdd
 }
 
 /** A read-only metadata view of a graft table (`t.history` /
@@ -1228,28 +1090,7 @@ private[sources] final class GraftMetaTable(spark: SparkSession,
     Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns {
-      private var required: StructType = schema()
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = required
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T = {
-          val req = required
-          new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = spark.sqlContext
-            override def schema: StructType = req
-            override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-              val df = frame
-              (if (req.isEmpty) df.select()
-               else df.select(req.fieldNames.toIndexedSeq.map(
-                 org.apache.spark.sql.functions.col): _*)).rdd
-            }
-          }.asInstanceOf[T]
-        }
-      }
-    }
+    new GraftFrameScanBuilder(spark, frame, s"GraftMetaScan ${table.root} $view")
 }
 
 private[sources] object GraftMetaTable {
@@ -1277,30 +1118,7 @@ private[sources] final class GraftWapTable(spark: SparkSession,
     Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns {
-      private var required: StructType = schema()
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = required
-        override def description(): String =
-          s"GraftWapScan ${table.root} wap:$wapId"
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T = {
-          val req = required
-          new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = spark.sqlContext
-            override def schema: StructType = req
-            override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-              val df = frame
-              (if (req.isEmpty) df.select()
-               else df.select(req.fieldNames.toIndexedSeq.map(
-                 org.apache.spark.sql.functions.col): _*)).rdd
-            }
-          }.asInstanceOf[T]
-        }
-      }
-    }
+    new GraftFrameScanBuilder(spark, frame, s"GraftWapScan ${table.root} wap:$wapId")
 }
 
 /** `SELECT … FROM graft.ns.t VERSION AS OF 'branch:<name>'` — the
@@ -1322,30 +1140,38 @@ private[sources] final class GraftBranchTable(spark: SparkSession,
     Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns {
-      private var required: StructType = schema()
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = required
-        override def description(): String =
-          s"GraftBranchScan ${table.root} branch:$branchName"
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T = {
-          val req = required
-          new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = spark.sqlContext
-            override def schema: StructType = req
-            override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-              val df = frame
-              (if (req.isEmpty) df.select()
-               else df.select(req.fieldNames.toIndexedSeq.map(
-                 org.apache.spark.sql.functions.col): _*)).rdd
-            }
-          }.asInstanceOf[T]
-        }
-      }
+    new GraftFrameScanBuilder(spark, frame,
+      s"GraftBranchScan ${table.root} branch:$branchName")
+}
+
+/** The scan builder of the DataFrame-backed catalog tables (metadata
+  * views, WAP audits, branch heads): column pruning only — the frame is
+  * projected to the required columns and bridged through V1, since a
+  * driver-built frame may carry a shuffle (an `orderBy`) that the
+  * narrow-plan partitions of [[GraftBatchScan]] cannot run. */
+private[sources] final class GraftFrameScanBuilder(spark: SparkSession,
+    frame: DataFrame, describe: String)
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
+  private var required: StructType = frame.schema
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    required = requiredSchema
+  override def build(): Scan = {
+    val req = required
+    new V1Scan {
+      override def readSchema(): StructType = req
+      override def description(): String = describe
+      override def toV1TableScan[T <: BaseRelation with TableScan](
+          context: SQLContext): T =
+        new BaseRelation with TableScan {
+          override def sqlContext: SQLContext = spark.sqlContext
+          override def schema: StructType = req
+          override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
+            (if (req.isEmpty) frame.select()
+             else frame.select(req.fieldNames.toIndexedSeq.map(
+               org.apache.spark.sql.functions.col): _*)).rdd
+        }.asInstanceOf[T]
     }
+  }
 }
 
 /** The change-data-feed relation of a graft table, addressable by name:

@@ -2,8 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -15,69 +14,45 @@ import graft.table.IncrementalTable
   * `CREATE TEMPORARY VIEW t USING graft OPTIONS (path '…')` followed by
   * plain `SELECT … FROM t` — the "engine opens the table by name"
   * contract of the reference's IO-manager read path
-  * (delta_io.py:118-129), expressed as a Spark V1 relation.
+  * (delta_io.py:118-129).
   *
-  * Read path: [[GraftRelation]] is a `PrunedFilteredScan`, so Catalyst
-  * hands it the pushed predicates and the pruned column set. Pushed
+  * Read path: the provider is a DSv2 `TableProvider` whose table
+  * ([[GraftPathTable]]) advertises `BATCH_READ`, so Spark's
+  * `DataFrameReader` and `CREATE TEMPORARY VIEW … USING` plan batch
+  * reads through the catalog's scan builder ([[GraftScanBuilder]] →
+  * [[GraftBatchScan]]) — ONE scan behind both front doors. Pushed
   * filters route into the table's log-level data-skipping index
-  * ([[IncrementalTable.liveFilesWhere]]) BEFORE Spark enumerates any
-  * file — on a clustered 100 TB table a narrow range predicate opens a
-  * handful of files out of millions, and only the survivors' names ever
-  * reach the driver (the prune itself runs as a Spark job above the
-  * checkpoint threshold). Partition-column equality additionally prunes
-  * at directory granularity, and deletion vectors apply inside the scan
-  * exactly as [[IncrementalTable.read]] does. Column pruning reaches
-  * the parquet scan because the projection is applied to the inner
-  * DataFrame plan before it is bridged to the V1 row RDD.
+  * ([[IncrementalTable.liveFilesWhere]]) before any file is enumerated,
+  * partition equality prunes at directory granularity, deletion
+  * vectors apply in-scan, column pruning reaches the parquet
+  * ReadSchema, and runtime filters (DPP), LIMIT/TOP-N and metadata
+  * COUNT/MIN/MAX pushdown apply exactly as they do to
+  * `SELECT … FROM graft.ns.t`.
   *
-  * Write path: `df.write.format("graft").mode(…).save(path)` maps
-  * Append → [[IncrementalTable.append]] and Overwrite →
+  * Write path: no table advertises `BATCH_WRITE`, so
+  * `df.write.format("graft").mode(…).save(path)` falls back to the V1
+  * [[CreatableRelationProvider]] below: Append →
+  * [[IncrementalTable.append]], Overwrite →
   * [[IncrementalTable.replaceWhere]] with an empty filter (a full,
-  * atomic, OCC-checked overwrite) — so SQL-level `INSERT INTO` /
-  * `INSERT OVERWRITE` on a `USING graft` view commit through the same
-  * log as the library API, with the same conflict detection.
+  * atomic, OCC-checked overwrite) — the same log as the library API,
+  * with the same conflict detection. A `USING graft` view is read-only;
+  * SQL writes go through the catalog (`INSERT INTO graft.ns.t`).
   *
-  * Options: `path` (required), `versionAsOf` (time travel),
+  * Options: `path` (required), `versionAsOf` (batch time travel),
   * `partitionBy` (writes: comma-separated; defaults to the table's
-  * committed layout).
+  * committed layout), and the streaming options of
+  * [[GraftSource.microBatchStream]].
   */
-final class GraftSource extends RelationProvider with SchemaRelationProvider
-    with CreatableRelationProvider with DataSourceRegister
+final class GraftSource extends CreatableRelationProvider
+    with DataSourceRegister
     with org.apache.spark.sql.connector.catalog.TableProvider {
 
   override def shortName(): String = "graft"
 
-  private def pathOf(parameters: Map[String, String]): String =
-    parameters.getOrElse("path", throw new IllegalArgumentException(
-      "graft datasource requires a 'path' option (or load(path)/save(path))"))
-
-  private def tableOf(sqlContext: SQLContext,
-      parameters: Map[String, String]): IncrementalTable =
-    IncrementalTable(sqlContext.sparkSession, pathOf(parameters))
-
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val t = tableOf(sqlContext, parameters)
-    val asOf = parameters.get("versionAsOf").map(_.toLong)
-    require(t.exists, s"graft table ${t.root} has no commits")
-    GraftRelation(sqlContext.sparkSession, t, asOf)
-  }
-
-  /** User-supplied schema is accepted only when it matches the committed
-    * one — the log is authoritative (a mismatched schema would silently
-    * mis-cast partition columns on read). */
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String], schema: StructType): BaseRelation = {
-    val rel = createRelation(sqlContext, parameters)
-    require(rel.schema == schema,
-      s"user-specified schema $schema does not match committed table " +
-        s"schema ${rel.schema}; omit the schema — the commit log is authoritative")
-    rel
-  }
-
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
       parameters: Map[String, String], data: DataFrame): BaseRelation = {
-    val t = tableOf(sqlContext, parameters)
+    val t = IncrementalTable(sqlContext.sparkSession,
+      GraftSource.pathOf(parameters))
     val partitionBy = parameters.get("partitionBy")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(if (t.exists) t.partitionColumns else Seq.empty)
@@ -129,63 +104,64 @@ final class GraftSource extends RelationProvider with SchemaRelationProvider
           t.append(data, partitionBy, statsColumns = stats)
         }
     }
-    GraftRelation(sqlContext.sparkSession, t, None)
-  }
-
-  // ---------------------------------------------------- DSv2 (streaming)
-  // The TableProvider face serves STREAMING only: the returned table
-  // advertises MICRO_BATCH_READ + STREAMING_WRITE and nothing else, so
-  // Spark's batch read/write paths fall back to the V1 relations above
-  // (probed and spec-pinned: V2FallbackProbeSpec) — `read`/`write`
-  // semantics, SaveModes included, are byte-identical to round 7, while
-  // `readStream`/`writeStream` ride the public connector interfaces
-  // ([[GraftMicroBatchStream]]/[[GraftStreamingWrite]]) instead of the
-  // retired `execution.streaming.Source`/`Sink` internals.
-
-  /** The engine hands back whatever this returns when the user omits
-    * the schema; a user-specified schema arrives at [[getTable]] and is
-    * validated there. A table with no commits yet (a writeStream target
-    * about to be created by its first epoch) has no schema to infer. */
-  override def inferSchema(options: org.apache.spark.sql.util.CaseInsensitiveStringMap): StructType = {
-    val params = GraftSource.paramsOf(options)
-    val t = IncrementalTable(SparkSession.active, pathOf(params))
-    t.schemaAt() match {
-      case Some(committed) =>
-        if (GraftSource.cdcMode(params)) GraftSource.cdcSchema(committed)
-        else committed
-      case None => new StructType()
+    // schema-only: Spark reads nothing from the returned relation but
+    // its schema (to re-cache plans over the written path)
+    val (ctx, written) = (sqlContext, data.schema)
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = written
     }
   }
 
+  // --------------------------------------------------------------- DSv2
+  // Spark calls inferSchema and then getTable on ONE provider instance
+  // per read (DataSourceV2Utils.getTableFromProvider), so the handle
+  // opened for the schema is the handle the table scans: one log
+  // replay per path-door read.
+  private var opened: Option[(Map[String, String], IncrementalTable)] = None
+
+  private def tableOf(params: Map[String, String]): IncrementalTable =
+    opened match {
+      case Some((p, t)) if p == params => t
+      case _ =>
+        val t = GraftSource.tableFromOptions(SparkSession.active, params)
+        opened = Some((params, t))
+        t
+    }
+
+  /** The engine hands back whatever this returns when the user omits
+    * the schema; a user-specified schema arrives at [[getTable]] and is
+    * validated there. The schema is the one AS OF `versionAsOf`. A
+    * table with no commits yet (a writeStream target about to be
+    * created by its first epoch) has no schema to infer. */
+  override def inferSchema(options: org.apache.spark.sql.util.CaseInsensitiveStringMap): StructType = {
+    val params = GraftSource.paramsOf(options)
+    GraftSource.readSchema(tableOf(params), params).getOrElse(new StructType())
+  }
+
   /** Accepting external metadata lets `spark.read.format("graft")
-    * .schema(…)` keep reaching the V1 SchemaRelationProvider (the
-    * engine would otherwise refuse before the V1 fallback could run);
-    * the schema itself is still validated against the log. */
+    * .schema(…)` and batch writes reach [[getTable]] with their own
+    * schema; it is validated against the log there. */
   override def supportsExternalMetadata(): Boolean = true
 
   override def getTable(schema: StructType,
       partitioning: Array[org.apache.spark.sql.connector.expressions.Transform],
       properties: java.util.Map[String, String]): org.apache.spark.sql.connector.catalog.Table = {
     val params = properties.asScala.toMap
-    val spark = SparkSession.active
-    val t = GraftSource.tableFromOptions(spark, params)
-    t.schemaAt().foreach { committed =>
-      val expected =
-        if (GraftSource.cdcMode(params)) GraftSource.cdcSchema(committed)
-        else committed
+    val t = tableOf(params)
+    GraftSource.readSchema(t, params).foreach { expected =>
       // Common fields must type-match (modulo nullability); extra or
       // missing fields pass. The engine routes BATCH WRITES through here
       // too (before the V1 fallback), handing the incoming frame's
       // schema — whose non-null flags and add-column evolution are
-      // legitimate; genuinely wrong user schemas (renamed columns, type
-      // changes) still fail here, and batch reads re-validate exactly in
-      // the V1 relation.
+      // legitimate; genuinely wrong user schemas (type changes) fail.
       require(schema.isEmpty || schema.fields.forall(f =>
           expected.fields.find(_.name == f.name).forall(
             _.dataType.catalogString == f.dataType.catalogString)),
-        "omit the schema — the commit log is authoritative")
+        s"user-specified schema $schema does not match committed table " +
+          s"schema $expected; omit the schema — the commit log is authoritative")
     }
-    new GraftStreamingTable(spark, t, params)
+    new GraftPathTable(SparkSession.active, t, params)
   }
 }
 
@@ -195,8 +171,23 @@ private[sources] object GraftSource {
   def paramsOf(options: org.apache.spark.sql.util.CaseInsensitiveStringMap): Map[String, String] =
     options.asCaseSensitiveMap().asScala.toMap
 
+  def pathOf(parameters: Map[String, String]): String =
+    parameters.getOrElse("path", throw new IllegalArgumentException(
+      "graft datasource requires a 'path' option (or load(path)/save(path))"))
+
   def cdcMode(parameters: Map[String, String]): Boolean =
     parameters.get("readChangeFeed").exists(_.toBoolean)
+
+  def asOfOf(parameters: Map[String, String]): Option[Long] =
+    parseOpt(parameters, "versionAsOf", "a commit version")(_.toLong)
+
+  /** The schema a path-door read of `parameters` carries: the committed
+    * schema as of `versionAsOf`, plus the CDC columns under
+    * `readChangeFeed`; None before the table's first commit. */
+  def readSchema(t: IncrementalTable,
+      parameters: Map[String, String]): Option[StructType] =
+    t.schemaAt(asOfOf(parameters)).map(s =>
+      if (cdcMode(parameters)) cdcSchema(s) else s)
 
   /** Parse option `name` with `f`, failing with a message that names
     * the offending option and carries the accepted renderings (ADVICE
@@ -250,8 +241,7 @@ private[sources] object GraftSource {
     * `cdcRetention` needs a handle constructed with the retention. */
   def tableFromOptions(spark: SparkSession,
       parameters: Map[String, String]): IncrementalTable = {
-    val path = parameters.getOrElse("path", throw new IllegalArgumentException(
-      "graft datasource requires a 'path' option (or load(path)/save(path))"))
+    val path = pathOf(parameters)
     parseOpt(parameters, "cdcRetention", "a non-negative integer")(_.toInt) match {
       case Some(r) => new IncrementalTable(spark, path, cdcRetention = r)
       case None => IncrementalTable(spark, path)
@@ -298,12 +288,15 @@ private[sources] object GraftSource {
   }
 }
 
-/** The streaming-only DSv2 table behind `format("graft")`:
-  * MICRO_BATCH_READ + STREAMING_WRITE and nothing else (batch falls
-  * back to the V1 relations — see the provider note). Scan options are
-  * the READER's options (they rode getTable's properties), write
-  * options the writer's. */
-private[sources] final class GraftStreamingTable(spark: SparkSession,
+/** The DSv2 table behind `format("graft")`: BATCH_READ +
+  * MICRO_BATCH_READ + STREAMING_WRITE. Both reads build the catalog's
+  * [[GraftScanBuilder]] over this handle, pinned to `versionAsOf`; the
+  * scan's own rules refuse the combinations that have no meaning
+  * (a batch `readChangeFeed`, a stream from a time-travel snapshot).
+  * Batch writes fall back to the provider's V1 write face (no
+  * BATCH_WRITE here). Scan options are the READER's options (they rode
+  * getTable's properties), write options the writer's. */
+private[sources] final class GraftPathTable(spark: SparkSession,
     table: IncrementalTable, params: Map[String, String])
     extends org.apache.spark.sql.connector.catalog.Table
     with org.apache.spark.sql.connector.catalog.SupportsRead
@@ -311,14 +304,12 @@ private[sources] final class GraftStreamingTable(spark: SparkSession,
   import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.connector.catalog.TableCapability
 
+  private val asOf = GraftSource.asOfOf(params)
+
   override def name(): String = s"graft.`${table.root}`"
 
-  override def schema(): StructType = table.schemaAt() match {
-    case Some(committed) =>
-      if (GraftSource.cdcMode(params)) GraftSource.cdcSchema(committed)
-      else committed
-    case None => new StructType()
-  }
+  override def schema(): StructType =
+    GraftSource.readSchema(table, params).getOrElse(new StructType())
 
   override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] =
     table.partitionColumns
@@ -326,20 +317,15 @@ private[sources] final class GraftStreamingTable(spark: SparkSession,
       .toArray
 
   override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE).asJava
+    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
+      TableCapability.STREAMING_WRITE).asJava
 
   override def newScanBuilder(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap): org.apache.spark.sql.connector.read.ScanBuilder = {
-    val pinned = schema()
-    new org.apache.spark.sql.connector.read.ScanBuilder {
-      override def build(): org.apache.spark.sql.connector.read.Scan =
-        new org.apache.spark.sql.connector.read.Scan {
-          override def readSchema(): StructType = pinned
-          override def description(): String = s"GraftStreamScan ${table.root}"
-          override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-            GraftSource.microBatchStream(spark, table, params, checkpointLocation)
-        }
-    }
+    val pinned = GraftSource.readSchema(table, params).getOrElse(
+      throw new IllegalStateException(s"graft table ${table.root} has no commits" +
+        asOf.fold("")(v => s" as of version $v")))
+    new GraftScanBuilder(spark, table, asOf, pinned, params)
   }
 
   override def newWriteBuilder(
@@ -397,6 +383,9 @@ private[sources] final class GraftStreamWriteBuilder(spark: SparkSession,
 final case class GraftScanInfo(filesLive: Long, filesScanned: Int,
     pushed: Seq[String])
 
+/** The scan contract behind [[GraftBatchScan]], the one batch scan of
+  * both front doors (`format("graft")` and `graft.ns.t`), plus its
+  * prune accounting. */
 object GraftRelation {
   // scan-prune observability; keyed by table root, last scan wins
   private val scans = new java.util.concurrent.ConcurrentHashMap[String, GraftScanInfo]()
@@ -404,19 +393,10 @@ object GraftRelation {
   private[sources] def record(root: String, info: GraftScanInfo): Unit =
     scans.put(root, info)
 
-  def apply(spark: SparkSession, table: IncrementalTable,
-      asOf: Option[Long]): GraftRelation = {
-    val schema = table.schemaAt(asOf).getOrElse(throw new IllegalStateException(
-      s"graft table ${table.root} has no committed schema" +
-        asOf.fold("")(v => s" as of version $v")))
-    new GraftRelation(spark, table, asOf, schema)
-  }
-
   /** Catalyst `sources.Filter` → `Column`, conservatively: None means
-    * "can't express", and the filter is reported unhandled so Spark
-    * re-evaluates it above the scan. Translated filters are applied in
-    * full on the inner plan (both for file pruning and row filtering),
-    * so claiming them handled is exact. */
+    * "can't express", and the filter stays with Spark above the scan.
+    * Translated filters are applied in full on the inner plan (both for
+    * file pruning and row filtering). */
   private[sources] def translate(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))
     case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
@@ -438,18 +418,11 @@ object GraftRelation {
     case _ => None
   }
 
-  /** The scan contract shared by the V1 relation and the DSv2 catalog
-    * bridge ([[GraftCatalog]]): prune files through the commit log's
-    * skipping index (translated filters + partition-directory
-    * equality), read ONLY the survivors with DV state applied in-scan,
-    * re-apply the full predicate row-level, and project to the pruned
-    * column set INSIDE the inner Catalyst plan — so the parquet
-    * ReadSchema shrinks before any row bridge. Records prune accounting
-    * per table root for tests/observability. */
-  /** The prune half of the scan contract, separated so a caller that
-    * needs the survivor list TWICE (the catalog scan's cost estimate
-    * at planning + its row bridge at execution) computes it once —
-    * also pinning the scan to one snapshot's file set. */
+  /** The prune half of the scan contract: the survivor files of the
+    * commit log's skipping index under the translated filters, plus
+    * partition-directory equality. A scan computes it once per filter
+    * set and hands it to [[scanDf]], which also pins the scan to one
+    * snapshot's file set. */
   private[sources] def pruneFiles(table: IncrementalTable, asOf: Option[Long],
       filters: Seq[Filter]): (Option[Column], Seq[String]) = {
     val pred = filters.flatMap(translate).reduceOption(_ && _)
@@ -466,10 +439,15 @@ object GraftRelation {
     (pred, files)
   }
 
+  /** The read half: ONLY the survivors with DV state applied in-scan,
+    * the full predicate re-applied row-level, and the projection to the
+    * pruned column set INSIDE the inner Catalyst plan — so the parquet
+    * ReadSchema shrinks. Records prune accounting per table root for
+    * tests/observability. */
   private[sources] def scanDf(table: IncrementalTable, asOf: Option[Long],
       requiredColumns: Seq[String], filters: Seq[Filter],
-      pruned: Option[(Option[Column], Seq[String])] = None): DataFrame = {
-    val (pred, files) = pruned.getOrElse(pruneFiles(table, asOf, filters))
+      pruned: (Option[Column], Seq[String])): DataFrame = {
+    val (pred, files) = pruned
     // liveFileCount is a count JOB above the checkpoint threshold —
     // the accounting must never itself collect the live set
     record(table.root, GraftScanInfo(
@@ -481,33 +459,4 @@ object GraftRelation {
     if (requiredColumns.isEmpty) filtered.select()
     else filtered.select(requiredColumns.toIndexedSeq.map(col): _*)
   }
-}
-
-/** See [[GraftSource]]. The scan contract: prune files through the
-  * commit log's skipping index, read ONLY the survivors (with DV state
-  * applied in-scan), project to the pruned column set inside the inner
-  * Catalyst plan, then bridge to the V1 row RDD. */
-final class GraftRelation private (spark: SparkSession,
-    val table: IncrementalTable, asOf: Option[Long],
-    override val schema: StructType)
-    extends BaseRelation with PrunedFilteredScan {
-
-  override def sqlContext: SQLContext = spark.sqlContext
-
-  /** Live-snapshot bytes from the commit log, so Catalyst's join
-    * planning sees a real size instead of `defaultSizeInBytes`
-    * (= never-broadcast): a small graft table on the build side of a
-    * join broadcasts exactly like a small parquet directory would. */
-  override lazy val sizeInBytes: Long = table.liveBytes(asOf)
-
-  /** Everything we can translate is fully applied inside [[buildScan]]
-    * (pruning AND row filtering), so only untranslatable filters need
-    * Spark's re-evaluation above the scan. */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters.filter(GraftRelation.translate(_).isEmpty)
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] =
-    GraftRelation.scanDf(table, asOf, requiredColumns.toIndexedSeq,
-      filters.toIndexedSeq).rdd
 }

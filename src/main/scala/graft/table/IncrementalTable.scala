@@ -3349,7 +3349,8 @@ final class IncrementalTable(spark: SparkSession, val root: String,
   /** Read an explicit committed-file subset under the table's schema and
     * deletion-vector state as of `asOf`. The contract behind scan
     * planners that prune with [[liveFilesWhere]] and then hand the
-    * survivor list back (e.g. [[graft.sources.GraftRelation]]): caller
+    * survivor list back (the batch scan of both front doors,
+    * [[graft.sources.GraftRelation.scanDf]]): caller
     * guarantees `files` ⊆ the live set at `asOf`, same as the internal
     * read path. */
   def readFiles(files: Seq[String], asOf: Option[Long] = None): DataFrame =

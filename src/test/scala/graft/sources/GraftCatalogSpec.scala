@@ -314,14 +314,14 @@ class GraftCatalogSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.lake.dim SELECT id, concat('n', id) FROM range(20)")
     spark.range(100000).selectExpr("id % 20 AS k", "id AS v")
       .createOrReplaceTempView("bcast_fact")
-    // catalog path: V1Scan reports commit-log bytes via
+    // catalog path: the batch scan reports commit-log bytes via
     // SupportsReportStatistics, so the planner picks broadcast
     // STATICALLY (pre-AQE) — defaultSizeInBytes would force sort-merge
     val viaCat = spark.sql(
       s"SELECT f.v, d.name FROM bcast_fact f JOIN $cat.lake.dim d ON f.k = d.k")
     assert(viaCat.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"),
       viaCat.queryExecution.sparkPlan.toString)
-    // V1 relation path: BaseRelation.sizeInBytes from the same log
+    // path door: the same scan, the same statistics
     val root = spark.conf.get("spark.sql.catalog.gcat.warehouse") + "/lake/dim"
     val viaDs = spark.table("bcast_fact")
       .join(spark.read.format("graft").load(root), "k")
@@ -677,13 +677,11 @@ class GraftCatalogSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.statsColumns'='k')") // row tallies ride the index
     spark.sql(s"INSERT INTO $cat.lake.stats SELECT id, 'a' FROM range(123)")
     // unfiltered scan: exact bytes + exact metadata row count (the
-    // COUNT(*) fold) on the Statistics surface. Asserted on the scan
-    // directly: Spark's V1ScanWrapper does not forward
-    // SupportsReportStatistics to the static planner (see the
-    // GraftV1Scan scaladoc) — AQE carries the runtime decision.
+    // COUNT(*) fold) on the Statistics surface, asserted on the scan
+    // directly
     val t0 = IncrementalTable(spark,
       spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/lake/stats")
-    val st = new GraftV1Scan(spark, t0, None, t0.schemaAt().get, Array.empty)
+    val st = new GraftBatchScan(spark, t0, None, t0.schemaAt().get, Array.empty)
       .estimateStatistics()
     assert(st.numRows().getAsLong == 123L)
     assert(st.sizeInBytes().getAsLong > 0L)
@@ -762,12 +760,6 @@ class GraftCatalogSpec extends SparkSpec {
     // ...through Spark's own DPP machinery on the BatchScan node
     val plan = spark.sql(q).queryExecution.executedPlan.toString
     assert(plan.contains("RuntimeFilters: [dynamicpruning"), plan)
-    // and the result is identical through the V1 escape hatch
-    spark.conf.set("spark.graft.catalog.v1scan", "true")
-    try {
-      val v1 = spark.sql(q).as[(Long, Long)].collect().toSeq.sorted
-      assert(v1 == out)
-    } finally spark.conf.unset("spark.graft.catalog.v1scan")
   }
 
   test("runtime filtering x bloom index: join keys prune UNCLUSTERED fact files") {

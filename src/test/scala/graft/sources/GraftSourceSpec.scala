@@ -46,8 +46,8 @@ class GraftSourceSpec extends SparkSpec {
     val scan = GraftRelation.lastScan(t.root).get
     assert(scan.filesLive == 3)
     assert(scan.filesScanned == 1, s"expected 1 surviving file, got $scan")
-    // and the filters actually reached the relation (V1 pushdown shows
-    // in the physical plan as PushedFilters on the RowDataSourceScan)
+    // and the filters actually reached the scan (they show in the
+    // physical plan as PushedFilters on the BatchScan)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters"), plan)
     assert(plan.contains("GreaterThanOrEqual(k,210)"), plan)
@@ -286,5 +286,57 @@ class GraftSourceSpec extends SparkSpec {
     val api = t.read().collect().toSet
     val ds = spark.read.format("graft").load(root).collect().toSet
     assert(ds == api)
+  }
+
+  test("versionAsOf before an addColumns reads the as-of schema and rows") {
+    val (root, t) = seeded("gsrc_asof_schema")
+    val before = t.latestVersion
+    t.addColumns(new org.apache.spark.sql.types.StructType()
+      .add("extra", org.apache.spark.sql.types.StringType))
+    t.append(Seq((1000L, 2000L, "late", "x")).toDF("k", "v", "tag", "extra"), Nil)
+    val old = spark.read.format("graft").option("versionAsOf", before).load(root)
+    assert(old.columns.toSeq == Seq("k", "v", "tag"))
+    assert(old.count() == 300)
+    assert(old.filter($"k" >= 290).select($"k").as[Long].collect().sorted.toSeq ==
+      (290L to 300L))
+    val head = spark.read.format("graft").load(root)
+    assert(head.columns.toSeq == Seq("k", "v", "tag", "extra"))
+    assert(head.filter($"extra" === "x").count() == 1)
+  }
+
+  test("a user schema with a mistyped common field fails") {
+    val (root, _) = seeded("gsrc_badschema")
+    val wrong = new org.apache.spark.sql.types.StructType()
+      .add("k", org.apache.spark.sql.types.StringType)
+      .add("v", org.apache.spark.sql.types.LongType)
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft").schema(wrong).load(root).collect()
+    }
+    assert(e.getMessage.contains("commit log is authoritative"), e.getMessage)
+  }
+
+  test("a batch readChangeFeed read fails loudly and names the batch spellings") {
+    val (root, _) = seeded("gsrc_batchcdc")
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).mkString(" | ")
+    val cdc = spark.read.format("graft").option("readChangeFeed", "true").load(root)
+    Seq(() => cdc.collect(), () => cdc.count()).foreach { read =>
+      val e = intercept[Exception](read())
+      assert(messages(e).contains("graft_changes") &&
+        messages(e).contains("IncrementalTable.changes"), messages(e))
+    }
+  }
+
+  test("a USING graft view is read-only: INSERT INTO fails and commits nothing") {
+    val (root, t) = seeded("gsrc_view_ro")
+    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW gsrc_ro " +
+      s"USING graft OPTIONS (path '$root')")
+    val before = t.latestVersion
+    intercept[Exception] {
+      spark.sql("INSERT INTO gsrc_ro VALUES (9999, 1, 'x')").collect()
+    }
+    t.refresh()
+    assert(t.latestVersion == before)
   }
 }

@@ -60,4 +60,20 @@ class GroupAggPushdownSpec extends SparkSpec {
     assert(afterDel == Seq((0, 20L), (1, 19L)))
     assert(GraftRelation.lastScan(root("d")).get.filesScanned > 0)
   }
+
+  test("metadata-only COUNT(*) is a local scan: same answer, no scan job") {
+    spark.sql(s"CREATE TABLE $cat.ns.c (id BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('graft.statsColumns' = 'id')")
+    spark.sql(s"INSERT INTO $cat.ns.c SELECT id, id FROM range(70)")
+    spark.sql(s"INSERT INTO $cat.ns.c SELECT id, id FROM range(70, 100)")
+    val q = spark.sql(s"SELECT COUNT(*) FROM $cat.ns.c")
+    val (n, jobs) = jobsDuring(q.as[Long].head())
+    assert(n == 100L)
+    assert(GraftRelation.lastScan(root("c")).get.filesScanned == 0)
+    // the answer is one LocalTableScan row collected on the driver; the
+    // V1 form's parallelized one-row RDD cost a job per read
+    assert(jobs == 0, s"metadata COUNT(*) ran $jobs Spark jobs")
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan"), plan)
+  }
 }

@@ -274,8 +274,8 @@ class EqualityDeleteSpec extends SparkSpec {
   test("reads through the catalog/path doors apply deletes") {
     val t = seeded("doors")
     t.deleteByKey(Seq(Tuple1(3L)).toDF("id"), Seq("id"))
-    // path door (format("graft")) routes through GraftRelation.scanDf →
-    // readFiles → the eqdel-applying choke point
+    // path door (format("graft")) routes through GraftBatchScan →
+    // GraftRelation.scanDf → readFiles → the eqdel-applying choke point
     val viaPath = spark.read.format("graft").load(t.root)
     assert(viaPath.select("id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 2L, 4L, 5L))

@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
-"""Paired A/B of two revisions on one perfbench workload.
+"""Paired A/B of two revisions on one perfbench workload or on graft.Bench queries.
 
     python3 tools/ab_pairs.py --base HEAD~1 --change HEAD --workload tick \\
         --pairs 10 --first-seed 101 [--seconds 12] [--trace 0] [--dir DIR]
+    python3 tools/ab_pairs.py --base HEAD~1 --change HEAD \\
+        --bench q111_datasource_read,q116_catalog_sql [--sf DIR] --pairs 10
 
 Exports each revision into its own directory under DIR (`git archive`, so
 each side builds into its own `target/` and `.bench_build/`, the
@@ -25,6 +27,15 @@ with both bases, and whether the difference of the medians exceeds the
 base's interquartile range. All runs and the summary go to
 DIR/ab_pairs-<workload>.json. The benchmark itself (perfbench/) is only
 run, never edited.
+
+With `--bench q1,q2,...` a run is instead `sbt -batch 'runMain graft.Bench'`
+with SPARK_GRAFT_BENCH_ONLY set to those exact query names and
+SPARK_GRAFT_SF_DIR to `--sf` (default /root/testdata/sf0.01): each run
+times every named query (median of graft.Bench's iterations after its own
+warm-up), and the metrics are the per-query seconds plus their `total`,
+all lower-is-better. Pairs alternate order the same way; a run counts as
+correct when every named query finished (graft.Bench reports -1 for a
+failed one). The summary goes to DIR/ab_pairs-bench.json.
 """
 import argparse
 import json
@@ -77,6 +88,30 @@ def run(side, checkout, workload, seed, seconds, trace):
             "wall_s": round(time.time() - t0, 1), **res}
 
 
+def run_bench(side, checkout, queries, sf, pair):
+    env = dict(os.environ, SPARK_GRAFT_BENCH_ONLY=queries, SPARK_GRAFT_SF_DIR=sf)
+    t0 = time.time()
+    proc = subprocess.run(["sbt", "-batch", "runMain graft.Bench"], cwd=checkout, env=env,
+                          stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+    res = {}
+    for line in reversed(proc.stdout.splitlines()):
+        if line.startswith('{"metric"'):
+            try:
+                res = json.loads(line)
+            except json.JSONDecodeError:
+                pass
+            break
+    times = res.get("queries", {})
+    metrics = {q: {"value": v} for q, v in times.items() if v >= 0}
+    if metrics:
+        metrics["total"] = {"value": res["value"]}
+    failed = sum(1 for v in times.values() if v < 0)
+    return {"side": side, "seed": pair, "exit": proc.returncode,
+            "wall_s": round(time.time() - t0, 1), "metrics": metrics,
+            "correct": proc.returncode == 0 and bool(times) and failed == 0,
+            "failed": failed}
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
@@ -87,14 +122,28 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--base", required=True, help="revision of the base side")
     ap.add_argument("--change", required=True, help="revision of the change side, or WORKTREE")
-    ap.add_argument("--workload", required=True)
+    mode = ap.add_mutually_exclusive_group(required=True)
+    mode.add_argument("--workload", help="a perfbench workload")
+    mode.add_argument("--bench", help="comma-separated exact graft.Bench query names")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01",
+                    help="graft.Bench data directory (--bench only)")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--first-seed", type=int, required=True)
+    ap.add_argument("--first-seed", type=int, help="perfbench seed of pair 1 (--workload only)")
     ap.add_argument("--seconds", type=float)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--dir", help="empty directory for the two checkouts (default: a temp dir)")
     ap.add_argument("--no-warmup", action="store_true")
     args = ap.parse_args()
+    if args.workload and args.first_seed is None:
+        ap.error("--workload needs --first-seed")
+    if args.bench:
+        args.first_seed = 1  # pair numbers stand in for seeds
+    label = args.workload or "bench"
+
+    def one(side, seed):
+        if args.bench:
+            return run_bench(side, dirs[side], args.bench, args.sf, seed)
+        return run(side, dirs[side], args.workload, seed, seconds, args.trace)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
@@ -112,18 +161,19 @@ def main():
 
     if not args.no_warmup:
         for side in ("base", "change"):
-            r = run(side, dirs[side], args.workload, 0, seconds, args.trace)
+            r = one(side, 0)
             print(f"warm-up {side}: exit {r['exit']} wall {r['wall_s']}s", flush=True)
             if r["exit"] != 0:
                 sys.exit(f"ab_pairs: the {side} side does not run; see "
-                         f"python3 perfbench/run.py in {dirs[side]}")
+                         f"{'graft.Bench' if args.bench else 'python3 perfbench/run.py'} "
+                         f"in {dirs[side]}")
 
     runs = []
     for i in range(args.pairs):
         seed = args.first_seed + i
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for side in order:
-            r = run(side, dirs[side], args.workload, seed, seconds, args.trace)
+            r = one(side, seed)
             runs.append(r)
             # traced runs carry ~45 metrics: those show in the summary only
             shown = {k: round(v["value"], 4) for k, v in r.get("metrics", {}).items()
@@ -137,8 +187,11 @@ def main():
 
     names = sorted({k for r in runs for k in r.get("metrics", {})})
     summary = {}
-    print(f"\n{args.workload}: {args.pairs} pairs, seeds {args.first_seed}-"
-          f"{args.first_seed + args.pairs - 1}, {seconds:g} s runs, trace {args.trace}")
+    if args.bench:
+        print(f"\ngraft.Bench {args.bench} on {args.sf}: {args.pairs} pairs")
+    else:
+        print(f"\n{args.workload}: {args.pairs} pairs, seeds {args.first_seed}-"
+              f"{args.first_seed + args.pairs - 1}, {seconds:g} s runs, trace {args.trace}")
     print(f"{'metric':32s} {'base median [q1, q3]':28s} {'change median [q1, q3]':28s} "
           f"{'ratio':>7s} {'wins':>6s}  diff>IQR(base)")
     for name in names:
@@ -162,7 +215,7 @@ def main():
               f"{'yes' if resolved else 'no'}  ({cq[1]:.4g} / {bq[1]:.4g})")
     failed = [r for r in runs if r["exit"] != 0 or not r.get("correct")]
     print(f"runs not correct or failed: {len(failed)} of {len(runs)}")
-    out = os.path.join(work, f"ab_pairs-{args.workload}.json")
+    out = os.path.join(work, f"ab_pairs-{label}.json")
     with open(out, "w") as f:
         json.dump({"revisions": revs, "args": vars(args), "seconds": seconds,
                    "runs": runs, "summary": summary}, f, indent=1)
