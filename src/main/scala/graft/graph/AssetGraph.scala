@@ -146,12 +146,18 @@ final class AssetGraph(spark: SparkSession, tablesRoot: String,
     *  - IncrementalAppend + no refresh → process rows past the stored
     *    watermark (P1/P2): with an `incrementalDep`, the planner slices
     *    that INPUT to `seq >= wm` before compute runs — only new
-    *    upstream rows are ever read (the slice predicate pushes into the
-    *    upstream scan); otherwise the asset's own output is sliced by
-    *    its `seq` column when present. Then append, committing the new
-    *    watermark atomically with the data.
+    *    upstream rows reach compute (a small upstream partition is read
+    *    on the driver, [[IncrementalTable.readLocal]], and sliced there;
+    *    a large one keeps the slice predicate pushed into its scan);
+    *    otherwise the asset's own output is sliced by its `seq` column
+    *    when present. Then append, committing the new watermark
+    *    atomically with the data.
     *  - refresh OR PartitionReplace → full recompute + replaceWhere,
     *    scoped to this time partition (W5).
+    *
+    * Spark jobs: the planning is metadata and the write is one job, so
+    * a steady-state `processed` (driver-side listing slice) or
+    * `backwards` materialization runs one job each.
     */
   def materialize(name: String, key: String, refresh: Boolean = false,
       today: LocalDate = LocalDate.now(ZoneOffset.UTC)): Unit = {
@@ -161,11 +167,17 @@ final class AssetGraph(spark: SparkSession, tablesRoot: String,
       case Right(_) => ()
     }
     val (partitionBy, timeValues) = asset.spec.resolve(asset.partitions.grain, key)
-    // deps pruned to this key (W7) + the self-union input (L2)
+    // deps pruned to this key (W7) + the self-union input (L2). The
+    // incrementalDep's watermark slice is always consumed, so a small
+    // one is read on the driver up front (no Spark job to collect it);
+    // every other input stays a lazy Spark read
     val inputs: Map[String, DataFrame] = asset.deps.map { d =>
       val dep = byName(d)
       val (_, depValues) = dep.spec.resolve(dep.partitions.grain, key)
-      d -> tableFor(d).read(depValues)
+      val t = tableFor(d)
+      d -> (if (asset.incrementalDep.contains(d))
+        t.readLocal(depValues).getOrElse(t.read(depValues))
+      else t.read(depValues))
     }.toMap + (asset.name -> tableFor(asset.name).read(timeValues))
     val table = tableFor(name)
 

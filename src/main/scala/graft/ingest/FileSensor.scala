@@ -38,8 +38,8 @@ final case class RunRequest(day: String, newFiles: Seq[(Long, String)],
   *    ~1-day allowed-lateness bound, sensors.py:40-42); `scanAllDays`
   *    covers backfill (listing.py:19-28)
   *  - S3 new-file detection: the day's listed names are pushed into
-  *    the listing scan as a filter, so one job returns exactly the
-  *    listed names already seen (bounded by the listing itself) and the
+  *    the listing scan as a filter, so one bounded scan returns exactly
+  *    the listed names already seen (bounded by the listing itself) and the
   *    set difference (sensors.py:53) runs on the driver
   *  - S4 cursor state: the listing table IS the cursor. The reference
   *    (and round-1's JSON seen-set) kept "seen" in a second store written
@@ -59,8 +59,11 @@ final case class RunRequest(day: String, newFiles: Seq[(Long, String)],
   * and the seen-diff returns at most that listing to the driver, so no
   * all-history file set ever lives in driver memory. A day above
   * `maxDriverPaths` keeps the whole diff distributed (an anti-join).
-  * Per tick on the driver path that is one Spark job: the bounded
-  * seen-scan; the high-water is metadata. The steady-state
+  * Per tick on the driver path the high-water is metadata, and the
+  * bounded seen-scan is at most one Spark job: none when `seenSource`
+  * returns a driver-side frame (the pipeline's listing of a small day,
+  * [[graft.table.IncrementalTable.readLocal]]), whose filter and
+  * collect fold into its local rows. The steady-state
   * recommendation remains [[StreamIngest]], where discovery and dedup
   * both live in the streaming checkpoint.
   */
@@ -156,7 +159,7 @@ final class FileSensor(
           }
         }
       } else {
-        // S3 in one job: the listed names filter the listing scan, so
+        // S3 in one scan: the listed names filter the listing scan, so
         // only already-seen listed names return to the driver
         val seen = prior.select($"filename").where($"filename".isin(listed: _*))
           .as[String].collect().toSet

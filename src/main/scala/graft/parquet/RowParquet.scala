@@ -78,6 +78,44 @@ object RowParquet {
       fill: Map[String, Any]): ParquetReader[InternalRow] =
     new RowReaderBuilder(file, target, fill).build()
 
+  /** One committed data file as rows of `target`: [[reader]] projects
+    * the parquet columns by name, then the hive partition-directory
+    * values (`partTokens`, raw and still %-escaped) are overlaid at
+    * their target ordinals — data files never store partition columns
+    * physically, and a partition column that is also a data column
+    * takes the directory's value. Tokens the target does not name are
+    * ignored. Shared by the streaming partition reader and the table's
+    * driver-side read. */
+  final class FileRows(file: InputFile, target: StructType,
+      partTokens: Seq[(String, String)], fill: Map[String, Any] = Map.empty)
+      extends java.io.Closeable {
+    // partition ordinal -> parsed catalyst value, precomputed once
+    private val overlay: Array[(Int, Any)] = partTokens.iterator
+      .filter { case (name, _) => target.fieldNames.contains(name) }
+      .map { case (name, raw) =>
+        val ord = target.fieldIndex(name)
+        ord -> partitionValue(raw, target.fields(ord).dataType)
+      }.toArray
+
+    private val rows = reader(file, target, fill)
+
+    /** The next row (a fresh row per record), or null past the end. */
+    def next(): InternalRow = {
+      val r = rows.read()
+      if (r != null) {
+        val g = r.asInstanceOf[GenericInternalRow]
+        var i = 0
+        while (i < overlay.length) {
+          g.update(overlay(i)._1, overlay(i)._2)
+          i += 1
+        }
+      }
+      r
+    }
+
+    override def close(): Unit = rows.close()
+  }
+
   def writer(file: OutputFile, schema: StructType,
       conf: Configuration,
       // per-table codec (X89, `graft.parquet.compression`): snappy is
@@ -641,5 +679,12 @@ object RowParquet {
       case other => throw new UnsupportedOperationException(
         s"unsupported partition column type ${other.simpleString}")
     }
+  }
+
+  /** Partition column types [[partitionValue]] parses. */
+  def partitionTypeSupported(dt: DataType): Boolean = dt match {
+    case StringType | IntegerType | LongType | ShortType | ByteType |
+        BooleanType | FloatType | DoubleType | DateType | _: DecimalType => true
+    case _ => false
   }
 }

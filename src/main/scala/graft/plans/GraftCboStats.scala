@@ -10,13 +10,17 @@ import org.apache.spark.sql.types.StringType
 
 /** Column-NDV statistics bridge for CBO (X88, VERDICT r8 #8).
   *
-  * The gap (probed, extending X85's honesty note): `injectPreCBORule`
-  * fires BEFORE "Early Filter and Projection Push-Down", and
-  * CostBasedJoinReorder fires AFTER it — by reorder time every graft
-  * relation is a `DataSourceV2ScanRelation` over a `V1ScanWrapper`,
-  * which implements only `Scan` and hides the graft scan's
-  * `SupportsReportStatistics`. So the statistics must be pinned onto
-  * the plan while the raw relations are still visible.
+  * The gap: `injectPreCBORule` fires BEFORE "Early Filter and
+  * Projection Push-Down", and CostBasedJoinReorder fires AFTER it — by
+  * reorder time every graft relation is a `DataSourceV2ScanRelation`
+  * over a [[graft.sources.GraftBatchScan]]. That scan's
+  * `estimateStatistics` reports bytes, and for an unfiltered scan the
+  * row count and the per-column NDVs, but not the ANALYZE histograms,
+  * the metadata [min,max] or a string-equality filter's selectivity.
+  * So those statistics are pinned onto the plan while the raw
+  * relations are still visible. (Whether the NDV half of this bridge
+  * is now redundant with the scan's own column statistics has not been
+  * measured.)
   *
   * The bridge, on public extension points only: [[GraftCboStatsRule]]
   * (preCBO) wraps each graft relation of an NDV-opted table in a

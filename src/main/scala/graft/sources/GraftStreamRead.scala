@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.functions.col
@@ -64,36 +63,18 @@ private[sources] final class GraftStreamPartitionReader(
     defaults: Map[String, Any], conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  // partition ordinal -> parsed catalyst value, precomputed once
-  private val overlay: Array[(Int, Any)] = p.partTokens.iterator
-    .filter { case (name, _) => target.fieldNames.contains(name) }
-    .map { case (name, raw) =>
-      val ord = target.fieldIndex(name)
-      ord -> RowParquet.partitionValue(raw, target.fields(ord).dataType)
-    }.toArray
-
-  private val reader = RowParquet.reader(
-    HadoopInputFile.fromPath(new Path(p.fileUri), conf), target, defaults)
+  private val rows = new RowParquet.FileRows(
+    HadoopInputFile.fromPath(new Path(p.fileUri), conf), target, p.partTokens, defaults)
 
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    val r = reader.read()
-    if (r == null) false
-    else {
-      val g = r.asInstanceOf[GenericInternalRow]
-      var i = 0
-      while (i < overlay.length) {
-        g.update(overlay(i)._1, overlay(i)._2)
-        i += 1
-      }
-      current = g
-      true
-    }
+    current = rows.next()
+    current != null
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
+  override def close(): Unit = rows.close()
 }
 
 /** The DSv2 micro-batch stream over a graft table — `spark.readStream

@@ -885,6 +885,65 @@ final class IncrementalTable(spark: SparkSession, val root: String,
   def read(filters: Map[String, String] = Map.empty): DataFrame =
     readInternal(filters, None)
 
+  /** [[read]] answered on the driver: the partition's committed rows as
+    * a `LocalRelation` frame, pinned to the current snapshot and read
+    * with [[graft.parquet.RowParquet]]. Building it runs no Spark job,
+    * and a filter, projection or limit above it folds into the relation
+    * (`ConvertToLocalRelation`), so collecting such a frame runs none
+    * either. For the listing-sized slices a tick reads, the Spark
+    * path's cost is its per-job floor, not its bytes.
+    *
+    * None (the caller keeps [[read]]) unless the read is that small and
+    * plain: an inline snapshot; at most
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` scoped
+    * files of at most `spark.sql.files.openCostInBytes` bytes in total
+    * (sizes from the cached statuses: the bounds under which Spark
+    * itself lists on the driver and packs files into one task); no
+    * deletion vectors on those files; no equality deletes in force; no
+    * column mapping or defaults; no shallow-clone (foreign) files; one
+    * dir shape; no CHAR/VARCHAR columns; and partition columns of a type
+    * [[graft.parquet.RowParquet.partitionValue]] parses. Under those
+    * conditions it equals [[read]] in schema and rows. */
+  def readLocal(filters: Map[String, String] = Map.empty): Option[DataFrame] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+    import org.apache.spark.sql.graftshim.DmlShim
+    val s = snapshot
+    if (s.base.isDefined || s.eqDeletes.nonEmpty || s.channel("colmap/").nonEmpty ||
+        s.channel("default/").nonEmpty) return None
+    requireUniformSpec(filters.keys, "partition-filtered read")
+    val files = s.files.keys.filter(f => matchesPartition(f, filters)).toSeq
+    val stored = committedSchemaAt()
+    def local(schema: StructType, rows: Seq[org.apache.spark.sql.catalyst.InternalRow]) =
+      Some(DmlShim.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows)))
+    if (files.isEmpty) return local(stored.getOrElse(new StructType()), Nil)
+    val sqlConf = spark.sessionState.conf
+    if (stored.isEmpty || CharVarcharUtils.hasCharVarchar(stored.get) ||
+        files.size > sqlConf.parallelPartitionDiscoveryThreshold ||
+        files.exists(f => f.startsWith("/") || s.files(f).dvGens.nonEmpty)) return None
+    val shapes = files.map(f => dirTokens(root, f).map(_._1)).distinct
+    if (shapes.size > 1) return None
+    val schema = stored.get
+    val partCols = shapes.head.toSet
+    if (schema.fields.exists(f => partCols(f.name) &&
+        !graft.parquet.RowParquet.partitionTypeSupported(f.dataType))) return None
+    val statuses = files.map(statusOf)
+    if (statuses.iterator.map(_.getLen).sum > sqlConf.filesOpenCostInBytes) return None
+    val conf = hadoopConf(spark)
+    val rows = files.zip(statuses).flatMap { case (f, st) =>
+      val in = new graft.parquet.RowParquet.FileRows(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        schema, dirTokens(root, f))
+      try Iterator.continually(in.next()).takeWhile(_ != null).toVector
+      finally in.close()
+    }
+    // the Spark path's schema: data columns read nullable (as a file
+    // source's data schema does), partition columns as committed
+    local(StructType(schema.fields.map(f =>
+      if (partCols(f.name)) f else DmlShim.asNullable(StructType(Array(f))).head)), rows)
+  }
+
   /** The change set of one commit — exactly its added files, read with
     * the schema committed as of that version. This is the changefeed
     * read backing [[graft.streaming.DerivedStream]] (the analog of

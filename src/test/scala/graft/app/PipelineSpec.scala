@@ -107,6 +107,33 @@ class PipelineSpec extends SparkSpec {
     assert(pipe.backwards.read().count() == 15)
   }
 
+  test("a steady-state tick through backwards runs three Spark jobs") {
+    val root = Paths.get(tmpDir("pipe"))
+    val ingest = root.resolve("files_to_ingest")
+    copyFixture(ingest, days = Set("2024-03-26"), limitPerDay = 10)
+    val pipe = new Pipeline(spark, ingest.toString, root.resolve("tables").toString)
+    val day = "2024-03-26"
+    val today = java.time.LocalDate.parse(day)
+    assert(pipe.tickAndIngest(today) == Seq(day))
+    pipe.runAll(day)
+
+    copyFixture(ingest, days = Set("2024-03-26"), limitPerDay = 15)
+    val (found, jobs) = jobsDuring {
+      val found = pipe.tickAndIngest(today)
+      pipe.runProcessed(day)
+      pipe.runBackwards(day)
+      found
+    }
+    assert(found == Seq(day))
+    // the three writes: listing append, processed append, backwards
+    // replace; the seen-diff and the watermark slice's probe read the
+    // small listing on the driver
+    assert(jobs == 3, s"steady-state tick ran $jobs Spark jobs")
+    assert(pipe.processed.read().count() == 15)
+    assert(pipe.processed.read().select($"filename").distinct().count() == 15)
+    assert(pipe.backwards.read().count() == 15)
+  }
+
   test("runForever: the sensor daemon loop ingests late arrivals across ticks") {
     val root = Paths.get(tmpDir("pipe"))
     val ingest = root.resolve("files_to_ingest")

@@ -9,7 +9,9 @@ import graft.app.Pipeline
 
 /** The sensor's steady state answers from committed metadata: the next
   * `seq` is the listing's `watermark/<day>` meta, and the seen-diff is
-  * one bounded scan of the listing — one Spark job per tick. */
+  * one bounded scan of the listing. A small day's listing is read on the
+  * driver, so the tick runs no Spark job; a day with more listing files
+  * than the driver-side read allows keeps the one-job Spark scan. */
 class FileSensorJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -28,7 +30,7 @@ class FileSensorJobsSpec extends SparkSpec {
   private def listing(pipe: Pipeline): Seq[(Long, String)] =
     pipe.listingFor(day).as[(Long, String)].collect().toSeq.sortBy(_._1)
 
-  test("a steady-state tick runs one Spark job and numbers from the committed watermark") {
+  test("a small-day tick runs no Spark job and numbers from the watermark") {
     val root = Paths.get(tmpDir("sensorjobs"))
     val ingest = root.resolve("files_to_ingest")
     val pipe = new Pipeline(spark, ingest.toString, root.resolve("tables").toString)
@@ -38,7 +40,7 @@ class FileSensorJobsSpec extends SparkSpec {
 
     landFiles(ingest, 15)
     val (reqs, jobs) = jobsDuring(pipe.sensor.tick(today))
-    assert(jobs == 1, s"sensor tick over a seen day ran $jobs Spark jobs")
+    assert(jobs == 0, s"sensor tick over a seen day ran $jobs Spark jobs")
     assert(reqs.size == 1 && reqs.head.bulk.isEmpty)
     assert(reqs.head.newFiles.map(_._1) == (10L until 15L))
     reqs.foreach(pipe.runListing)
@@ -50,7 +52,31 @@ class FileSensorJobsSpec extends SparkSpec {
     // an idle tick: every listed file is seen, nothing appends
     val (days, idleJobs) = jobsDuring(pipe.tickAndIngest(today))
     assert(days.isEmpty)
-    assert(idleJobs == 1, s"idle tickAndIngest ran $idleJobs Spark jobs")
+    assert(idleJobs == 0, s"idle tickAndIngest ran $idleJobs Spark jobs")
+  }
+
+  test("a day above the local-read file bound keeps the one-job scan") {
+    val root = Paths.get(tmpDir("sensorbound"))
+    val ingest = root.resolve("files_to_ingest")
+    val pipe = new Pipeline(spark, ingest.toString, root.resolve("tables").toString)
+    val bound = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val seen = bound + 1
+    landFiles(ingest, seen + 5)
+    val names = Files.list(ingest.resolve(s"day=$day")).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted
+    // one listing file per arrival: the day's listing outgrows the bound
+    names.take(seen).zipWithIndex.foreach { case (f, i) =>
+      pipe.runListing(RunRequest(day, Seq((i.toLong, f))))
+    }
+    assert(pipe.listing.liveFiles(Map("day" -> day)).size == seen)
+    assert(pipe.listing.readLocal(Map("day" -> day)).isEmpty)
+
+    val (reqs, jobs) = jobsDuring(pipe.sensor.tick(today))
+    assert(jobs == 1, s"sensor tick over a large listing ran $jobs Spark jobs")
+    assert(reqs.size == 1 && reqs.head.bulk.isEmpty)
+    assert(reqs.head.newFiles == names.drop(seen).zipWithIndex.map {
+      case (f, i) => (seen.toLong + i, f)
+    })
   }
 
   test("a listing written without watermark meta still numbers from max(seq)+1") {
