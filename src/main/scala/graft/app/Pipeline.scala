@@ -55,6 +55,11 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
   // reference partitions.py:5-7: start_date=2024-03-20, end_offset=1
   private val partsDef = PartitionsDef(grain, LocalDate.parse("2024-03-20"))
 
+  /** Listing files a day may hold before [[runListing]] compacts it:
+    * half the driver-side read's bound, so the day's decode stays short
+    * and compaction runs once per that many ingesting ticks. */
+  val listingMaxFiles = IncrementalTable.LocalReadMaxFiles / 2
+
   // a LocalRelation: collecting it (or a filter over it) runs no job
   private def emptyFrame(ddl: String): DataFrame =
     spark.createDataFrame(
@@ -154,7 +159,17 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
   /** `listing` asset, sensor-dispatch path: append the new `(seq,
     * filename)` rows for a day (incremental self-union,
     * assets/listing.py:30-41; the previous materialization is already in
-    * the table, so append == prev ++ new). */
+    * the table, so append == prev ++ new).
+    *
+    * Each append adds one file to the day, and the reference's steady
+    * state lands every tick in today's partition. So once the day holds
+    * more than [[listingMaxFiles]] files, the append is followed by a
+    * compaction of the day into one file: the sensor's seen-diff and the
+    * `processed` slice keep reading the day on the driver
+    * ([[IncrementalTable.readLocal]]) however many ticks it has taken.
+    * The compaction is a maintenance commit (same rows, same `seq`, the
+    * watermark meta untouched) and costs one extra write every
+    * [[listingMaxFiles]] ingesting ticks of a day. */
   def runListing(req: RunRequest): Unit = {
     if (req.isEmpty) return
     // the listing's own watermark meta rides in the same commit, so a
@@ -169,12 +184,15 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
           partitionValues = Map("day" -> req.day),
           statMeta = Seq(graft.table.StatMeta(s"watermark/${req.day}", "seq")))
       case None =>
-        val df = req.newFiles.toDF("seq", "filename")
+        // one file per append: a local Seq splits over every core, and
+        // each file would grow the day's listing by one more file
+        val df = req.newFiles.toDF("seq", "filename").coalesce(1)
         val highWater = req.newFiles.map(_._1).max + 1
         listing.append(df, partitionBy = Seq("day"),
           partitionValues = Map("day" -> req.day),
           meta = Map(s"watermark/${req.day}" -> highWater.toString))
     }
+    listing.compactIfNeeded(listingMaxFiles, filters = Map("day" -> req.day))
   }
 
   /** Current listing for a day (typed-empty when missing) — the

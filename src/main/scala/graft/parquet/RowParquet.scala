@@ -662,29 +662,25 @@ object RowParquet {
 
   /** Parse a hive path value string back to the Catalyst internal value
     * of `dt` (the inverse of what the partition directory encodes). */
-  def partitionValue(raw: String, dt: DataType): Any = {
-    val s = unescapePathName(raw)
+  def partitionValue(raw: String, dt: DataType): Any =
     if (raw == hiveDefaultPartition) null
-    else dt match {
-      case StringType => UTF8String.fromString(s)
-      case IntegerType => s.toInt
-      case LongType => s.toLong
-      case ShortType => s.toShort
-      case ByteType => s.toByte
-      case BooleanType => s.toBoolean
-      case FloatType => s.toFloat
-      case DoubleType => s.toDouble
-      case DateType => java.time.LocalDate.parse(s).toEpochDay.toInt
-      case d: DecimalType => Decimal(BigDecimal(s), d.precision, d.scale)
-      case other => throw new UnsupportedOperationException(
-        s"unsupported partition column type ${other.simpleString}")
-    }
-  }
+    else partitionParser(dt).getOrElse(throw new UnsupportedOperationException(
+      s"unsupported partition column type ${dt.simpleString}"))(unescapePathName(raw))
 
-  /** Partition column types [[partitionValue]] parses. */
-  def partitionTypeSupported(dt: DataType): Boolean = dt match {
-    case StringType | IntegerType | LongType | ShortType | ByteType |
-        BooleanType | FloatType | DoubleType | DateType | _: DecimalType => true
-    case _ => false
+  /** The parser of an unescaped hive path value into the Catalyst
+    * internal value of `dt`; None for a type no partition directory
+    * encodes. */
+  def partitionParser(dt: DataType): Option[String => Any] = dt match {
+    case StringType => Some(UTF8String.fromString)
+    case IntegerType => Some(_.toInt)
+    case LongType => Some(_.toLong)
+    case ShortType => Some(_.toShort)
+    case ByteType => Some(_.toByte)
+    case BooleanType => Some(_.toBoolean)
+    case FloatType => Some(_.toFloat)
+    case DoubleType => Some(_.toDouble)
+    case DateType => Some(s => java.time.LocalDate.parse(s).toEpochDay.toInt)
+    case d: DecimalType => Some(s => Decimal(BigDecimal(s), d.precision, d.scale))
+    case _ => None
   }
 }

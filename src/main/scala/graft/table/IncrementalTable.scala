@@ -895,14 +895,13 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     *
     * None (the caller keeps [[read]]) unless the read is that small and
     * plain: an inline snapshot; at most
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` scoped
-    * files of at most `spark.sql.files.openCostInBytes` bytes in total
-    * (sizes from the cached statuses: the bounds under which Spark
-    * itself lists on the driver and packs files into one task); no
-    * deletion vectors on those files; no equality deletes in force; no
-    * column mapping or defaults; no shallow-clone (foreign) files; one
-    * dir shape; no CHAR/VARCHAR columns; and partition columns of a type
-    * [[graft.parquet.RowParquet.partitionValue]] parses. Under those
+    * [[IncrementalTable.LocalReadMaxFiles]] scoped files of at most
+    * [[IncrementalTable.LocalReadMaxBytes]] in total (sizes from the
+    * cached statuses); no deletion vectors on those files; no equality
+    * deletes in force; no column mapping or defaults; no shallow-clone
+    * (foreign) files; one dir shape; no CHAR/VARCHAR columns; and
+    * partition columns of a type
+    * [[graft.parquet.RowParquet.partitionParser]] parses. Under those
     * conditions it equals [[read]] in schema and rows. */
   def readLocal(filters: Map[String, String] = Map.empty): Option[DataFrame] = {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -918,18 +917,17 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     def local(schema: StructType, rows: Seq[org.apache.spark.sql.catalyst.InternalRow]) =
       Some(DmlShim.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows)))
     if (files.isEmpty) return local(stored.getOrElse(new StructType()), Nil)
-    val sqlConf = spark.sessionState.conf
     if (stored.isEmpty || CharVarcharUtils.hasCharVarchar(stored.get) ||
-        files.size > sqlConf.parallelPartitionDiscoveryThreshold ||
+        files.size > IncrementalTable.LocalReadMaxFiles ||
         files.exists(f => f.startsWith("/") || s.files(f).dvGens.nonEmpty)) return None
     val shapes = files.map(f => dirTokens(root, f).map(_._1)).distinct
     if (shapes.size > 1) return None
     val schema = stored.get
     val partCols = shapes.head.toSet
     if (schema.fields.exists(f => partCols(f.name) &&
-        !graft.parquet.RowParquet.partitionTypeSupported(f.dataType))) return None
+        graft.parquet.RowParquet.partitionParser(f.dataType).isEmpty)) return None
     val statuses = files.map(statusOf)
-    if (statuses.iterator.map(_.getLen).sum > sqlConf.filesOpenCostInBytes) return None
+    if (statuses.iterator.map(_.getLen).sum > IncrementalTable.LocalReadMaxBytes) return None
     val conf = hadoopConf(spark)
     val rows = files.zip(statuses).flatMap { case (f, st) =>
       val in = new graft.parquet.RowParquet.FileRows(
@@ -6640,6 +6638,15 @@ final class IncrementalTable(spark: SparkSession, val root: String,
 
 object IncrementalTable {
   val checkpointInterval = 100
+
+  /** Bounds of [[IncrementalTable.readLocal]]: a read of more scoped
+    * files, or of more bytes, stays a Spark read. Decoding on the driver
+    * took about a millisecond and a half per small listing file on 4
+    * vCPU, against a Spark job's tens of milliseconds; a day's listing
+    * stays within the file bound because its append compacts it
+    * ([[graft.app.Pipeline.runListing]]). */
+  val LocalReadMaxFiles = 32
+  val LocalReadMaxBytes: Long = 4L << 20
 
   /** Async cleanup of retired STAGING trees (round-15 profiling: the
     * post-promote `fs.delete(stage, true)` ran on the driver's

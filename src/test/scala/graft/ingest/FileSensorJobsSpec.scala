@@ -6,12 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.app.Pipeline
+import graft.table.IncrementalTable
 
 /** The sensor's steady state answers from committed metadata: the next
   * `seq` is the listing's `watermark/<day>` meta, and the seen-diff is
   * one bounded scan of the listing. A small day's listing is read on the
-  * driver, so the tick runs no Spark job; a day with more listing files
-  * than the driver-side read allows keeps the one-job Spark scan. */
+  * driver, so the tick runs no Spark job, and the listing append keeps
+  * the day small by compacting it; a day with more listing files than
+  * the driver-side read allows keeps the one-job Spark scan. */
 class FileSensorJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -55,18 +57,51 @@ class FileSensorJobsSpec extends SparkSpec {
     assert(idleJobs == 0, s"idle tickAndIngest ran $idleJobs Spark jobs")
   }
 
+  test("listing appends keep a one-day listing within the driver-side read") {
+    val root = Paths.get(tmpDir("sensorcompact"))
+    val ingest = root.resolve("files_to_ingest")
+    val pipe = new Pipeline(spark, ingest.toString, root.resolve("tables").toString)
+    val arrivals = IncrementalTable.LocalReadMaxFiles + 8
+    landFiles(ingest, arrivals + 3)
+    val names = Files.list(ingest.resolve(s"day=$day")).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted
+    // one append per two arrivals, as a tick that lands every batch in
+    // today's partition makes them: each adds one file, and the day
+    // compacts to one file past the pipeline's bound
+    var files = 0
+    names.take(arrivals).zipWithIndex.grouped(2).foreach { batch =>
+      pipe.runListing(RunRequest(day, batch.map { case (f, i) => (i.toLong, f) }))
+      val n = pipe.listing.liveFiles(Map("day" -> day)).size
+      assert(n == files + 1 || n == 1, s"an append took the day from $files to $n listing files")
+      assert(n <= pipe.listingMaxFiles, s"the day holds $n listing files")
+      files = n
+    }
+    assert(pipe.listing.latestMeta(s"watermark/$day").contains(arrivals.toString))
+    assert(listing(pipe) == names.take(arrivals).zipWithIndex.map {
+      case (f, i) => (i.toLong, f)
+    })
+
+    val (reqs, jobs) = jobsDuring(pipe.sensor.tick(today))
+    assert(jobs == 0, s"sensor tick over a compacted day ran $jobs Spark jobs")
+    assert(reqs.size == 1 && reqs.head.newFiles == names.drop(arrivals).zipWithIndex.map {
+      case (f, i) => (arrivals.toLong + i, f)
+    })
+  }
+
   test("a day above the local-read file bound keeps the one-job scan") {
     val root = Paths.get(tmpDir("sensorbound"))
     val ingest = root.resolve("files_to_ingest")
     val pipe = new Pipeline(spark, ingest.toString, root.resolve("tables").toString)
-    val bound = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
-    val seen = bound + 1
+    val seen = IncrementalTable.LocalReadMaxFiles + 1
     landFiles(ingest, seen + 5)
     val names = Files.list(ingest.resolve(s"day=$day")).iterator().asScala
       .map(_.getFileName.toString).toSeq.sorted
-    // one listing file per arrival: the day's listing outgrows the bound
+    // one listing file per arrival, written past the pipeline's own
+    // compacting append: the day's listing outgrows the bound
     names.take(seen).zipWithIndex.foreach { case (f, i) =>
-      pipe.runListing(RunRequest(day, Seq((i.toLong, f))))
+      pipe.listing.append(Seq((i.toLong, f)).toDF("seq", "filename"),
+        partitionBy = Seq("day"), partitionValues = Map("day" -> day),
+        meta = Map(s"watermark/$day" -> (i + 1).toString))
     }
     assert(pipe.listing.liveFiles(Map("day" -> day)).size == seen)
     assert(pipe.listing.readLocal(Map("day" -> day)).isEmpty)

@@ -110,9 +110,9 @@ class LocalReadSpec extends SparkSpec {
       renamed.read().count() == 3 && clone.read().count() == 3)
   }
 
-  test("declines more files or bytes than Spark's driver-side bounds") {
+  test("declines more files or bytes than the driver-side bounds") {
     val many = table("many")
-    val maxFiles = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val maxFiles = IncrementalTable.LocalReadMaxFiles
     many.append((0 until maxFiles + 1).map(i => (i.toLong, i)).toDF("id", "p"),
       partitionBy = Seq("p"))
     assert(many.liveFiles().size == maxFiles + 1)
@@ -123,7 +123,7 @@ class LocalReadSpec extends SparkSpec {
     big.append(spark.range(0, 250000).select(sha2(col("id").cast("string"), 256).as("h"))
       .repartition(1), Nil)
     assert(big.liveFiles().size == 1)
-    assert(big.liveBytes() > spark.sessionState.conf.filesOpenCostInBytes)
-    assert(big.readLocal().isEmpty, "more bytes than one file-open cost")
+    assert(big.liveBytes() > IncrementalTable.LocalReadMaxBytes)
+    assert(big.readLocal().isEmpty, "more bytes than the byte bound")
   }
 }
