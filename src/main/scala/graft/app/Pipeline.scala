@@ -169,7 +169,11 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
     * ([[IncrementalTable.readLocal]]) however many ticks it has taken.
     * The compaction is a maintenance commit (same rows, same `seq`, the
     * watermark meta untouched) and costs one extra write every
-    * [[listingMaxFiles]] ingesting ticks of a day. */
+    * [[listingMaxFiles]] ingesting ticks of a day.
+    *
+    * Both writes run no Spark job: the append's rows are a local frame
+    * and the compaction reads the small day on the driver, so each
+    * stages on the driver ([[IncrementalTable]]'s driver-side stage). */
   def runListing(req: RunRequest): Unit = {
     if (req.isEmpty) return
     // the listing's own watermark meta rides in the same commit, so a
@@ -184,9 +188,9 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
           partitionValues = Map("day" -> req.day),
           statMeta = Seq(graft.table.StatMeta(s"watermark/${req.day}", "seq")))
       case None =>
-        // one file per append: a local Seq splits over every core, and
-        // each file would grow the day's listing by one more file
-        val df = req.newFiles.toDF("seq", "filename").coalesce(1)
+        // a local frame: it stages on the driver as one file, so each
+        // append grows the day's listing by one file
+        val df = req.newFiles.toDF("seq", "filename")
         val highWater = req.newFiles.map(_._1).max + 1
         listing.append(df, partitionBy = Seq("day"),
           partitionValues = Map("day" -> req.day),
@@ -213,16 +217,18 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
 
   /** P3-P5: one row per file: (filename, word, word_length). `wholetext`
     * keeps file contents atomic per row; `input_file_name` recovers the
-    * filename. Contents are always read by executors (files pack into
-    * read tasks via spark.sql.files.maxPartitionBytes); what varies is
-    * how the *file list* reaches the scan:
+    * filename. What varies is how the *file list* reaches the read:
     *
     *  - small slices (incremental ticks): collect just the new filenames
-    *    and scan exactly those paths — bounded by `maxDriverPaths`, reads
+    *    and read exactly those paths — bounded by `maxDriverPaths`, reads
     *    no stale files. The planner reads a small listing slice on the
     *    driver ([[IncrementalTable.readLocal]]), so this probe runs no
     *    Spark job; a Spark-read slice costs one single-partition probe
-    *    job;
+    *    job. At most [[IncrementalTable.LocalReadMaxFiles]] files of at
+    *    most [[IncrementalTable.LocalReadMaxBytes]] in total are read on
+    *    the driver too ([[wholeTextLocal]]), so the rows reach the
+    *    `processed` write as a local frame that stages with no job;
+    *    more go through `spark.read.text`;
     *  - large slices (backfills): scan the whole day directory once and
     *    `left_semi` join against the listing slice on filename, keeping
     *    the file list fully distributed (VERDICT r1 wrong #1: a
@@ -246,24 +252,71 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
     val probe = (if (local) names else names.coalesce(1))
       .limit(maxDriverPaths + 1).collect()
     if (probe.isEmpty) return empty
+    val words =
+      if (probe.length <= maxDriverPaths)
+        wordsOf(probe.map(f => s"$ingestRoot/day=$day/$f").toSeq)
+      else {
+        val dayDir = s"$ingestRoot/day=$day"
+        wordsOfText(spark.read
+          .option("wholetext", "true")
+          .option("pathGlobFilter", "*.txt")
+          .text(dayDir))
+          .join(slice.select($"filename"), Seq("filename"), "left_semi")
+      }
+    words.withColumn("word_length", length($"word").cast("long"))
+  }
 
-    def parse(df: DataFrame): DataFrame = df
-      .select(
-        element_at(split(input_file_name(), "/"), -1).as("filename"),
-        $"value".as("word"))
-      .withColumn("word_length", length($"word").cast("long"))
+  /** `(filename, word)` of exactly these files: read on the driver when
+    * [[wholeTextLocal]] takes them, else through `spark.read.text`. */
+  private[app] def wordsOf(paths: Seq[String]): DataFrame =
+    wholeTextLocal(paths).getOrElse(
+      wordsOfText(spark.read.option("wholetext", "true").text(paths: _*)))
 
-    if (probe.length <= maxDriverPaths) {
-      val paths = probe.map(f => s"$ingestRoot/day=$day/$f")
-      parse(spark.read.option("wholetext", "true").text(paths: _*))
-    } else {
-      val dayDir = s"$ingestRoot/day=$day"
-      parse(spark.read
-        .option("wholetext", "true")
-        .option("pathGlobFilter", "*.txt")
-        .text(dayDir))
-        .join(slice.select($"filename"), Seq("filename"), "left_semi")
+  /** `(filename, word)` of a `wholetext` read. */
+  private[app] def wordsOfText(df: DataFrame): DataFrame = df.select(
+    element_at(split(input_file_name(), "/"), -1).as("filename"),
+    $"value".as("word"))
+
+  /** `(filename, word)` rows of a few small text files, read on the
+    * driver through the Hadoop FS exactly as the `wholetext` Spark read
+    * yields them: the name is the last segment of the file's URI (as
+    * `input_file_name` renders it, `x y.txt` -> `x%20y.txt`), the word
+    * the file's raw bytes, and an empty file yields no row. None — the
+    * caller reads through Spark — above [[IncrementalTable.LocalReadMaxFiles]]
+    * files or [[IncrementalTable.LocalReadMaxBytes]] bytes, and for any
+    * path the Spark read treats specially: a glob pattern, a name Spark's
+    * file listing hides, a compression-codec extension (Spark
+    * decompresses it), a missing file or a directory. */
+  private[app] def wholeTextLocal(paths: Seq[String]): Option[DataFrame] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    import org.apache.spark.unsafe.types.UTF8String
+    if (paths.size > IncrementalTable.LocalReadMaxFiles) return None
+    val conf = IncrementalTable.hadoopConf(spark)
+    val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    val files = paths.map(new Path(_))
+    if (files.exists { p =>
+        val n = p.getName
+        p.toString.exists("{}[]*?\\".contains(_)) || n.startsWith("_") ||
+          n.startsWith(".") || n.endsWith("._COPYING_") || codecs.getCodec(p) != null
+      }) return None
+    val fs = files.head.getFileSystem(conf)
+    val statuses =
+      try files.map(fs.getFileStatus)
+      catch { case _: java.io.FileNotFoundException => return None }
+    if (statuses.exists(!_.isFile) ||
+        statuses.iterator.map(_.getLen).sum > IncrementalTable.LocalReadMaxBytes) return None
+    val rows = statuses.filter(_.getLen > 0).map { st =>
+      val in = fs.open(st.getPath)
+      val bytes = try in.readAllBytes() finally in.close()
+      InternalRow(UTF8String.fromString(st.getPath.toUri.toString.split("/").last),
+        UTF8String.fromBytes(bytes))
     }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("filename STRING, word STRING")
+    Some(org.apache.spark.sql.graftshim.DmlShim.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows)))
   }
 
   /** `backwards` asset via the planner: full-partition derived transform,

@@ -155,9 +155,12 @@ final class AssetGraph(spark: SparkSession, tablesRoot: String,
     *  - refresh OR PartitionReplace → full recompute + replaceWhere,
     *    scoped to this time partition (W5).
     *
-    * Spark jobs: the planning is metadata and the write is one job, so
-    * a steady-state `processed` (driver-side listing slice) or
-    * `backwards` materialization runs one job each.
+    * Spark jobs: the planning is metadata, and a write stages on the
+    * driver when its rows are already there (a small local frame,
+    * [[IncrementalTable]]'s driver-side stage). So a steady-state
+    * `processed` materialization (driver-side listing slice, files read
+    * on the driver) runs no job, and `backwards` (a Spark read of
+    * `processed`) runs one, its write.
     */
   def materialize(name: String, key: String, refresh: Boolean = false,
       today: LocalDate = LocalDate.now(ZoneOffset.UTC)): Unit = {

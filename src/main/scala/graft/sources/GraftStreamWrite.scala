@@ -1,21 +1,14 @@
 package graft.sources
 
-import java.util.UUID
-
-import scala.collection.mutable
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 
 import graft.parquet.RowParquet
-import graft.table.IncrementalTable
+import graft.table.{HiveDirWriter, IncrementalTable}
 
 /** A task's staged files: paths RELATIVE to the epoch's staging dir
   * (hive layout included), reported back for the driver-side commit —
@@ -30,9 +23,10 @@ final case class GraftTaskFiles(rels: Seq[String]) extends WriterCommitMessage
   * + `internalCreateDataFrame` shim are retired).
   *
   * Execution shape: executors write parquet directly into a per-epoch
-  * staging dir under the table root via [[RowParquet]] (partition
+  * staging dir under the table root via [[HiveDirWriter]] (partition
   * values route to hive dirs, data files carry only data columns —
-  * byte-identical layout to the batch writer); the driver-side
+  * the same layout Spark's batch writer stages, and the same writer
+  * the table's driver-side stage runs for local frames); the driver-side
   * `commit(epoch)` then promotes exactly the task-reported files and
   * publishes ONE log commit carrying the (appId, batchId) replay guard,
   * so a crash replay of a committed epoch short-circuits at the log
@@ -114,100 +108,22 @@ private[sources] final class GraftStreamWriterFactory(stageNsUri: String,
       conf.value, partitionId, taskId, codec)
 }
 
-/** Executor-side writer: routes each row to its hive partition dir
-  * (values rendered exactly as the batch writer's —
-  * [[RowParquet.partitionToken]] mirrors Spark's escapePathName), strips
-  * the partition columns from the written file, and reports the staged
-  * rel paths on task commit. One open file per partition value per
-  * task, same as Spark's dynamic-partition writer without sorting. */
+/** Executor-side writer: one [[HiveDirWriter]] per task, reporting its
+  * staged rel paths on task commit. */
 private[sources] final class GraftStreamDataWriter(epochStage: Path,
     schema: StructType, partitionBy: Seq[String],
     transformSpecs: Seq[(String, String)], conf: Configuration,
     partitionId: Int, taskId: Long,
     codec: String = "snappy") extends DataWriter[InternalRow] {
 
-  // per partition column: Left(field ordinal) routes an identity
-  // column by its row value; Right(transform, base ordinal) derives
-  // the token per row (X77) — parse against the write schema is loud
-  // when the stream projection dropped the base column
-  private val routes: Array[Either[Int, (graft.table.PartitionTransform, Int)]] = {
-    val specs = transformSpecs.toMap
-    partitionBy.map { p =>
-      specs.get(p) match {
-        case Some(spec) =>
-          val t = graft.table.PartitionTransform.parse(spec, schema)
-          Right((t, schema.fieldIndex(t.base)))
-        case None => Left(schema.fieldIndex(p))
-      }
-    }.toArray
-  }
-  private val partOrds: Array[Int] = routes.collect { case Left(o) => o }
-  private val dataOrds: Array[Int] =
-    schema.fields.indices.filterNot(partOrds.contains(_)).toArray
-  private val dataSchema = StructType(dataOrds.map(schema.fields(_)))
+  private val out = new HiveDirWriter(epochStage, schema, partitionBy,
+    transformSpecs, conf, partitionId, taskId, codec)
 
-  private val writers = mutable.LinkedHashMap.empty[String, ParquetWriter[InternalRow]]
-  private val rels = mutable.ArrayBuffer.empty[String]
-  private val buf = new GenericInternalRow(dataOrds.length)
+  override def write(row: InternalRow): Unit = out.write(row)
 
-  override def write(row: InternalRow): Unit = {
-    val dir = {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < routes.length) {
-        if (i > 0) sb.append('/')
-        sb.append(partitionBy(i)).append('=')
-        routes(i) match {
-          case Left(ord) =>
-            val dt = schema.fields(ord).dataType
-            val v = if (row.isNullAt(ord)) null else row.get(ord, dt)
-            sb.append(RowParquet.partitionToken(v, dt))
-          case Right((t, ord)) =>
-            val dt = schema.fields(ord).dataType
-            val v = if (row.isNullAt(ord)) null else t.eval(row.get(ord, dt))
-            sb.append(RowParquet.partitionToken(v,
-              org.apache.spark.sql.types.StringType))
-        }
-        i += 1
-      }
-      sb.toString
-    }
-    val w = writers.getOrElseUpdate(dir, {
-      val rel = (if (dir.isEmpty) "" else dir + "/") +
-        f"part-$partitionId%05d-$taskId-${UUID.randomUUID()}.$codec.parquet"
-      rels += rel
-      RowParquet.writer(
-        HadoopOutputFile.fromPath(new Path(epochStage, rel), conf),
-        dataSchema, conf, codec)
-    })
-    var i = 0
-    while (i < dataOrds.length) {
-      val ord = dataOrds(i)
-      val dt = dataSchema.fields(i).dataType
-      buf.update(i, if (row.isNullAt(ord)) null else row.get(ord, dt))
-      i += 1
-    }
-    w.write(buf)
-  }
+  override def commit(): WriterCommitMessage = GraftTaskFiles(out.commit())
 
-  override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_.close())
-    writers.clear()
-    GraftTaskFiles(rels.toSeq)
-  }
+  override def abort(): Unit = out.abort()
 
-  override def abort(): Unit = {
-    writers.values.foreach(w => try w.close() catch { case _: Exception => })
-    writers.clear()
-    val fs = epochStage.getFileSystem(conf)
-    rels.foreach { rel =>
-      try { fs.delete(new Path(epochStage, rel), false); () }
-      catch { case _: Exception => }
-    }
-  }
-
-  override def close(): Unit = {
-    writers.values.foreach(w => try w.close() catch { case _: Exception => })
-    writers.clear()
-  }
+  override def close(): Unit = out.close()
 }

@@ -885,6 +885,10 @@ final class IncrementalTable(spark: SparkSession, val root: String,
   def read(filters: Map[String, String] = Map.empty): DataFrame =
     readInternal(filters, None)
 
+  // the last readLocal's decoded files, by (rel path, committed schema)
+  @volatile private var localRows =
+    Map.empty[(String, StructType), Vector[org.apache.spark.sql.catalyst.InternalRow]]
+
   /** [[read]] answered on the driver: the partition's committed rows as
     * a `LocalRelation` frame, pinned to the current snapshot and read
     * with [[graft.parquet.RowParquet]]. Building it runs no Spark job,
@@ -902,7 +906,10 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * (foreign) files; one dir shape; no CHAR/VARCHAR columns; and
     * partition columns of a type
     * [[graft.parquet.RowParquet.partitionParser]] parses. Under those
-    * conditions it equals [[read]] in schema and rows. */
+    * conditions it equals [[read]] in schema and rows. A file the
+    * previous call decoded under the same schema is not decoded again
+    * (the tick's seen-diff and `processed` slice read one day, one
+    * append apart); only the current scope's rows stay cached. */
   def readLocal(filters: Map[String, String] = Map.empty): Option[DataFrame] = {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -929,13 +936,20 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     val statuses = files.map(statusOf)
     if (statuses.iterator.map(_.getLen).sum > IncrementalTable.LocalReadMaxBytes) return None
     val conf = hadoopConf(spark)
-    val rows = files.zip(statuses).flatMap { case (f, st) =>
-      val in = new graft.parquet.RowParquet.FileRows(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
-        schema, dirTokens(root, f))
-      try Iterator.continually(in.next()).takeWhile(_ != null).toVector
-      finally in.close()
+    // committed files never change: a file the previous call decoded
+    // under the same schema is reused, and only this scope is kept
+    val cached = localRows
+    val decoded = files.zip(statuses).map { case (f, st) =>
+      (f, schema) -> cached.getOrElse((f, schema), {
+        val in = new graft.parquet.RowParquet.FileRows(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+          schema, dirTokens(root, f))
+        try Iterator.continually(in.next()).takeWhile(_ != null).toVector
+        finally in.close()
+      })
     }
+    localRows = decoded.toMap
+    val rows = decoded.flatMap(_._2)
     // the Spark path's schema: data columns read nullable (as a file
     // source's data schema does), partition columns as committed
     local(StructType(schema.fields.map(f =>
@@ -5072,7 +5086,11 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // 1. stage: write into a unique dir so added files are exactly known.
     //    Staging FIRST (not probing df.isEmpty) means the input lineage
     //    computes exactly once; a partitioned write of zero rows stages
-    //    no files, which IS the W6 empty-write signal.
+    //    no files, which IS the W6 empty-write signal. Rows already on
+    //    the driver (a small local frame: a listing append, a tick's
+    //    `processed` rows, a driver-read compaction) stage there with no
+    //    Spark job ([[stageOnDriver]]); everything else stages through
+    //    Spark's parquet writer.
     val stage = new Path(stagingPath, UUID.randomUUID().toString)
     // Parquet bloom filters complement the log-level [min,max] index:
     // the log prunes FILES for range predicates, the in-file bloom
@@ -5106,10 +5124,12 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // per-root locked) never restore INT96 under each other mid-stage
     // or leave MICROS permanently set (ADVICE r4 #3).
     val tStage0 = System.nanoTime()
-    withMicrosTimestamps(spark) {
-      (if (physPartitionBy.nonEmpty) writer.partitionBy(physPartitionBy: _*)
-       else writer).parquet(stage.toString)
-    }
+    val bloomed = bloomColumns.nonEmpty || bloomIndexColumns.nonEmpty
+    if (bloomed || !stageOnDriver(physParts, physPartitionBy, stage))
+      withMicrosTimestamps(spark) {
+        (if (physPartitionBy.nonEmpty) writer.partitionBy(physPartitionBy: _*)
+         else writer).parquet(stage.toString)
+      }
     val stageMs = (System.nanoTime() - tStage0) / 1000000
     val stagedFiles = listParquet(fs, stage).map { case (p, len, mtime) =>
       (relativize(stage, p), len, mtime)
@@ -5455,6 +5475,70 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         totalMs = (tEnd - tWrite0) / 1000000, files = added.size))
       Some(c)
     }
+  }
+
+  /** The stage phase for rows already on the driver: a frame whose
+    * optimized plan, once single-partition repartitions are dropped, is
+    * a `LocalRelation` of at most [[IncrementalTable.LocalReadMaxBytes]]
+    * is written straight into `stage` by [[HiveDirWriter]], one file per
+    * partition dir: the layout, codec (`graft.parquet.compression`, else
+    * the session's parquet codec) and nullability Spark's writer stages,
+    * without its job. False, with nothing written, for any other frame
+    * and for what the writer does not encode the way Spark does
+    * (CHAR/VARCHAR, a type [[graft.parquet.RowParquet.messageType]]
+    * lacks, a partition column type without a hive-path parser, a write
+    * of partition columns only or of duplicate names); the caller then
+    * stages through Spark. */
+  private def stageOnDriver(df: DataFrame, partitionBy: Seq[String],
+      stage: Path): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition}
+    import org.apache.spark.sql.catalyst.util.CharVarcharUtils
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    val qe = df.queryExecution
+    // only frames built from local rows can fold into one; checked on
+    // the analyzed plan so a scan's write never pays an extra optimize
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) return false
+    // a single-partition repartition only sets the file count, and the
+    // driver stage writes one file per dir anyway; the optimizer keeps a
+    // projection above it (`coalesce(1)` then the partition `lit`), so
+    // it is dropped before folding
+    val unsplit = qe.analyzed.transformUp { case Repartition(1, _, c) => c }
+    val optimized =
+      if (unsplit eq qe.analyzed) qe.optimizedPlan
+      else org.apache.spark.sql.graftshim.DmlShim.ofRows(spark, unsplit)
+        .queryExecution.optimizedPlan
+    val local = optimized match {
+      case l: LocalRelation => l
+      case _ => return false
+    }
+    val schema = df.schema
+    val parts = partitionBy.toSet
+    val dataSchema = StructType(schema.fields.filterNot(f => parts(f.name)))
+    val codec = tableProperties.get("graft.parquet.compression")
+      .getOrElse(spark.conf.get("spark.sql.parquet.compression.codec"))
+      .trim.toLowerCase(java.util.Locale.ROOT) match {
+        case "none" => "uncompressed"
+        case c => c
+      }
+    val encodable = local.stats.sizeInBytes <= IncrementalTable.LocalReadMaxBytes &&
+      schema.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.length ==
+        schema.length &&
+      dataSchema.nonEmpty && !CharVarcharUtils.hasCharVarchar(schema) &&
+      partitionBy.forall(p => schema.fieldNames.contains(p) &&
+        graft.parquet.RowParquet.partitionParser(schema(p).dataType).isDefined) &&
+      scala.util.Try(graft.parquet.RowParquet.messageType(dataSchema)).isSuccess &&
+      scala.util.Try(CompressionCodecName.valueOf(codec.toUpperCase(java.util.Locale.ROOT)))
+        .isSuccess
+    if (!encodable) return false
+    fs.mkdirs(stage)
+    val out = new HiveDirWriter(stage, schema, partitionBy, Nil, hadoopConf(spark),
+      0, 0L, codec)
+    try {
+      local.data.foreach(out.write)
+      if (local.data.isEmpty) out.writeSchemaOnly()
+      out.commit()
+    } catch { case e: Throwable => out.abort(); throw e }
+    true
   }
 
   /** Phase breakdown of this handle's last data-commit write (the
@@ -6066,8 +6150,15 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       }
     // row-tracked tables carry ids through the rewrite (X87): ids are
-    // stable across compaction
-    val base = readInternal(partitionFilter, None, keepRowId = rowTracked)
+    // stable across compaction. A plain one-file rewrite of a small
+    // scope reads it on the driver, so `repartition(1)` over the local
+    // rows stages on the driver too and the compaction runs no job
+    val tracked = rowTracked
+    val base =
+      if (!tracked && clusterBy.isEmpty && zorderBy.isEmpty && targetBytes <= 0 &&
+          nFiles == 1)
+        readLocal(partitionFilter).getOrElse(readInternal(partitionFilter, None))
+      else readInternal(partitionFilter, None, keepRowId = tracked)
     val df =
       if (zorderBy.nonEmpty) {
         // string dimensions enter the curve via their packed-long

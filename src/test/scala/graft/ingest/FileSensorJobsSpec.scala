@@ -12,8 +12,9 @@ import graft.table.IncrementalTable
   * `seq` is the listing's `watermark/<day>` meta, and the seen-diff is
   * one bounded scan of the listing. A small day's listing is read on the
   * driver, so the tick runs no Spark job, and the listing append keeps
-  * the day small by compacting it; a day with more listing files than
-  * the driver-side read allows keeps the one-job Spark scan. */
+  * the day small by compacting it, both staged on the driver with no
+  * job; a day with more listing files than the driver-side read allows
+  * keeps the one-job Spark scan. */
 class FileSensorJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -67,15 +68,21 @@ class FileSensorJobsSpec extends SparkSpec {
       .map(_.getFileName.toString).toSeq.sorted
     // one append per two arrivals, as a tick that lands every batch in
     // today's partition makes them: each adds one file, and the day
-    // compacts to one file past the pipeline's bound
+    // compacts to one file past the pipeline's bound. The append and
+    // the compaction both stage on the driver: none runs a Spark job
     var files = 0
+    var compactions = 0
     names.take(arrivals).zipWithIndex.grouped(2).foreach { batch =>
-      pipe.runListing(RunRequest(day, batch.map { case (f, i) => (i.toLong, f) }))
+      val (_, jobs) = jobsDuring(
+        pipe.runListing(RunRequest(day, batch.map { case (f, i) => (i.toLong, f) })))
       val n = pipe.listing.liveFiles(Map("day" -> day)).size
       assert(n == files + 1 || n == 1, s"an append took the day from $files to $n listing files")
       assert(n <= pipe.listingMaxFiles, s"the day holds $n listing files")
+      assert(jobs == 0, s"an append taking the day from $files to $n files ran $jobs Spark jobs")
+      if (n < files) compactions += 1
       files = n
     }
+    assert(compactions >= 1)
     assert(pipe.listing.latestMeta(s"watermark/$day").contains(arrivals.toString))
     assert(listing(pipe) == names.take(arrivals).zipWithIndex.map {
       case (f, i) => (i.toLong, f)

@@ -79,6 +79,23 @@ class LocalReadSpec extends SparkSpec {
       Seq((1L, 1.5d), (2L, 2.25d), (3L, 3.125d)))
   }
 
+  test("reused decodes stay equal to read across appends, a new column and a compaction") {
+    val t = table("reused")
+    val day = Map("p" -> "1")
+    t.append(Seq((1L, "a", 1), (2L, "b", 1), (9L, "z", 2)).toDF("id", "v", "p"),
+      partitionBy = Seq("p"))
+    assert(sameAsRead(t, day).count() == 2)
+    t.append(Seq((3L, "c", 1)).toDF("id", "v", "p"), partitionBy = Seq("p"))
+    assert(sameAsRead(t, day).count() == 3)
+    t.addColumns(StructType.fromDDL("c BIGINT"))
+    val widened = sameAsRead(t, day)
+    assert(widened.columns.contains("c") && widened.filter($"c".isNotNull).count() == 0)
+    t.compact(day)
+    assert(t.liveFiles(day).size == 1)
+    assert(sameAsRead(t, day).count() == 3)
+    assert(sameAsRead(t).count() == 4)
+  }
+
   private def seeded(name: String): IncrementalTable = {
     val t = table(name)
     t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), Nil)
