@@ -27,14 +27,16 @@ final case class GraftTaskFiles(rels: Seq[String]) extends WriterCommitMessage
   * values route to hive dirs, data files carry only data columns —
   * the same layout Spark's batch writer stages, and the same writer
   * the table's driver-side stage runs for local frames); the driver-side
-  * `commit(epoch)` then promotes exactly the task-reported files and
-  * publishes ONE log commit carrying the (appId, batchId) replay guard,
-  * so a crash replay of a committed epoch short-circuits at the log
-  * before any file moves — the same exactly-once contract as the
-  * library's foreachBatch sinks, now with zero per-batch re-planning
-  * (the V1 sink re-materialized every micro-batch through a second
-  * QueryExecution; here rows stream straight from the running plan into
-  * the staged files).
+  * `commit(epoch)` then hands exactly the task-reported files to
+  * [[IncrementalTable.commitStagedStream]]. Past the (appId, batchId)
+  * replay guard — a crash replay of a committed epoch short-circuits at
+  * the log before any file moves — the epoch commits through the same
+  * post-stage path as a batch `append`: layout guard, footer stats,
+  * sidecars, promote and ONE log commit, timed into
+  * [[IncrementalTable.lastWriteTiming]]. That is the exactly-once
+  * contract of the library's foreachBatch sinks with zero per-batch
+  * re-planning: rows stream straight from the running plan into the
+  * staged files.
   *
   * `truncate` (Complete output mode, via the write builder's
   * SupportsTruncate): each epoch commits a full atomic replace instead

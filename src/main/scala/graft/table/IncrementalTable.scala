@@ -345,13 +345,6 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     finally in.close()
   }
 
-  /** Commit version → action over `fromExclusive < v <= toVersion`,
-    * read from the RAW delta records (so it survives checkpoint
-    * folding) — the streaming source's skip-rewrites filter needs
-    * actions the folded replay no longer carries. O(window). */
-  def commitActions(fromExclusive: Long, toVersion: Long): Map[Long, String] =
-    deltasBetween(fromExclusive, toVersion).map(c => c.version -> c.action).toMap
-
   /** First commit version with `ts >= millis`, resolved over the RAW
     * delta records (survives checkpoint folding): a timestamp
     * predating the replay horizon resolves to the TRUE historical
@@ -3765,8 +3758,8 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * extra column-pruned job — opt-in, the CBO tax), each UNIONed
     * driver-side with the channel's running sketch. Never shrinks, so
     * deletes leave NDV an overestimate — the safe direction for join
-    * planning. Shared by the batch write choke point AND the
-    * streaming sink's executor-staged fast path. */
+    * planning. Run by [[commitStaged]], so batch writes and the
+    * streaming sink's epochs fold alike. */
   private def ndvMetaFor(stage: Path, staged: Seq[String],
       mapping: Map[String, String]): Map[String, String] = {
     val ndvCols0 = tableProperties.get("graft.ndvColumns").toSeq
@@ -4777,27 +4770,41 @@ final class IncrementalTable(spark: SparkSession, val root: String,
 
   /** Commit files ALREADY STAGED by a DSv2 streaming write's executors
     * ([[graft.sources.GraftStreamingWrite]]): the driver-side half of
-    * the streaming epoch commit. Mirrors [[write]]'s promote-then-commit
-    * contract — footer stats harvested from the staged files feed the
-    * same data-skipping index, CHECK constraints validate against the
-    * staged batch BEFORE anything moves, and the (appId, batchId) guard
-    * makes a replayed epoch a no-op at the log. Only `rels` (the
-    * task-reported file list) is promoted; anything else in the stage
-    * dir is a speculative/retried task's orphan and is dropped with the
-    * dir. `replace` commits a full atomic overwrite instead of an
-    * append (the Complete-output-mode shape). */
+    * the streaming epoch commit. What is specific to an epoch happens
+    * here: the (appId, batchId) guard makes a replayed epoch a no-op
+    * that drops its stage, and CHECK constraints validate against the
+    * staged batch BEFORE anything moves. The rest is [[commitStaged]],
+    * the commit path of every batch write after its stage — layout
+    * guard, footer-harvested skipping index, NDV / bloom sidecars,
+    * promote, publish, and [[lastWriteTiming]] (with stage 0 ms: the
+    * executors staged inside the query's own job). Only `rels` (the
+    * task-reported file list) is committed; anything else in the stage
+    * dir is a speculative/retried task's orphan and goes with the dir.
+    * `replace` commits a full atomic overwrite instead of an append
+    * (the Complete-output-mode shape); `upsertKeys` puts the epoch's
+    * keys in force as an equality delete inside the epoch's commit, as
+    * [[upsertByKey]] does. */
   def commitStagedStream(stage: Path, rels: Seq[String], incoming: StructType,
       partitionBy: Seq[String], replace: Boolean, batchId: Long,
       appId: String, statsColumns: Seq[String] = Nil,
-      // X105 streaming MOR upsert: each epoch's keys go in force as an
-      // equality delete IN the epoch's commit — the exactly-once
-      // CDC-upsert sink (`.option("upsertKeys", "id")`)
+      // X105 streaming MOR upsert: the exactly-once CDC-upsert sink
+      // (`.option("upsertKeys", "id")`)
       upsertKeys: Seq[String] = Nil): Option[Commit] = {
     require(upsertKeys.isEmpty || !replace,
       "upsertKeys and Complete-mode truncate are mutually exclusive")
     if (hasBatch(batchId, Some(appId))) {
       fs.delete(stage, true) // replayed epoch: stage is redundant
       return None
+    }
+    val tWrite0 = System.nanoTime()
+    // the staged batch as a logical frame: files carry PHYSICAL names,
+    // basePath restores the dir-encoded partition values
+    def stagedBatch: DataFrame = {
+      val mapping = columnMapping()
+      spark.read.option("basePath", stage.toString)
+        .schema(physicalSchema(incoming, mapping))
+        .parquet(rels.map(r => new Path(stage, r).toString): _*)
+        .select(incoming.fields.toIndexedSeq.map(logicalCol(_, mapping)): _*)
     }
     // IDENTITY / GENERATED columns (VERDICT r8 #7): minting and
     // verification live at the batch write choke point, which the
@@ -4807,48 +4814,27 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // point — one extra Spark job per epoch, the price of minting —
     // under the same (appId, batchId) replay guard, so exactly-once
     // holds identically. Every other table keeps the zero-replan path.
-    if (identityColumns().nonEmpty || generatedColumns().nonEmpty ||
-        rowTracked) {
+    if (rels.nonEmpty &&
+        (identityColumns().nonEmpty || generatedColumns().nonEmpty || rowTracked)) {
+      val staged = stagedBatch
       val out =
-        if (rels.isEmpty) {
-          // same empty-epoch semantics as the fast path below
-          val removed = if (replace) liveFiles() else Seq.empty
-          if (removed.nonEmpty) {
-            val schema = snapshot.schemaDdl
-            Some(commit(Commit(0, "replace", Nil, removed, Map.empty,
-              partitionBy, schema, Map.empty, Some(batchId), now(),
-              appId = Some(appId))))
-          } else None
-        } else {
-          val mapping = columnMapping()
-          val staged = spark.read.option("basePath", stage.toString)
-            .schema(physicalSchema(incoming, mapping))
-            .parquet(rels.map(r => new Path(stage, r).toString): _*)
-            .select(incoming.fields.toIndexedSeq.map(logicalCol(_, mapping)): _*)
-          if (replace)
-            replaceWhere(staged, partitionBy, Map.empty, Map.empty,
-              batchId = Some(batchId), appId = Some(appId),
-              statsColumns = statsColumns)
-          else if (upsertKeys.nonEmpty)
-            upsertByKey(staged, upsertKeys, partitionBy,
-              batchId = Some(batchId), appId = Some(appId),
-              statsColumns = statsColumns)
-          else append(staged, partitionBy, batchId = Some(batchId),
-            appId = Some(appId), statsColumns = statsColumns)
-        }
+        if (replace)
+          replaceWhere(staged, partitionBy, Map.empty, Map.empty,
+            batchId = Some(batchId), appId = Some(appId),
+            statsColumns = statsColumns)
+        else if (upsertKeys.nonEmpty)
+          upsertByKey(staged, upsertKeys, partitionBy,
+            batchId = Some(batchId), appId = Some(appId),
+            statsColumns = statsColumns)
+        else append(staged, partitionBy, batchId = Some(batchId),
+          appId = Some(appId), statsColumns = statsColumns)
       fs.delete(stage, true)
       return out
     }
     if (rels.nonEmpty && constraints.nonEmpty) {
       // validate the staged batch exactly as the batch path's in-scan
-      // guard would — a violation aborts before any file moves. Staged
-      // files carry PHYSICAL names; constraints reference logical ones.
-      val mapping = columnMapping()
-      val reader = spark.read.option("basePath", stage.toString)
-        .schema(physicalSchema(incoming, mapping))
-      val staged = reader
-        .parquet(rels.map(r => new Path(stage, r).toString): _*)
-        .select(incoming.fields.toIndexedSeq.map(logicalCol(_, mapping)): _*)
+      // guard would — a violation aborts before any file moves
+      val staged = stagedBatch
       constraints.foreach { case (name, check) =>
         val e = org.apache.spark.sql.functions.expr(check)
         require(staged.filter(org.apache.spark.sql.functions.not(e))
@@ -4856,72 +4842,21 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           s"CHECK constraint '$name' violated by streaming batch $batchId: $check")
       }
     }
-    val (_, perFile) = stagedFooterStats(stage, rels, statsColumns.toSet,
-      needRows = false)
-    // NDV sketches fold on the streaming fast path too (X88) — a
-    // micro-batch-ingested table's estimates track its growth
-    val streamNdvMeta = ndvMetaFor(stage, rels, columnMapping())
-    // ...and so does the bloom index (X100): a micro-batch-ingested
-    // table stays point-lookup-prunable epoch by epoch
-    bloomSidecarFor(stage, rels, columnMapping())
-    val statsIdx = statsColumns.toSet
-    val fileStats =
-      if (statsIdx.isEmpty) Map.empty[String, Map[String, ColStat]]
-      else perFile.view.mapValues(_.view.filterKeys(statsIdx).toMap)
-        .filter(_._2.nonEmpty).toMap
-    // X105: the epoch's distinct keys (read off the staged files —
-    // physical names, basePath restores dir-encoded values) go in
-    // force with fence = current head; the epoch's own adds escape
-    val upsertMeta: Map[String, String] =
-      if (upsertKeys.isEmpty || rels.isEmpty) Map.empty
-      else {
-        val mapping = columnMapping()
-        val storedNow = committedSchemaAt().getOrElse(
-          throw new IllegalArgumentException(
-            s"streaming upsert target $root has no committed schema"))
-        upsertKeys.foreach(c => require(storedNow.fieldNames.contains(c),
-          s"upsertKeys column '$c' is not a column of $root"))
-        val phys = upsertKeys.map(physPath(_, mapping))
-        val fn = org.apache.spark.sql.functions.col _
-        val dk = spark.read.option("basePath", stage.toString)
-          .schema(physicalSchema(incoming, mapping))
-          .parquet(rels.map(r => new Path(stage, r).toString): _*)
-          .select(phys.map(fn): _*).distinct()
-        val gen = UUID.randomUUID().toString
-        writeEqDelSidecar(dk, gen)
-        Map(IncrementalTable.EqDelPrefix + gen ->
-          Serialization.write(EqDelPayload(latestVersion, phys)))
-      }
-    val out =
-      if (rels.isEmpty) {
-        // empty epoch: elide (W6) — a replayed empty epoch re-elides,
-        // so skipping the batchId record is harmless. A Complete-mode
-        // empty result still truncates: an empty aggregate IS a result.
-        val removed = if (replace) liveFiles() else Seq.empty
-        if (removed.nonEmpty) {
-          val schema = snapshot.schemaDdl
-          Some(commit(Commit(0, "replace", Nil, removed, Map.empty,
-            partitionBy, schema, Map.empty, Some(batchId), now(),
-            appId = Some(appId))))
-        } else None
-      } else {
-        val added = rels.map { rel =>
-          val from = new Path(stage, rel)
-          val to = new Path(rootPath, rel)
-          fs.mkdirs(to.getParent)
-          if (!fs.rename(from, to))
-            throw new java.io.IOException(s"rename failed: $from -> $to")
-          rel
-        }
-        val removed = if (replace) liveFiles() else Seq.empty
-        val schemaDdl = IncrementalTable.ddlOf(mergedSchema(incoming))
-        Some(commit(Commit(0, if (replace) "replace" else "append", added,
-          removed, Map.empty, partitionBy, schemaDdl,
-          streamNdvMeta ++ upsertMeta,
-          Some(batchId), now(), appId = Some(appId), fileStats = fileStats)))
-      }
-    fs.delete(stage, true)
-    if (upsertMeta.nonEmpty && out.isDefined) maybeAutoApplyEqDeletes()
+    // one listing of the stage dir, kept to the reported files
+    val reported = rels.toSet
+    val stagedFiles =
+      if (rels.isEmpty) Seq.empty
+      else listParquet(fs, stage).map { case (p, len, mtime) =>
+        (relativize(stage, p), len, mtime)
+      }.filter(f => reported(f._1))
+    require(stagedFiles.size == reported.size,
+      s"streaming batch $batchId: reported files missing from $stage: " +
+        (reported -- stagedFiles.map(_._1)).mkString(", "))
+    val out = commitStaged(stage, stagedFiles, incoming, stageMs = 0L, tWrite0,
+      if (replace) "replace" else "append", partitionBy, Map.empty, Map.empty,
+      Some(batchId), Some(appId), statsColumns = statsColumns,
+      eqDeleteKeys = upsertKeys)
+    if (upsertKeys.nonEmpty && out.isDefined) maybeAutoApplyEqDeletes()
     out
   }
 
@@ -5081,8 +5016,6 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       renamed.as(physPath(c, mapping))
     }: _*)
     val physPartitionBy = partitionBy.map(physPath(_, mapping))
-    val physStatsColumns = statsColumns.map(physPath(_, mapping))
-    val physStatMetaCols = statMeta.map(sm => physPath(sm.column, mapping))
     // 1. stage: write into a unique dir so added files are exactly known.
     //    Staging FIRST (not probing df.isEmpty) means the input lineage
     //    computes exactly once; a partitioned write of zero rows stages
@@ -5134,6 +5067,37 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     val stagedFiles = listParquet(fs, stage).map { case (p, len, mtime) =>
       (relativize(stage, p), len, mtime)
     }
+    commitStaged(stage, stagedFiles, withParts.schema, stageMs, tWrite0,
+      action, partitionBy, partitionFilter, meta, batchId, appId, dynamic,
+      statMeta, statsColumns, removeExact, extraDv, wapId, branch, eqDeleteKeys)
+  }
+
+  /** The write path after its stage, shared by [[write]] (after
+    * [[stageOnDriver]] or Spark's parquet stage) and the streaming sink
+    * ([[commitStagedStream]], over its tasks' reported files):
+    * `stagedFiles` (stage-relative path, length, mtime) in the filled
+    * `stage` dir become one commit. `incoming` is the batch's LOGICAL
+    * schema; the remaining parameters are [[write]]'s. In order: the
+    * layout guard, the footer harvest (watermark, identity and row-id
+    * high-waters, the skipping index), the NDV and bloom sidecars, the
+    * upsert's equality delete, then a branch or WAP staging record, an
+    * empty write's elision, or [[promote]] and the commit, timed into
+    * [[lastWriteTiming]]. A zero-row file (the footer-only file Spark
+    * writes for an empty task) never leaves the stage. */
+  private def commitStaged(stage: Path, stagedFiles: Seq[(String, Long, Long)],
+      incoming: StructType, stageMs: Long, tWrite0: Long, action: String,
+      partitionBy: Seq[String], partitionFilter: Map[String, String],
+      meta: Map[String, String], batchId: Option[Long], appId: Option[String],
+      dynamic: Boolean = false, statMeta: Seq[StatMeta] = Nil,
+      statsColumns: Seq[String] = Nil, removeExact: Option[Seq[String]] = None,
+      extraDv: Map[String, Seq[String]] = Map.empty,
+      wapId: Option[String] = None, branch: Option[String] = None,
+      eqDeleteKeys: Seq[String] = Nil): Option[Commit] = {
+    val mapping = columnMapping()
+    val ptransforms = partitionTransforms()
+    val tracked = rowTracked
+    val physStatsColumns = statsColumns.map(physPath(_, mapping))
+    val physStatMetaCols = statMeta.map(sm => physPath(sm.column, mapping))
     val staged = stagedFiles.map(_._1)
     // Writes never change the layout (X76): a data write whose layout
     // differs from the committed one would interleave two hive
@@ -5153,7 +5117,8 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           "(X81), never as a side effect of a write")
     }
     // partitioned zero-row writes stage no files; non-partitioned ones
-    // stage one schema-only file — detect via footer counts (no job).
+    // stage one schema-only file, and Spark's stage adds a footer-only
+    // file per empty task — detected via footer row counts (no job).
     // The same footer pass yields per-file column [min,max]: the global
     // max feeds statMeta watermarks, the per-file entries become the
     // commit's data-skipping index (statsColumns). Keys are PHYSICAL.
@@ -5164,10 +5129,13 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     val physIdCols = idSpecs.keys.map(physPath(_, mapping)).toSet ++
       (if (tracked) Set(IncrementalTable.RowIdCol) else Set.empty)
     val tHarvest0 = System.nanoTime()
-    val (stagedRows, perFile) = stagedFooterStats(stage, staged,
+    val (fileRows, perFile) = stagedFooterStats(stage, staged,
       physStatMetaCols.toSet ++ physStatsColumns ++ physIdCols,
       needRows = partitionBy.isEmpty)
     val harvestMs = (System.nanoTime() - tHarvest0) / 1000000
+    // the files with rows: everything downstream sees only these
+    val live = stagedFiles.filterNot(f => fileRows.get(f._1).contains(0L))
+    val liveRels = live.map(_._1)
     // watermarks are integral by contract — fail LOUDLY if one was
     // declared on a string column (silently pinning to the floor would
     // make an incremental consumer rescan or skip everything, forever)
@@ -5206,12 +5174,12 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     // union never shrinks, so deletes leave NDV an overestimate — the
     // safe direction for join planning. Keys are LOGICAL; rename
     // migrates them.
-    val ndvMeta: Map[String, String] = ndvMetaFor(stage, staged, mapping)
+    val ndvMeta: Map[String, String] = ndvMetaFor(stage, liveRels, mapping)
     // per-file bloom index (X100): harvested from the staged files
     // (same rel paths after promote), one opt-in column-pruned job;
     // WAP stagings harvest too — the sidecar is inert until the files
     // go live at publish
-    bloomSidecarFor(stage, staged, mapping)
+    bloomSidecarFor(stage, liveRels, mapping)
     // row-id high-water (X87): monotone clamp, same shape as idhw
     val rowHwMeta =
       if (!tracked) None
@@ -5249,12 +5217,12 @@ final class IncrementalTable(spark: SparkSession, val root: String,
             s"upsertByKey key '$c' is a partition column — its values " +
               "are dir-encoded, not in the staged file bytes")
         }
-        if (staged.isEmpty || stagedRows == 0) Map.empty
+        if (liveRels.isEmpty) Map.empty
         else {
           val phys = eqDeleteKeys.map(physPath(_, mapping))
           val fn = org.apache.spark.sql.functions.col _
           val dk = spark.read
-            .parquet(staged.map(r => new Path(stage, r).toString): _*)
+            .parquet(liveRels.map(r => new Path(stage, r).toString): _*)
             .select(phys.map(fn): _*).distinct()
           val gen = UUID.randomUUID().toString
           writeEqDelSidecar(dk, gen)
@@ -5269,15 +5237,28 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     val statsIdx = physStatsColumns.toSet
     val fileStats =
       if (statsIdx.isEmpty) Map.empty[String, Map[String, ColStat]]
-      else perFile.view.mapValues(_.view.filterKeys(statsIdx).toMap)
+      else perFile.view.filterKeys(liveRels.toSet)
+        .mapValues(_.view.filterKeys(statsIdx).toMap)
         .filter(_._2.nonEmpty).toMap
     // derived (transform) partition columns are routing-only: they
     // must never enter the committed schema
     // ...and so is the row-tracking id column (X87): physical-only
     lazy val stagedSchemaDdl = IncrementalTable.ddlOf(
-      mergedSchema(StructType(withParts.schema.fields
+      mergedSchema(StructType(incoming.fields
         .filterNot(f => ptransforms.contains(f.name) ||
           f.name == IncrementalTable.RowIdCol))))
+    // the invisible `staged` record of a branch or WAP write: it
+    // carries the identity/row-id high-water advances DIRECTLY (a
+    // reservation): every later mint reads the channel and lands above
+    // the staged files' baked values, so publish can never mint-collide
+    // — and the OCC idhw/rowhw conflict rule covers stage-vs-write
+    // races like any other commit. ndv/ stays deferred in the payload
+    // (statistics must not count unpublished rows).
+    def stagedRecord(key: String, payload: AnyRef): Option[Commit] =
+      Some(commit(Commit(0, "staged", Nil, Nil, Map.empty,
+        committedPartitionBy, snapshot.schemaDdl,
+        (idhwMeta ++ rowHwMeta).toMap + (key -> Serialization.write(payload)),
+        None, now())))
     // Write-audit-publish staging (X98): promote the files NOW (same
     // crash story as a normal write — until a commit references them
     // they are invisible orphans), but the commit that lands is an
@@ -5302,9 +5283,9 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           "cursors with the publishing pipeline, not the branch write")
       require(extraDv.isEmpty && removeExact.isEmpty && !dynamic,
         "branch writes support plain append and replaceWhere only")
-      // re-read the chain here (the fail-fast guard above validated the
-      // ref before staging); a concurrent evolve between then and the
-      // commit is caught by the OCC evolve-vs-staged conflict rule
+      // re-read the chain here (the fail-fast guard in write validated
+      // the ref before staging); a concurrent evolve between then and
+      // the commit is caught by the OCC evolve-vs-staged conflict rule
       val p = branchPayload(bname)
       val removed =
         if (action != "replace") Seq.empty[String]
@@ -5312,31 +5293,15 @@ final class IncrementalTable(spark: SparkSession, val root: String,
           requireUniformSpec(partitionFilter.keys, "replaceWhere on a branch")
           branchLive(p).filter(matchesPartition(_, partitionFilter))
         }
-      val added =
-        if (partitionBy.isEmpty && stagedRows == 0) Nil
-        else staged.map { rel =>
-          val from = new Path(stage, rel)
-          val to = new Path(rootPath, rel)
-          fs.mkdirs(to.getParent)
-          if (!fs.rename(from, to))
-            throw new java.io.IOException(s"rename failed: $from -> $to")
-          rel
-        }
-      IncrementalTable.gcStaging(fs, stage) // async: never read again
+      val added = promote(stage, live)
       // W6 elision on the branch: an empty append extends nothing
       if (added.isEmpty && removed.isEmpty) return None
       val chainMeta = allMeta.view.filterKeys(k =>
         !k.startsWith("idhw/") && !k.startsWith("rowhw/")).toMap
       val bc = BranchCommit(action, added, removed, partitionFilter,
-        stagedSchemaDdl, chainMeta,
-        fileStats.view.filterKeys(added.toSet).toMap)
-      val prevSchema = snapshot.schemaDdl
-      return Some(commit(Commit(0, "staged", Nil, Nil, Map.empty,
-        committedPartitionBy, prevSchema,
-        (idhwMeta ++ rowHwMeta).toMap +
-          (IncrementalTable.BranchPrefix + bname ->
-            Serialization.write(p.copy(commits = p.commits :+ bc))),
-        None, now())))
+        stagedSchemaDdl, chainMeta, fileStats)
+      return stagedRecord(IncrementalTable.BranchPrefix + bname,
+        p.copy(commits = p.commits :+ bc))
     }
     if (wapId.isDefined) {
       val id = wapId.get
@@ -5348,20 +5313,9 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         "WAP staging supports plain append and replaceWhere only")
       // W6 elision applies to staging too: an empty batch stages no
       // files (replace semantics still publish the scope's removal)
-      val added =
-        if (partitionBy.isEmpty && stagedRows == 0) Nil
-        else staged.map { rel =>
-          val from = new Path(stage, rel)
-          val to = new Path(rootPath, rel)
-          fs.mkdirs(to.getParent)
-          if (!fs.rename(from, to))
-            throw new java.io.IOException(s"rename failed: $from -> $to")
-          rel
-        }
-      IncrementalTable.gcStaging(fs, stage) // async: never read again
+      val added = promote(stage, live)
       val fresh = WapPayload(action, added, partitionFilter, partitionBy,
-        stagedSchemaDdl, allMeta,
-        fileStats.view.filterKeys(added.toSet).toMap)
+        stagedSchemaDdl, allMeta, fileStats)
       // stacking: a second staging under the same id MERGES — one
       // publish later adopts every batch atomically (the multi-batch
       // backfill shape). idhw/rowhw latest-wins (this write minted past
@@ -5387,21 +5341,9 @@ final class IncrementalTable(spark: SparkSession, val root: String,
             partitionBy, mergedDdl, mergedMeta,
             prev.fileStats ++ fresh.fileStats)
       }
-      val prevSchema = snapshot.schemaDdl
-      // the staging commit carries its identity/row-id high-water
-      // advances DIRECTLY (a reservation): every later mint reads the
-      // channel and lands above the staged files' baked values, so
-      // publish can never mint-collide — and the OCC idhw/rowhw
-      // conflict rule covers stage-vs-write races like any other
-      // commit. ndv/ stays deferred in the payload (statistics must
-      // not count unpublished rows).
-      return Some(commit(Commit(0, "staged", Nil, Nil, Map.empty,
-        committedPartitionBy, prevSchema,
-        (idhwMeta ++ rowHwMeta).toMap +
-          (IncrementalTable.WapPrefix + id -> Serialization.write(payload)),
-        None, now())))
+      return stagedRecord(IncrementalTable.WapPrefix + id, payload)
     }
-    if (staged.isEmpty || (partitionBy.isEmpty && stagedRows == 0)) {
+    if (live.isEmpty) {
       IncrementalTable.gcStaging(fs, stage) // async: never read again
       // A filter-scoped replace that recomputed to ZERO rows must still
       // delete the partition's old data — "refresh produced nothing" is
@@ -5416,7 +5358,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       // still evolves its schema: that commits schema-only, as Delta
       // commits the new metadata of an empty mergeSchema append
       val widens = committedSchemaAt().exists(prev =>
-        withParts.schema.fieldNames.exists(n => !prev.fieldNames.contains(n) &&
+        incoming.fieldNames.exists(n => !prev.fieldNames.contains(n) &&
           !ptransforms.contains(n) && n != IncrementalTable.RowIdCol))
       if (removed.nonEmpty)
         Some(commit(Commit(0, "replace", Nil, removed, partitionFilter,
@@ -5428,26 +5370,11 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       // partition dirs appear; metadata still commits if present
       else if (allMeta.nonEmpty) Some(commitMeta(allMeta, batchId, appId)) else None
     } else {
-      // 2. promote: rename staged files into the final hive layout.
-      //    A crash here leaves orphans that no commit references —
-      //    invisible to readers, reclaimed by vacuum().
       val tPromote0 = System.nanoTime()
-      val added = stagedFiles.map { case (rel, len, mtime) =>
-        val from = new Path(stage, rel)
-        val to = new Path(rootPath, rel)
-        fs.mkdirs(to.getParent)
-        if (!fs.rename(from, to))
-          throw new java.io.IOException(s"rename failed: $from -> $to")
-        // the staged walk already knows the promoted file's status
-        // (rename keeps size and mtime): reads of it never stat it
-        fileStatuses.put(rel, new FileStatus(len, false, 1,
-          fs.getDefaultBlockSize(to), mtime, fs.makeQualified(to)))
-        rel
-      }
-      IncrementalTable.gcStaging(fs, stage) // async: never read again
+      val added = promote(stage, live)
       val promoteMs = (System.nanoTime() - tPromote0) / 1000000
-      // 3. removal set for replace: filter-scoped, or (dynamic) exactly
-      //    the partition dirs the staged files landed in
+      // removal set for replace: filter-scoped, or (dynamic) exactly
+      // the partition dirs the staged files landed in
       val removed =
         if (action != "replace") Seq.empty
         else removeExact.getOrElse(
@@ -5475,6 +5402,29 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         totalMs = (tEnd - tWrite0) / 1000000, files = added.size))
       Some(c)
     }
+  }
+
+  /** Promote: rename each staged (stage-relative path, length, mtime)
+    * file from `stage` into the table's hive layout, then hand the
+    * stage dir (and whatever was not promoted from it) to the async
+    * staging GC; returns the table-relative paths. A crash part-way
+    * leaves orphans no commit references — invisible to readers,
+    * reclaimed by vacuum(). The staged walk already knows each promoted
+    * file's status (rename keeps size and mtime), so reads of it never
+    * stat it. */
+  private def promote(stage: Path, files: Seq[(String, Long, Long)]): Seq[String] = {
+    val added = files.map { case (rel, len, mtime) =>
+      val from = new Path(stage, rel)
+      val to = new Path(rootPath, rel)
+      fs.mkdirs(to.getParent)
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"rename failed: $from -> $to")
+      fileStatuses.put(rel, new FileStatus(len, false, 1,
+        fs.getDefaultBlockSize(to), mtime, fs.makeQualified(to)))
+      rel
+    }
+    IncrementalTable.gcStaging(fs, stage) // async: never read again
+    added
   }
 
   /** The stage phase for rows already on the driver: a frame whose
@@ -5542,13 +5492,17 @@ final class IncrementalTable(spark: SparkSession, val root: String,
   }
 
   /** Phase breakdown of this handle's last data-commit write (the
-    * commit-latency audit, VERDICT r12 #3): `stage` = the Spark
-    * parquet job into the staging dir, `harvest` = the footer
+    * commit-latency audit, VERDICT r12 #3), set by every commit that
+    * promotes files — batch writes and streaming-sink epochs alike
+    * ([[commitStaged]]): `stage` = writing the staging dir (on the
+    * driver or as a Spark job; 0 for a streaming epoch, whose executors
+    * staged inside the query's own job), `harvest` = the footer
     * stats/rows pass, `promote` = renames into the hive layout,
     * `publish` = the OCC read-check-publish (commit-record fsync, meta
     * fold, checkpoint maintenance when the cadence hits). Anything
     * outside the four named phases (routing, schema merge, sidecar
-    * writes) shows as total minus their sum. */
+    * writes, a streaming epoch's CHECK validation) shows as total minus
+    * their sum. */
   @volatile var lastWriteTiming: Option[WriteTiming] = None
 
   /** Add-column schema evolution: the committed schema is the previous
@@ -5595,14 +5549,15 @@ final class IncrementalTable(spark: SparkSession, val root: String,
             fresh.map(_.copy(nullable = true)))
     }
 
-  /** Row count and per-FILE per-column integer [min,max] statistics of
-    * the staged parquet files, read from footers driver-side — not a
-    * Spark job. A requested column absent from the staged schema yields
-    * no entry (for stat-meta, the caller's floor applies; for skipping,
-    * the file is never pruned); present with missing statistics fails
-    * loudly rather than silently stalling a watermark or over-pruning. */
-  /** Staged-commit stats harvest, two execution shapes with ONE shared
-    * per-file body ([[IncrementalTable.footerStatsOf]]):
+  /** Per-FILE row counts and per-column integer [min,max] statistics
+    * of the staged parquet files, read from footers. A requested column
+    * absent from the staged schema yields no entry (for stat-meta, the
+    * caller's floor applies; for skipping, the file is never pruned);
+    * present with missing statistics fails loudly rather than silently
+    * stalling a watermark or over-pruning. No footer is opened (and no
+    * row count returned) when no column is asked for and `needRows` is
+    * false. Two execution shapes share ONE per-file body
+    * ([[IncrementalTable.footerStatsOf]]):
     *
     *  - at or below [[distributedStatsThreshold]] staged files, the
     *    footers are opened inline on the driver — micro-batch appends,
@@ -5619,35 +5574,31 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * Both paths produce identical index contents (spec-pinned in
     * IncrementalTableSpec's distributed-harvest twin). */
   private def stagedFooterStats(stage: Path, rels: Seq[String],
-      cols: Set[String], needRows: Boolean): (Long, Map[String, Map[String, ColStat]]) = {
-    if (rels.isEmpty || (cols.isEmpty && !needRows)) return (0L, Map.empty)
+      cols: Set[String], needRows: Boolean)
+      : (Map[String, Long], Map[String, Map[String, ColStat]]) = {
+    if (rels.isEmpty || (cols.isEmpty && !needRows)) return (Map.empty, Map.empty)
     val threshold = spark.conf.getOption("spark.graft.distributedStatsThreshold")
       .map(_.toInt).getOrElse(IncrementalTable.DefaultDistributedStatsThreshold)
-    if (rels.size <= threshold) {
-      var rows = 0L
-      val perFile = Map.newBuilder[String, Map[String, ColStat]]
-      rels.foreach { rel =>
-        val (fileRows, st) = IncrementalTable.footerStatsOf(
-          new Path(stage, rel), hadoopConf(spark), cols)
-        rows += fileRows
-        if (st.nonEmpty) perFile += rel -> st
+    val harvested =
+      if (rels.size <= threshold) {
+        val conf = hadoopConf(spark)
+        rels.map { rel =>
+          val (fileRows, st) = IncrementalTable.footerStatsOf(new Path(stage, rel), conf, cols)
+          (rel, fileRows, st)
+        }
+      } else {
+        val sconf = new graft.parquet.RowParquet.SerializableConf(hadoopConf(spark))
+        val stageStr = stage.toString
+        val slices = math.min(rels.size,
+          spark.sparkContext.defaultParallelism * 2).max(1)
+        spark.sparkContext.parallelize(rels, slices).map { rel =>
+          val (fileRows, st) = IncrementalTable.footerStatsOf(
+            new Path(stageStr, rel), sconf.value, cols)
+          (rel, fileRows, st)
+        }.collect().toSeq
       }
-      (rows, perFile.result())
-    } else {
-      val sconf = new graft.parquet.RowParquet.SerializableConf(hadoopConf(spark))
-      val stageStr = stage.toString
-      val slices = math.min(rels.size,
-        spark.sparkContext.defaultParallelism * 2).max(1)
-      val harvested = spark.sparkContext.parallelize(rels, slices).map { rel =>
-        val (fileRows, st) = IncrementalTable.footerStatsOf(
-          new Path(stageStr, rel), sconf.value, cols)
-        (rel, fileRows, st)
-      }.collect()
-      (harvested.iterator.map(_._2).sum,
-        harvested.iterator.collect {
-          case (rel, _, st) if st.nonEmpty => rel -> st
-        }.toMap)
-    }
+    (harvested.map { case (rel, rows, _) => rel -> rows }.toMap,
+      harvested.collect { case (rel, _, st) if st.nonEmpty => rel -> st }.toMap)
   }
 
 

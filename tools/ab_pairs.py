@@ -20,7 +20,12 @@ Before the pairs, each side runs once untimed (seed 0) so that the sbt build
 and a cold page cache land outside the measured runs (`--no-warmup` skips
 it).
 
-For every metric of the runs' last lines it prints each side's median and
+With `--trace 1` each run's metrics are the per-layer map of its last line
+plus the end-to-end figures of the result file it writes
+(`.bench_build/results/<workload>-seed<N>-trace1.json`), so a traced A/B
+also reads as the untraced one's no-regression check.
+
+For every metric of the runs it prints each side's median and
 quartiles (statistics.quantiles, n=4), the change's win fraction over the
 pairs (the direction comes from BENCHMARK.json), the ratio of the medians
 with both bases, and whether the difference of the medians exceeds the
@@ -84,6 +89,16 @@ def run(side, checkout, workload, seed, seconds, trace):
         res = json.loads(lines[-1]) if proc.returncode == 0 and lines else {}
     except json.JSONDecodeError:
         res = {}
+    if trace and res:
+        # a traced run's last line carries the per-layer map only; its
+        # end-to-end figures are in the result file it wrote
+        path = os.path.join(checkout, ".bench_build", "results",
+                            f"{workload}-seed{seed}-trace1.json")
+        with open(path) as f:
+            e2e = json.load(f)["end_to_end"]
+        res.setdefault("metrics", {}).update(
+            {k: {"value": m["value"], "unit": m["unit"]} for k, m in e2e.items()
+             if m["value"] is not None})
     return {"side": side, "seed": seed, "exit": proc.returncode,
             "wall_s": round(time.time() - t0, 1), **res}
 
@@ -149,6 +164,7 @@ def main():
         spec = json.load(f)
     seconds = args.seconds or spec["run_seconds"]
     better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
+    end_to_end = {m["name"] for m in spec["end_to_end"]}
 
     work = args.dir or tempfile.mkdtemp(prefix="ab_pairs-")
     os.makedirs(work, exist_ok=True)
@@ -177,7 +193,7 @@ def main():
             runs.append(r)
             # traced runs carry ~45 metrics: those show in the summary only
             shown = {k: round(v["value"], 4) for k, v in r.get("metrics", {}).items()
-                     } if args.trace == 0 else ""
+                     if args.trace == 0 or k in end_to_end}
             print(f"pair {i + 1} seed {seed} {side:6s}: exit {r['exit']} wall {r['wall_s']}s "
                   f"correct {r.get('correct')} failed {r.get('failed')} {shown}", flush=True)
 
