@@ -37,23 +37,23 @@ object CommitLatency {
         Nil, statsColumns = Seq("k", "day"))
       t.lastWriteTiming
     }
-    def medianL(xs: Seq[Long]): Long = {
+    def median[T: Ordering](xs: Seq[T]): T = {
       val s = xs.sorted; s(s.size / 2)
     }
     println(f"[commitlat] appends=${timings.size} files/commit=${
-      medianL(timings.map(_.files.toLong))}")
-    println(f"[commitlat] stage_ms=${medianL(timings.map(_.stageMs))} " +
-      f"harvest_ms=${medianL(timings.map(_.harvestMs))} " +
-      f"promote_ms=${medianL(timings.map(_.promoteMs))} " +
-      f"publish_ms=${medianL(timings.map(_.publishMs))} " +
-      f"total_ms=${medianL(timings.map(_.totalMs))}")
+      median(timings.map(_.files))}")
+    println(f"[commitlat] stage_ms=${median(timings.map(_.stageMs))}%.2f " +
+      f"harvest_ms=${median(timings.map(_.harvestMs))}%.2f " +
+      f"promote_ms=${median(timings.map(_.promoteMs))}%.2f " +
+      f"publish_ms=${median(timings.map(_.publishMs))}%.2f " +
+      f"total_ms=${median(timings.map(_.totalMs))}%.2f")
     // the pure OCC floor: metadata-only commits (no stage, no files)
     val metaMs = (0 until 9).map { i =>
       val t0 = System.nanoTime()
       t.commitMeta(Map(s"probe/run" -> i.toString))
-      (System.nanoTime() - t0) / 1000000
+      (System.nanoTime() - t0) / 1e6
     }
-    println(s"[commitlat] meta_commit_ms=${medianL(metaMs)} " +
+    println(f"[commitlat] meta_commit_ms=${median(metaMs)}%.2f " +
       s"(pure OCC read-check-publish floor, ${metaMs.size} samples)")
     spark.stop()
   }

@@ -55,11 +55,6 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
   // reference partitions.py:5-7: start_date=2024-03-20, end_offset=1
   private val partsDef = PartitionsDef(grain, LocalDate.parse("2024-03-20"))
 
-  /** Listing files a day may hold before [[runListing]] compacts it:
-    * half the driver-side read's bound, so the day's decode stays short
-    * and compaction runs once per that many ingesting ticks. */
-  val listingMaxFiles = IncrementalTable.LocalReadMaxFiles / 2
-
   // a LocalRelation: collecting it (or a filter over it) runs no job
   private def emptyFrame(ddl: String): DataFrame =
     spark.createDataFrame(
@@ -162,14 +157,13 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
     * the table, so append == prev ++ new).
     *
     * Each append adds one file to the day, and the reference's steady
-    * state lands every tick in today's partition. So once the day holds
-    * more than [[listingMaxFiles]] files, the append is followed by a
-    * compaction of the day into one file: the sensor's seen-diff and the
-    * `processed` slice keep reading the day on the driver
-    * ([[IncrementalTable.readLocal]]) however many ticks it has taken.
-    * The compaction is a maintenance commit (same rows, same `seq`, the
-    * watermark meta untouched) and costs one extra write every
-    * [[listingMaxFiles]] ingesting ticks of a day.
+    * state lands every tick in today's partition. So the append is
+    * followed by the planner's own compaction rule
+    * ([[AssetGraph.keepReadLocal]]), which folds the day into one file
+    * once it holds more than [[AssetGraph.ScopeMaxFiles]]: the sensor's
+    * seen-diff and the `processed` slice keep reading the day on the
+    * driver ([[IncrementalTable.readLocal]]) however many ticks it has
+    * taken.
     *
     * Both writes run no Spark job: the append's rows are a local frame
     * and the compaction reads the small day on the driver, so each
@@ -196,7 +190,7 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
           partitionValues = Map("day" -> req.day),
           meta = Map(s"watermark/${req.day}" -> highWater.toString))
     }
-    listing.compactIfNeeded(listingMaxFiles, filters = Map("day" -> req.day))
+    graph.keepReadLocal("listing", req.day)
   }
 
   /** Current listing for a day (typed-empty when missing) — the
@@ -211,7 +205,11 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
   /** `processed` asset for one day, via the planner (SURVEY.md §3.2):
     * watermark lookup (P1) → suffix slice (P2) → per-file read (P3) →
     * length projection (P4/P5) → partitioned write with atomic watermark
-    * commit (P6/W3-W6). */
+    * commit (P6/W3-W6). A steady-state tick's slice, files and rows all
+    * stay on the driver, and the day compacts past
+    * [[AssetGraph.ScopeMaxFiles]] files ([[AssetGraph.keepReadLocal]]),
+    * so it runs no Spark job and `backwards` keeps reading the day on
+    * the driver. */
   def runProcessed(day: String, refresh: Boolean = false): Unit =
     graph.materialize("processed", day, refresh)
 
@@ -321,7 +319,9 @@ final class Pipeline(spark: SparkSession, ingestRoot: String, tablesRoot: String
 
   /** `backwards` asset via the planner: full-partition derived transform,
     * word reversed (B1, assets/backwards.py:15); always
-    * partition-replace. */
+    * partition-replace. The planner reads a small `processed` day on the
+    * driver, so the reversal folds into local rows and the replace
+    * stages on the driver: no Spark job. */
   def runBackwards(day: String): Unit =
     graph.materialize("backwards", day)
 

@@ -155,12 +155,20 @@ final class AssetGraph(spark: SparkSession, tablesRoot: String,
     *  - refresh OR PartitionReplace → full recompute + replaceWhere,
     *    scoped to this time partition (W5).
     *
-    * Spark jobs: the planning is metadata, and a write stages on the
-    * driver when its rows are already there (a small local frame,
-    * [[IncrementalTable]]'s driver-side stage). So a steady-state
-    * `processed` materialization (driver-side listing slice, files read
-    * on the driver) runs no job, and `backwards` (a Spark read of
-    * `processed`) runs one, its write.
+    * Spark jobs: the planning is metadata, a small dependency partition
+    * is read on the driver ([[IncrementalTable.readLocal]]), and a write
+    * stages on the driver when its rows are already there (a small local
+    * frame, [[IncrementalTable]]'s driver-side stage). An
+    * IncrementalAppend then keeps its partition within that read
+    * ([[keepReadLocal]]). So a steady-state `processed` materialization
+    * (driver-side listing slice, files read on the driver) and
+    * `backwards` (the day's `processed` read on the driver, reversed,
+    * replaced) run no job.
+    *
+    * A compute must therefore not rely on `input_file_name()` or
+    * `_metadata` over a dependency: a driver-read one has no file
+    * behind its rows. The asset's own self-union input stays a lazy
+    * [[IncrementalTable.read]].
     */
   def materialize(name: String, key: String, refresh: Boolean = false,
       today: LocalDate = LocalDate.now(ZoneOffset.UTC)): Unit = {
@@ -170,17 +178,15 @@ final class AssetGraph(spark: SparkSession, tablesRoot: String,
       case Right(_) => ()
     }
     val (partitionBy, timeValues) = asset.spec.resolve(asset.partitions.grain, key)
-    // deps pruned to this key (W7) + the self-union input (L2). The
-    // incrementalDep's watermark slice is always consumed, so a small
-    // one is read on the driver up front (no Spark job to collect it);
-    // every other input stays a lazy Spark read
+    // deps pruned to this key (W7) + the self-union input (L2). A
+    // dependency is always consumed, so a small one is read on the
+    // driver up front (no Spark job to collect or rewrite it); the
+    // self-union input stays a lazy Spark read
     val inputs: Map[String, DataFrame] = asset.deps.map { d =>
       val dep = byName(d)
       val (_, depValues) = dep.spec.resolve(dep.partitions.grain, key)
       val t = tableFor(d)
-      d -> (if (asset.incrementalDep.contains(d))
-        t.readLocal(depValues).getOrElse(t.read(depValues))
-      else t.read(depValues))
+      d -> t.readLocal(depValues).getOrElse(t.read(depValues))
     }.toMap + (asset.name -> tableFor(asset.name).read(timeValues))
     val table = tableFor(name)
 
@@ -231,8 +237,28 @@ final class AssetGraph(spark: SparkSession, tablesRoot: String,
               table.append(out, partitionBy, timeValues,
                 statMeta = Seq(StatMeta(wmKey, "seq", floor = stored)))
         }
+        keepReadLocal(name, key)
     }
     ()
+  }
+
+  /** Keep `name`'s partition for `key` within the driver-side read
+    * ([[IncrementalTable.readLocal]]): an append adds a file per
+    * partition dir it touches, so once the partition holds more than
+    * [[AssetGraph.ScopeMaxFiles]] files, and at least twice as many as
+    * it has dirs, it is compacted to one file per dir. The compaction is
+    * a maintenance commit (same rows, the watermark meta untouched) that
+    * reads the small partition on the driver and stages there, so it
+    * runs no Spark job either; the dir guard keeps a partition with many
+    * dirs from compacting on every append. */
+  def keepReadLocal(name: String, key: String): Unit = {
+    val asset = byName(name)
+    val (_, scope) = asset.spec.resolve(asset.partitions.grain, key)
+    val t = tableFor(name)
+    val files = t.liveFiles(scope)
+    if (files.size > AssetGraph.ScopeMaxFiles &&
+        files.size >= 2 * files.map(f => f.take(f.lastIndexOf('/') + 1)).distinct.size)
+      t.compact(scope)
   }
 
   /** Watermark high-water: one past the max `seq` if present, else 0 —
@@ -280,4 +306,11 @@ final class AssetGraph(spark: SparkSession, tablesRoot: String,
     keys.foreach(materializeAll(name, _, refresh, today))
     keys
   }
+}
+
+object AssetGraph {
+  /** Files a partition may hold before [[AssetGraph.keepReadLocal]]
+    * compacts it: half the driver-side read's bound, so its decode stays
+    * short and compaction runs once per that many appends. */
+  val ScopeMaxFiles: Int = IncrementalTable.LocalReadMaxFiles / 2
 }

@@ -129,10 +129,11 @@ final case class ManifestRef(name: String, lo: String, hi: String, n: Long)
   * minted). */
 final case class IdentitySpec(start: Long, step: Long, allowExplicit: Boolean)
 
-/** One write's phase wall times (ms) — see
+/** One write's phase wall times in milliseconds, fractional so that a
+  * sub-millisecond phase does not read 0 — see
   * [[IncrementalTable.lastWriteTiming]]. */
-final case class WriteTiming(stageMs: Long, harvestMs: Long,
-    promoteMs: Long, publishMs: Long, totalMs: Long, files: Int)
+final case class WriteTiming(stageMs: Double, harvestMs: Double,
+    promoteMs: Double, publishMs: Double, totalMs: Double, files: Int)
 
 final case class ColStat(min: Long, max: Long,
     minS: Option[String] = None, maxS: Option[String] = None,
@@ -4852,7 +4853,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     require(stagedFiles.size == reported.size,
       s"streaming batch $batchId: reported files missing from $stage: " +
         (reported -- stagedFiles.map(_._1)).mkString(", "))
-    val out = commitStaged(stage, stagedFiles, incoming, stageMs = 0L, tWrite0,
+    val out = commitStaged(stage, stagedFiles, incoming, stageMs = 0.0, tWrite0,
       if (replace) "replace" else "append", partitionBy, Map.empty, Map.empty,
       Some(batchId), Some(appId), statsColumns = statsColumns,
       eqDeleteKeys = upsertKeys)
@@ -5063,7 +5064,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
         (if (physPartitionBy.nonEmpty) writer.partitionBy(physPartitionBy: _*)
          else writer).parquet(stage.toString)
       }
-    val stageMs = (System.nanoTime() - tStage0) / 1000000
+    val stageMs = (System.nanoTime() - tStage0) / 1e6
     val stagedFiles = listParquet(fs, stage).map { case (p, len, mtime) =>
       (relativize(stage, p), len, mtime)
     }
@@ -5085,7 +5086,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     * [[lastWriteTiming]]. A zero-row file (the footer-only file Spark
     * writes for an empty task) never leaves the stage. */
   private def commitStaged(stage: Path, stagedFiles: Seq[(String, Long, Long)],
-      incoming: StructType, stageMs: Long, tWrite0: Long, action: String,
+      incoming: StructType, stageMs: Double, tWrite0: Long, action: String,
       partitionBy: Seq[String], partitionFilter: Map[String, String],
       meta: Map[String, String], batchId: Option[Long], appId: Option[String],
       dynamic: Boolean = false, statMeta: Seq[StatMeta] = Nil,
@@ -5132,7 +5133,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     val (fileRows, perFile) = stagedFooterStats(stage, staged,
       physStatMetaCols.toSet ++ physStatsColumns ++ physIdCols,
       needRows = partitionBy.isEmpty)
-    val harvestMs = (System.nanoTime() - tHarvest0) / 1000000
+    val harvestMs = (System.nanoTime() - tHarvest0) / 1e6
     // the files with rows: everything downstream sees only these
     val live = stagedFiles.filterNot(f => fileRows.get(f._1).contains(0L))
     val liveRels = live.map(_._1)
@@ -5372,7 +5373,7 @@ final class IncrementalTable(spark: SparkSession, val root: String,
     } else {
       val tPromote0 = System.nanoTime()
       val added = promote(stage, live)
-      val promoteMs = (System.nanoTime() - tPromote0) / 1000000
+      val promoteMs = (System.nanoTime() - tPromote0) / 1e6
       // removal set for replace: filter-scoped, or (dynamic) exactly
       // the partition dirs the staged files landed in
       val removed =
@@ -5398,8 +5399,8 @@ final class IncrementalTable(spark: SparkSession, val root: String,
       val tEnd = System.nanoTime()
       lastWriteTiming = Some(WriteTiming(
         stageMs = stageMs, harvestMs = harvestMs, promoteMs = promoteMs,
-        publishMs = (tEnd - tPublish0) / 1000000,
-        totalMs = (tEnd - tWrite0) / 1000000, files = added.size))
+        publishMs = (tEnd - tPublish0) / 1e6,
+        totalMs = (tEnd - tWrite0) / 1e6, files = added.size))
       Some(c)
     }
   }
@@ -6685,8 +6686,8 @@ object IncrementalTable {
     * files, or of more bytes, stays a Spark read. Decoding on the driver
     * took about a millisecond and a half per small listing file on 4
     * vCPU, against a Spark job's tens of milliseconds; a day's listing
-    * stays within the file bound because its append compacts it
-    * ([[graft.app.Pipeline.runListing]]). */
+    * and `processed` stay within the file bound because the planner
+    * compacts them after an append ([[graft.graph.AssetGraph.keepReadLocal]]). */
   val LocalReadMaxFiles = 32
   val LocalReadMaxBytes: Long = 4L << 20
 

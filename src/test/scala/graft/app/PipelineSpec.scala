@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import graft.table.IncrementalTable
 
 /** End-to-end pipeline parity on a copy of the vendored fixture corpus
   * (test resource `files_to_ingest/`: 51 files day=2024-03-26, 2 files
@@ -107,7 +108,7 @@ class PipelineSpec extends SparkSpec {
     assert(pipe.backwards.read().count() == 15)
   }
 
-  test("a steady-state tick through backwards runs one Spark job") {
+  test("a steady-state tick through backwards runs no Spark job") {
     val root = Paths.get(tmpDir("pipe"))
     val ingest = root.resolve("files_to_ingest")
     copyFixture(ingest, days = Set("2024-03-26"), limitPerDay = 10)
@@ -123,13 +124,123 @@ class PipelineSpec extends SparkSpec {
     val (_, backwardsJobs) = jobsDuring(pipe.runBackwards(day))
     assert(found == Seq(day))
     // the listing append and the `processed` append stage their local
-    // rows on the driver; only `backwards` (a Spark read of `processed`)
-    // runs a job, its write
-    assert((tickJobs, processedJobs, backwardsJobs) == (0, 0, 1),
+    // rows on the driver, and `backwards` reads the small `processed`
+    // day on the driver and stages its reversal there too
+    assert((tickJobs, processedJobs, backwardsJobs) == (0, 0, 0),
       "Spark jobs under tickAndIngest, runProcessed, runBackwards")
     assert(pipe.processed.read().count() == 15)
     assert(pipe.processed.read().select($"filename").distinct().count() == 15)
     assert(pipe.backwards.read().count() == 15)
+  }
+
+  test("forty one-file ticks on one day keep the tick at no Spark job") {
+    val root = Paths.get(tmpDir("pipe"))
+    val ingest = root.resolve("files_to_ingest")
+    val pipe = new Pipeline(spark, ingest.toString, root.resolve("tables").toString)
+    val day = "2024-03-26"
+    val today = java.time.LocalDate.parse(day)
+    val dayScope = Map("year" -> "2024", "month" -> "03", "day" -> "26")
+    val first = 5
+    val ticks = 40
+    copyFixture(ingest, days = Set(day), limitPerDay = first)
+    assert(pipe.tickAndIngest(today) == Seq(day))
+    pipe.runAll(day)
+
+    // the reference's steady state: every tick lands in today's
+    // partition, so `processed` gains a file per tick and compacts past
+    // the planner's bound, staying within the driver-side read
+    var files = pipe.processed.liveFiles(dayScope).size
+    var compactions = 0
+    (1 to ticks).foreach { i =>
+      copyFixture(ingest, days = Set(day), limitPerDay = first + i)
+      val (found, tickJobs) = jobsDuring(pipe.tickAndIngest(today))
+      assert(found == Seq(day))
+      val (_, processedJobs) = jobsDuring(pipe.runProcessed(day))
+      val (_, backwardsJobs) = jobsDuring(pipe.runBackwards(day))
+      assert((tickJobs, processedJobs, backwardsJobs) == (0, 0, 0),
+        s"Spark jobs under tickAndIngest, runProcessed, runBackwards on tick $i")
+      val n = pipe.processed.liveFiles(dayScope).size
+      assert(n <= IncrementalTable.LocalReadMaxFiles, s"tick $i left $n processed files")
+      if (n < files) compactions += 1
+      files = n
+    }
+    assert(compactions >= 1)
+
+    val expected = expectedWords(ingest, day)
+    assert(expected.size == first + ticks)
+    val got = pipe.backwards.read().select($"filename", $"word").as[(String, String)].collect()
+    assert(got.map(_._1).sorted.toSeq == expected.keys.toSeq.sorted) // no dup, no loss
+    got.foreach { case (f, w) => assert(w == expected(f).reverse, s"word of $f") }
+    Seq(pipe.listing, pipe.processed).foreach(t =>
+      assert(t.latestMeta(s"watermark/$day").contains((first + ticks).toString)))
+  }
+
+  test("backwards over a driver-read processed day equals the Spark-read fallback") {
+    val root = Paths.get(tmpDir("pipe"))
+    val ingest = root.resolve("files_to_ingest")
+    copyFixture(ingest, days = Set("2024-03-26"))
+    val day = "2024-03-26"
+    val dayScope = Map("year" -> "2024", "month" -> "03", "day" -> "26")
+    val driver = new Pipeline(spark, ingest.toString, root.resolve("driver").toString)
+    driver.tickAndIngest(scanAllDays = true)
+    driver.runProcessed(day)
+    assert(driver.processed.readLocal(dayScope).isDefined)
+    val (_, driverJobs) = jobsDuring(driver.runBackwards(day))
+    assert(driverJobs == 0)
+
+    // the same `processed` rows, one file per row: more files than the
+    // driver-side read takes, so `backwards` reads them through Spark
+    val viaSpark = new Pipeline(spark, ingest.toString, root.resolve("spark").toString)
+    val words = driver.processed.read(dayScope).select($"filename", $"word", $"word_length")
+    val rows = words.collect()
+    assert(rows.length > IncrementalTable.LocalReadMaxFiles)
+    rows.foreach(r => viaSpark.processed.append(
+      spark.createDataFrame(java.util.List.of(r), words.schema),
+      Seq("year", "month", "day", "word_length"), dayScope))
+    assert(viaSpark.processed.schemaAt() == driver.processed.schemaAt())
+    assert(viaSpark.processed.readLocal(dayScope).isEmpty)
+    val (_, sparkJobs) = jobsDuring(viaSpark.runBackwards(day))
+    assert(sparkJobs > 0)
+
+    def rowsOf(t: IncrementalTable): Seq[String] =
+      t.read().collect().map(_.toString).toSeq.sorted
+    assert(rowsOf(driver.backwards) == rowsOf(viaSpark.backwards))
+    assert(driver.backwards.schemaAt().isDefined)
+    assert(driver.backwards.schemaAt() == viaSpark.backwards.schemaAt())
+    // each dir's parquet footer stats per column, merged over its files
+    def dirStats(t: IncrementalTable): Map[String, Map[String, (Long, Long, String, String)]] = {
+      import org.apache.parquet.column.statistics.Statistics
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      val conf = spark.sessionState.newHadoopConf()
+      t.liveFiles().groupBy(f => f.take(f.lastIndexOf('/'))).map { case (dir, files) =>
+        val chunks = files.flatMap { f =>
+          val in = ParquetFileReader.open(HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(t.root, f), conf))
+          try in.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toSeq
+          finally in.close()
+        }
+        dir -> chunks.groupBy(_.getPath.toDotString).map { case (col, cs) =>
+          val st = Statistics.createStats(cs.head.getPrimitiveType)
+          cs.foreach(c => st.mergeStatistics(c.getStatistics))
+          col -> ((cs.map(_.getValueCount).sum, st.getNumNulls, st.minAsString, st.maxAsString))
+        }
+      }
+    }
+    assert(dirStats(driver.backwards).values.map(_.keySet).toSet ==
+      Set(Set("filename", "word", "word_length")))
+    assert(dirStats(driver.backwards) == dirStats(viaSpark.backwards))
+
+    // a compaction of the day (the planner's bound keeps `processed`
+    // within the driver-side read this way) runs no job and changes
+    // neither the watermark nor the rows
+    val wm = driver.processed.latestMeta(s"watermark/$day")
+    val before = rowsOf(driver.processed)
+    val (_, compactJobs) = jobsDuring(driver.processed.compact(dayScope))
+    assert(compactJobs == 0)
+    assert(wm.contains(rows.length.toString))
+    assert(driver.processed.latestMeta(s"watermark/$day") == wm)
+    assert(rowsOf(driver.processed) == before)
   }
 
   test("runForever: the sensor daemon loop ingests late arrivals across ticks") {

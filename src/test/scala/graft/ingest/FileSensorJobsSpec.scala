@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.app.Pipeline
+import graft.graph.AssetGraph
 import graft.table.IncrementalTable
 
 /** The sensor's steady state answers from committed metadata: the next
@@ -77,7 +78,7 @@ class FileSensorJobsSpec extends SparkSpec {
         pipe.runListing(RunRequest(day, batch.map { case (f, i) => (i.toLong, f) })))
       val n = pipe.listing.liveFiles(Map("day" -> day)).size
       assert(n == files + 1 || n == 1, s"an append took the day from $files to $n listing files")
-      assert(n <= pipe.listingMaxFiles, s"the day holds $n listing files")
+      assert(n <= AssetGraph.ScopeMaxFiles, s"the day holds $n listing files")
       assert(jobs == 0, s"an append taking the day from $files to $n files ran $jobs Spark jobs")
       if (n < files) compactions += 1
       files = n
